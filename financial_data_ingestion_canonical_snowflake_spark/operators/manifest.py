@@ -381,8 +381,16 @@ class ManifestTable(ParquetTable):
     def commit_replace_partitions(self, staged: dict) -> list[str]:
         """COMMIT half: one manifest PUT re-pointing the touched leaves at
         the staged generation (driver-side only — no Spark job, no rename
-        of any data path)."""
+        of any data path). Raises when the staged generation is gone —
+        another commit's GC deleted it while it was still unreferenced —
+        instead of publishing a manifest that re-points nothing."""
         gen, gen_dir = staged["gen"], staged["gen_dir"]
+        if not os.path.isdir(gen_dir):
+            raise FileNotFoundError(
+                f"{self.path}: staged generation {gen} no longer exists; "
+                "another commit landed on the table between stage and "
+                "commit (see merge.StagedScopedMerge)"
+            )
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
         seq = m["seq"] + 1
         touched = [r for r in self._written_parts(gen_dir) if r]

@@ -57,9 +57,9 @@ class LedgerSpec:
     bucket directory atomically, a bucket's data and its ledger move
     together — a crash mid-swap leaves every bucket either fully applied
     (ledger advanced) or fully unapplied (ledger stale), and the replay
-    re-folds ONLY the unapplied buckets. This upgrades the whole-table
-    sinks' documented at-least-once edge (a crash between table swap and
-    checkpoint commit re-adds one batch) to exactly-once per bucket.
+    re-folds ONLY the unapplied buckets: the fold is exactly-once per
+    bucket, even across a crash between the swap and the checkpoint
+    commit.
 
     Readers must exclude sentinel rows (the sinks' accessor methods do).
     """
@@ -76,13 +76,20 @@ class StagedScopedMerge:
     """A scoped merge whose Spark WRITE job has run but whose commit has
     not (``merge_upsert_scoped(..., stage_only=True)``). Lets a sink that
     maintains several tables per trigger run the expensive staging writes
-    concurrently (guide §2.6) and then apply the COMMITS in the exact
-    order its crash contract requires (e.g. the CDC sink's chunks-before-
-    freq fold order). ``commit()`` is driver-side only (meta write +
-    directory swaps / manifest PUT); ``abort()`` discards the staged
-    files. A staged merge that is never committed leaves only invisible
-    tmp/generation garbage for ``vacuum`` — the same story as a crash
-    mid-write before this API existed."""
+    concurrently and then apply the COMMITS in the exact order its crash
+    contract requires (:func:`stage_then_commit`). ``commit()`` is
+    driver-side only (meta write + directory swaps / manifest PUT);
+    ``abort()`` discards the staged files. A staged merge that is never
+    committed leaves only invisible tmp/generation garbage for ``vacuum``
+    — the same story as a crash mid-write.
+
+    No other commit may land on the table between stage and commit: the
+    staged merge was planned against the table as it stood at stage time,
+    and on a :class:`~.manifest.ManifestTable` another commit's garbage
+    collection deletes the still-unreferenced staged generation (the
+    commit then raises instead of publishing). Sinks satisfy this by
+    construction — foreachBatch serializes the triggers of one sink, and
+    each state table belongs to one sink."""
 
     table: object
     staged: dict
@@ -102,6 +109,50 @@ def part_expr(key: str, n_buckets: int) -> F.Column:
     itself, so a key always lands in the same hive partition; NULL keys hash
     to the seed (one fixed bucket)."""
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+
+def require_bucketed(table, owner: str) -> None:
+    """The one state-table layout the streaming sinks accept: a
+    hash-bucketed table, ``partition_by=[PART_COL]``.
+
+    Every sink folds a micro-batch with :func:`merge_upsert_scoped`, which
+    reads and rewrites only the buckets the batch's keys land in — per-
+    trigger I/O proportional to the batch, like the reference's MERGE
+    (sql/05_merge_canonical.sql:6-53). Additive folds also keep a per-
+    bucket replay ledger inside those buckets (:class:`LedgerSpec`), which
+    makes a replayed micro-batch exactly-once. An unpartitioned table has
+    neither property, so it is refused here, at sink construction."""
+    if table.partition_by != [PART_COL]:
+        raise ValueError(
+            f"{owner}: state table {table.path} must be hash-bucketed "
+            f"(partition_by=[{PART_COL!r}]), got partition_by="
+            f"{table.partition_by}"
+        )
+
+
+def stage_then_commit(*stagers: Callable[[], StagedScopedMerge]) -> None:
+    """The multi-table fold protocol: run every stager (a zero-argument
+    call of ``merge_upsert_scoped(..., stage_only=True)``) concurrently —
+    their Spark write jobs overlap — then commit the staged merges in the
+    GIVEN order, which is the order a sink's crash contract is stated in.
+    If any stage fails, every stage that succeeded is aborted and the
+    first failure (in the given order) is raised: nothing commits."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(stagers)) as ex:
+        futures = [ex.submit(stage) for stage in stagers]
+    staged, errors = [], []
+    for fut in futures:
+        try:
+            staged.append(fut.result())
+        except Exception as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+    if errors:
+        for st in staged:
+            st.abort()
+        raise errors[0]
+    for st in staged:
+        st.commit()
 
 
 def _flagged_outer_join(
@@ -407,10 +458,11 @@ def merge_upsert_scoped(
     either overwritten by a matched source row or provably absent from
     the source only when it must not survive. Under that contract the
     full-outer MERGE is equivalent to: drop the target rows whose scope
-    key appears in ``replace_keys`` (a BROADCAST anti-join — micro-batch
-    key sets are small by the streaming contract, and the pruned target
-    is then never shuffled or sorted, where the full-outer join forced a
-    sort-merge join on the composite key), then union the source in.
+    key appears in ``replace_keys`` (a null-safe BROADCAST anti-join —
+    micro-batch key sets are small by the streaming contract, and the
+    pruned target is then never shuffled or sorted, where the full-outer
+    join forced a sort-merge join on the composite key), then union the
+    source in.
     Incompatible with ``preserve``/``dedupe_order``/``set_on_*``/
     ``merge_exprs``/``ledger``/``evolve_schema`` (those give matched rows
     semantics beyond "source wins" — asserted).
@@ -543,9 +595,18 @@ def merge_upsert_scoped(
                     f"merge_upsert_scoped(replace_keys=...) requires aligned "
                     f"schemas; target={tgt.columns} source={src.columns}"
                 )
+                # null-safe, like the MERGE it replaces: a NULL scope key
+                # drops its stored rows too
+                rk_cols = list(replace_keys.columns)
+                rk = replace_keys.select(
+                    *[F.col(c).alias(f"__rk_{c}") for c in rk_cols]
+                )
                 merged = tgt.join(
-                    F.broadcast(replace_keys),
-                    list(replace_keys.columns),
+                    F.broadcast(rk),
+                    reduce(
+                        lambda a, b: a & b,
+                        [F.col(c).eqNullSafe(F.col(f"__rk_{c}")) for c in rk_cols],
+                    ),
                     "left_anti",
                 ).unionByName(src)
             else:

@@ -14,31 +14,27 @@ see below). So this sink folds each micro-batch into two persisted tables:
 
 - ``chunks_table`` ``(id, chunk_idx, chunk_text, n_tokens, chunk_hash,
   src_batch_id)`` — the batch's ``cdc_chunk_documents`` output, merged by
-  ``(id, chunk_idx)`` via :func:`operators.merge.merge_upsert`, so a
-  replayed at-least-once delivery re-merges the same rows idempotently.
-  ``src_batch_id`` records which micro-batch delivered the document; it is
-  what lets the re-ingest guard tell a REPLAY of the same batch (stored id
-  == incoming id: benign, re-merge) from a true re-ingest in a LATER batch
-  (stored id != incoming id: raises — re-chunking under a shortened text
-  would also strand stale higher-``chunk_idx`` rows, so re-ingest is
-  rejected rather than silently mis-counted). Read through
-  :meth:`CdcChunkSink.chunks`, which drops the bookkeeping column.
+  ``(id, chunk_idx)``, so a replayed at-least-once delivery re-merges the
+  same rows idempotently. ``src_batch_id`` records which micro-batch
+  delivered the document; it is what lets the re-ingest guard tell a
+  REPLAY of the same batch (stored id == incoming id: benign, re-merge)
+  from a true re-ingest in a LATER batch (stored id != incoming id: raises
+  — re-chunking under a shortened text would also strand stale
+  higher-``chunk_idx`` rows, so re-ingest is rejected rather than silently
+  mis-counted). Read through :meth:`CdcChunkSink.chunks`, which drops the
+  bookkeeping column.
 - ``freq_table`` ``(chunk_hash, doc_freq)`` — additive fold of the
   batch's per-hash distinct-document counts. Additive folds double-count
-  replays, so the fold is ledger-guarded: on a plain table, one sentinel
-  row (``chunk_hash = -1``, doc_freq = last applied batch_id; real hashes
-  are md5-derived 60-bit non-negatives) swaps atomically WITH the counts,
-  and a replayed ``batch_id <= ledger`` skips the fold; on a
-  hash-BUCKETED table (``partition_by=[merge.PART_COL]``) the ledger is
-  PER BUCKET (merge.LedgerSpec), each swapping atomically with its
-  bucket's counts, so a crash mid-swap replays only the buckets that
-  didn't land.
+  replays, so the fold is ledger-guarded PER BUCKET (merge.LedgerSpec,
+  sentinel ``chunk_hash = -1``; real hashes are md5-derived 60-bit
+  non-negatives), each ledger row swapping atomically with its bucket's
+  counts, so a crash mid-swap replays only the buckets that didn't land.
 
-Fold order makes every crash point safe: chunks merge FIRST (idempotent
-— re-merging is harmless whether or not the freq fold landed), freq +
-ledger swap SECOND; a crash anywhere replays the batch, the chunk merge
-no-ops semantically, and the ledger decides whether the freq fold
-re-applies.
+Fold order makes every crash point safe: both merges stage concurrently,
+then chunks commit FIRST (idempotent — re-merging is harmless whether or
+not the freq fold landed), freq + ledger SECOND; a crash anywhere replays
+the batch, the chunk merge no-ops semantically, and the ledger decides
+whether the freq fold re-applies.
 
 Invariant (pytest: tests/test_streaming_chunkfreq.py): after draining
 any prefix of the stream — across restarts and replays —
@@ -48,16 +44,11 @@ the same corpus, and ``remove_shared_spans(chunks=..., freq=...)`` over
 the maintained state equals the from-scratch batch operator. Live-drain
 hash-certified cross-engine in ns_stream_live_sinks.
 
-Per-trigger cost: COMPUTE is batch-proportional (one batch-sized
-chunking via map-side HOFs + one keyed merge per table). WRITE I/O
-depends on the table layout: a plain table rewrites the whole state per
-trigger (``overwrite_atomic`` — state-sized write amplification, fine
-for bounded fixtures, wrong for a corpus-sized chunk table); a
-hash-BUCKETED table rewrites only the buckets the batch touches — the
-reference's MERGE-touches-matched-rows economics
-(sql/05_merge_canonical.sql:6-53), the layout a 100 TB deployment should
-use. Chunk hashes use md5 of the LOWERCASED chunk text
-(remove_shared_spans' case-insensitive span identity; the stored
+Per-trigger cost is batch-proportional: one batch-sized chunking via
+map-side HOFs plus one bucket-scoped merge per table (both tables are
+hash-bucketed — ``merge.require_bucketed``), which rewrites only the
+buckets the batch touches. Chunk hashes use md5 of the LOWERCASED chunk
+text (remove_shared_spans' case-insensitive span identity; the stored
 chunk_text keeps source case).
 """
 
@@ -72,13 +63,13 @@ from pyspark.sql import types as T
 from ..functions.scalars import md5_long
 from ..functions.text import cdc_chunk_documents
 from ..operators.merge import (
-    PART_COL,
     T_PREFIX,
     LedgerSpec,
     maybe_rebucket,
-    merge_upsert,
     merge_upsert_scoped,
     part_expr,
+    require_bucketed,
+    stage_then_commit,
 )
 from ..operators.storage import ParquetTable
 
@@ -90,6 +81,10 @@ FREQ_SCHEMA = T.StructType(
 )
 
 _LEDGER_HASH = -1
+
+#: fixed token that opens the re-ingest guard's in-plan error message; the
+#: sink recognizes the guard's failure by it, whatever Spark wraps around
+_REINGEST_TOKEN = "CDC_REINGEST:"
 
 _ADD = {
     "doc_freq": lambda t, s: (
@@ -124,6 +119,8 @@ class CdcChunkSink:
         rebucket_target_bytes: int | None = None,
         rebucket_max_buckets: int = 1 << 20,
     ):
+        require_bucketed(chunks_table, "CdcChunkSink")
+        require_bucketed(freq_table, "CdcChunkSink")
         if chunks_table.schema is None:
             chunks_table.schema = _chunk_schema(id_col)
         if freq_table.schema is None:
@@ -140,29 +137,13 @@ class CdcChunkSink:
         self.rebucket_target_bytes = rebucket_target_bytes
         self.rebucket_max_buckets = rebucket_max_buckets
 
-    def _last_applied(self, current_freq: DataFrame) -> int:
-        row = (
-            current_freq.filter(F.col("chunk_hash") == _LEDGER_HASH)
-            .select("doc_freq")
-            .collect()
-        )
-        return int(row[0][0]) if row else -1
-
     def _maybe_rebucket_both(self, spark: SparkSession) -> None:
         """Post-fold auto-split check for both state tables. The common
-        case is an O(1) driver metadata read per table (no-op); when BOTH
-        tables are scoped and actually cross the split threshold in the
-        same trigger (the forced-rebucket probe's posture), the two
-        independent scan+rewrite jobs run concurrently (guide §2.6 —
-        separate tables, no shared state)."""
+        case is an O(1) driver metadata read per table (no-op); when both
+        tables actually cross the split threshold in the same trigger (the
+        forced-rebucket probe's posture), the two independent scan+rewrite
+        jobs run concurrently (separate tables, no shared state)."""
         if self.rebucket_target_bytes is None:
-            return
-        scoped_tables = [
-            t
-            for t in (self.chunks_table, self.freq_table)
-            if t.partition_by == [PART_COL]
-        ]
-        if not scoped_tables:
             return
 
         def split(t) -> None:
@@ -173,12 +154,9 @@ class CdcChunkSink:
                 max_buckets=self.rebucket_max_buckets,
             )
 
-        if len(scoped_tables) == 2:
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                # list() propagates the first worker exception, if any
-                list(ex.map(split, scoped_tables))
-        else:
-            split(scoped_tables[0])
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            # list() propagates the first worker exception, if any
+            list(ex.map(split, (self.chunks_table, self.freq_table)))
 
     def chunks(self, spark: SparkSession) -> DataFrame:
         """The maintained chunk table — remove_shared_spans' ``chunks=``
@@ -192,77 +170,19 @@ class CdcChunkSink:
             F.col("chunk_hash") != _LEDGER_HASH
         )
 
-    def _guard_reingest(
-        self,
-        spark: SparkSession,
-        batch_chunks: DataFrame,
-        batch_id: int,
-        parts: list[int] | None = None,
-    ) -> None:
-        """Fail loudly when a doc_id in this batch already has chunks from
-        a DIFFERENT batch: the additive doc-frequency fold would
-        double-count it, and a shortened re-ingest would strand stale
-        higher-index chunk rows. Same-batch matches are replays — benign.
-
-        Cost: one semi-ish join of the batch's ids against the chunk
-        table's id projection — bucket-pruned on a scoped layout (the
-        batch ids' buckets only), so the guard stays batch-footprint-
-        proportional at corpus scale. ``parts`` (the batch's touched
-        buckets, computed with the table's own ``part_expr``) skips the
-        guard's bucket collect — the caller shares one per-trigger list
-        between the guard and the chunk merge (r15)."""
-        if not self.chunks_table.exists():
-            return
-        existing = self.chunks_table.scan(spark)  # physical (incl. PART_COL)
-        batch_ids = batch_chunks.select(self.id_col).distinct()
-        if self.chunks_table.partition_by == [PART_COL]:
-            if parts is None:
-                n = self.chunks_table.read_meta()["n_buckets"]
-                parts = [
-                    r[0]
-                    for r in batch_ids.select(
-                        part_expr(self.id_col, n).alias("p")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-            existing = existing.filter(F.col(PART_COL).isin(parts))
-        clash = (
-            existing.select(self.id_col, "src_batch_id")
-            .join(batch_ids, self.id_col)
-            .filter(F.col("src_batch_id") != F.lit(batch_id))
-            .select(self.id_col)
-            .distinct()
-            .limit(5)
-            .collect()
-        )
-        if clash:
-            ids = sorted(r[0] for r in clash)
-            raise ValueError(
-                f"CdcChunkSink: doc ids {ids} were already ingested by an "
-                f"earlier batch; re-ingesting a document corrupts the "
-                f"additive doc-frequency state (and a shortened text would "
-                f"strand stale chunk rows). This sink requires each "
-                f"document to arrive in exactly one micro-batch — the "
-                f"parquet file-source contract. Rebuild the state tables "
-                f"to absorb revised documents."
-            )
-
     def _clash_guard_expr(self, batch_id: int):
-        """The scoped-layout re-ingest guard, folded INTO the chunk merge
-        (r16): a matched (id, chunk_idx) row whose stored ``src_batch_id``
-        differs from this batch is by definition a re-ingest — every
-        re-ingested document with >= 1 chunk matches at least on
-        ``chunk_idx`` 0, the same id set :meth:`_guard_reingest` detects
-        with its own driver job. ``raise_error`` fails the merge's WRITE
-        job before anything commits (tmp/generation garbage only), so the
-        fail-loudly contract and the state-intact guarantee are unchanged
-        while the guard's separate per-trigger scan+collect job disappears.
-        Same-batch matches (replays) compare equal and fold on through."""
+        """The re-ingest guard, folded INTO the chunk merge: a matched
+        (id, chunk_idx) row whose stored ``src_batch_id`` differs from this
+        batch is by definition a re-ingest — every re-ingested document
+        with >= 1 chunk matches at least on ``chunk_idx`` 0. ``raise_error``
+        fails the merge's WRITE job before anything commits (tmp/generation
+        garbage only), so the state stays intact and no separate guard job
+        runs. Same-batch matches (replays) compare equal and fold on
+        through."""
 
         def guard(t, s):
             msg = F.concat(
-                F.lit("CdcChunkSink: doc id "),
+                F.lit(_REINGEST_TOKEN + " CdcChunkSink: doc id "),
                 F.col(T_PREFIX + self.id_col).cast("string"),
                 F.lit(
                     " was already ingested by an earlier batch; "
@@ -282,161 +202,62 @@ class CdcChunkSink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        scoped = self.freq_table.partition_by == [PART_COL]
-        if not scoped:
-            current_freq = self.freq_table.read(spark).cache()
+        batch_chunks = (
+            cdc_chunk_documents(
+                batch_df, self.id_col, self.text_col, divisor=self.divisor
+            )
+            .withColumn("chunk_hash", md5_long(F.lower(F.col("chunk_text"))))
+            .withColumn("src_batch_id", F.lit(batch_id).cast("long"))
+            .persist()
+        )
         try:
-            if not scoped and batch_id <= self._last_applied(current_freq):
-                return  # replayed at-least-once delivery: already folded
-            batch_chunks = (
-                cdc_chunk_documents(
-                    batch_df, self.id_col, self.text_col, divisor=self.divisor
-                )
-                .withColumn(
-                    "chunk_hash", md5_long(F.lower(F.col("chunk_text")))
-                )
-                .withColumn("src_batch_id", F.lit(batch_id).cast("long"))
-                .persist()
+            # ONE touched-bucket collect per trigger, shared by both merges'
+            # partition scopes: both part lists fold in a single aggregate
+            # over the persisted batch, each bounded by its table's bucket
+            # count — driver-small. The freq side's hash set over the raw
+            # chunk rows equals the set over the aggregated per-hash counts
+            # by construction (grouping never invents or drops a hash). The
+            # lists are EXACT touched sets (not supersets), so the ledger's
+            # carried-sentinel union contributes nothing; None for an absent
+            # table (the merge's insert-only first-batch path).
+            doc_parts = hash_parts = None
+            aggs = {}
+            if self.chunks_table.exists():
+                n_c = self.chunks_table.read_meta()["n_buckets"]
+                aggs["dp"] = part_expr(self.id_col, n_c)
+            if self.freq_table.exists():
+                n_f = self.freq_table.read_meta()["n_buckets"]
+                aggs["hp"] = part_expr("chunk_hash", n_f)
+            if aggs:
+                row = batch_chunks.agg(
+                    *[F.collect_set(e).alias(k) for k, e in aggs.items()]
+                ).first()
+                if "dp" in aggs:
+                    doc_parts = [int(p) for p in row["dp"]]
+                if "hp" in aggs:
+                    hash_parts = [int(p) for p in row["hp"]]
+            # batch's per-hash distinct-doc counts (freq merge source)
+            b = (
+                batch_chunks.select("chunk_hash", self.id_col)
+                .distinct()
+                .groupBy("chunk_hash")
+                .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
             )
             try:
-                # ONE touched-bucket collect per trigger, shared by the
-                # guard's pruned scan, the chunk merge's partition scope,
-                # AND the freq merge's (r15: the guard and both merges each
-                # ran their own driver collect — three jobs doing one job's
-                # work per trigger). Both part lists fold in a single
-                # aggregate over the persisted batch; each is bounded by
-                # its table's bucket count — driver-small. The freq side's
-                # hash set over the raw chunk rows equals the set over the
-                # aggregated per-hash counts by construction (grouping
-                # never invents or drops a hash).
-                doc_parts = None
-                hash_parts = None
-                chunks_scoped = (
-                    self.chunks_table.partition_by == [PART_COL]
-                    and self.chunks_table.exists()
-                )
-                freq_scoped = scoped and self.freq_table.exists()
-                if chunks_scoped or freq_scoped:
-                    aggs = []
-                    if chunks_scoped:
-                        n_c = self.chunks_table.read_meta()["n_buckets"]
-                        aggs.append(
-                            F.collect_set(
-                                part_expr(self.id_col, n_c)
-                            ).alias("dp")
-                        )
-                    if freq_scoped:
-                        n_f = self.freq_table.read_meta()["n_buckets"]
-                        aggs.append(
-                            F.collect_set(
-                                part_expr("chunk_hash", n_f)
-                            ).alias("hp")
-                        )
-                    row = batch_chunks.agg(*aggs).first()
-                    if chunks_scoped:
-                        doc_parts = [int(p) for p in row["dp"]]
-                    if freq_scoped:
-                        hash_parts = [int(p) for p in row["hp"]]
-                # batch's per-hash distinct-doc counts (freq merge source)
-                b = (
-                    batch_chunks.select("chunk_hash", self.id_col)
-                    .distinct()
-                    .groupBy("chunk_hash")
-                    .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
-                )
-                if self.chunks_table.partition_by == [PART_COL] and scoped:
-                    # FULLY-SCOPED FAST PATH (r16): both merges' expensive
-                    # halves — the staging WRITE jobs off the one persisted
-                    # batch scan — run CONCURRENTLY (guide §2.6); the
-                    # re-ingest guard folds into the chunk merge itself
-                    # (_clash_guard_expr), so the per-trigger floor drops
-                    # from four sequential jobs (guard scan, chunk write,
-                    # freq write, + the shared agg) to the agg plus ONE
-                    # overlapped write wave. The COMMITS stay strictly
-                    # ordered — chunks land before freq — so every crash
-                    # point keeps the module's fold-order contract: a crash
-                    # before the chunk commit lands nothing; between the
-                    # commits, chunks-only (the replay re-merges chunks
-                    # idempotently and the ledger re-applies freq).
-                    # hash_parts is the EXACT touched set (not a superset),
-                    # so the carried-sentinel union contributes nothing and
-                    # replay protection is unchanged; None on the first
-                    # batch (table absent — the merge's insert-only path).
-                    staged_c = staged_f = None
-                    chunk_exc = freq_exc = None
-                    with ThreadPoolExecutor(max_workers=2) as ex:
-                        f_c = ex.submit(
-                            merge_upsert_scoped,
-                            spark,
-                            self.chunks_table,
-                            batch_chunks,
-                            keys=[self.id_col, "chunk_idx"],
-                            merge_exprs={
-                                "src_batch_id": self._clash_guard_expr(
-                                    batch_id
-                                )
-                            },
-                            parts=doc_parts,
-                            stage_only=True,
-                        )
-                        f_f = ex.submit(
-                            merge_upsert_scoped,
-                            spark,
-                            self.freq_table,
-                            b,
-                            keys=["chunk_hash"],
-                            merge_exprs=_ADD,
-                            ledger=LedgerSpec(_LEDGER_HASH, "doc_freq"),
-                            batch_id=batch_id,
-                            parts=hash_parts,
-                            stage_only=True,
-                        )
-                        try:
-                            staged_c = f_c.result()
-                        except Exception as e:  # noqa: BLE001 — re-raised
-                            chunk_exc = e
-                        try:
-                            staged_f = f_f.result()
-                        except Exception as e:  # noqa: BLE001 — re-raised
-                            freq_exc = e
-                    if chunk_exc is not None or freq_exc is not None:
-                        for st in (staged_c, staged_f):
-                            if st is not None:
-                                st.abort()
-                        err = chunk_exc if chunk_exc is not None else freq_exc
-                        if "already ingested" in str(err):
-                            # surface the in-plan guard's raise_error as the
-                            # documented loud ValueError (pinned in tests)
-                            raise ValueError(str(err)) from err
-                        raise err
-                    staged_c.commit()  # fold order: chunks land FIRST
-                    staged_f.commit()
-                    self._maybe_rebucket_both(spark)
-                    return
-                # mixed / plain layouts: the original sequential path
-                self._guard_reingest(
-                    spark, batch_chunks, batch_id, parts=doc_parts
-                )
-                # 1) chunk merge (idempotent by key) — safe to re-apply
-                if self.chunks_table.partition_by == [PART_COL]:
-                    merge_upsert_scoped(
+                # fold order: chunks commit FIRST, then freq + ledger
+                stage_then_commit(
+                    lambda: merge_upsert_scoped(
                         spark,
                         self.chunks_table,
                         batch_chunks,
                         keys=[self.id_col, "chunk_idx"],
+                        merge_exprs={
+                            "src_batch_id": self._clash_guard_expr(batch_id)
+                        },
                         parts=doc_parts,
-                    )
-                else:
-                    merged_chunks = merge_upsert(
-                        self.chunks_table.read(spark),
-                        batch_chunks,
-                        keys=[self.id_col, "chunk_idx"],
-                    )
-                    self.chunks_table.overwrite_atomic(merged_chunks)
-                # 2) additive freq fold + ledger, swapped atomically
-                if scoped:
-                    # see the fast path's hash_parts note
-                    merge_upsert_scoped(
+                        stage_only=True,
+                    ),
+                    lambda: merge_upsert_scoped(
                         spark,
                         self.freq_table,
                         b,
@@ -445,42 +266,18 @@ class CdcChunkSink:
                         ledger=LedgerSpec(_LEDGER_HASH, "doc_freq"),
                         batch_id=batch_id,
                         parts=hash_parts,
-                    )
-                else:
-                    t = current_freq.filter(
-                        F.col("chunk_hash") != _LEDGER_HASH
-                    ).select("chunk_hash", F.col("doc_freq").alias("__t_cnt"))
-                    merged_freq = (
-                        t.join(
-                            b.select(
-                                "chunk_hash",
-                                F.col("doc_freq").alias("__b_cnt"),
-                            ),
-                            "chunk_hash",
-                            "full_outer",
-                        )
-                        .select(
-                            "chunk_hash",
-                            (
-                                F.coalesce("__t_cnt", F.lit(0))
-                                + F.coalesce("__b_cnt", F.lit(0))
-                            )
-                            .cast("long")
-                            .alias("doc_freq"),
-                        )
-                        .unionByName(
-                            spark.createDataFrame(
-                                [(_LEDGER_HASH, batch_id)], FREQ_SCHEMA
-                            )
-                        )
-                    )
-                    self.freq_table.overwrite_atomic(merged_freq)
-                self._maybe_rebucket_both(spark)
-            finally:
-                batch_chunks.unpersist()
+                        stage_only=True,
+                    ),
+                )
+            except Exception as err:
+                if _REINGEST_TOKEN in str(err):
+                    # surface the in-plan guard's raise_error as the
+                    # documented loud ValueError
+                    raise ValueError(str(err)) from err
+                raise
+            self._maybe_rebucket_both(spark)
         finally:
-            if not scoped:
-                current_freq.unpersist()
+            batch_chunks.unpersist()
 
 
 def stream_cdc_chunks(

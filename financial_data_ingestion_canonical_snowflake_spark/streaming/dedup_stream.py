@@ -12,29 +12,15 @@ hash-keyed merge against the table), never a corpus re-scan.
 
 Merge semantics per content hash: min-id survivor (``least`` across the
 table and batch sides — matching the batch operator's rule even when a
-later batch backfills a smaller id), counts are ADDITIVE across batches,
-and the fold
-is idempotent per micro-batch id via the checkpointed file source (a
-replayed batch re-runs the same additive merge on the same rows — the
-standard foreachBatch exactly-once story requires the merge to be
-deterministic, which min+sum over a fixed batch is; a crash BETWEEN the
-table swap and the checkpoint commit re-applies one batch, the documented
-at-least-once edge every non-transactional sink shares — the production
-seam is an ACID table format).
+later batch backfills a smaller id), counts are ADDITIVE across batches.
 
-Scale note: the fold is a full-outer merge keyed on content_hash. Give the
-sink a hash-BUCKETED survivor table (``partition_by=[merge.PART_COL]``)
-and the fold runs bucket-scoped: a micro-batch reads and rewrites ONLY the
-buckets its content hashes land in — per-trigger I/O proportional to the
-batch's bucket footprint, not the corpus (the reference's
-MERGE-touches-matched-rows economics, sql/05_merge_canonical.sql:6-53).
-The scoped path also carries a per-bucket replay ledger (sentinel
-``content_hash = '__ledger__'`` row inside each bucket partition), so the
-additive ``dup_cnt`` is exactly-once per bucket even across the
-crash-between-swap-and-checkpoint edge that the whole-table path documents
-as at-least-once. Read survivors through :meth:`ExactDedupSink.survivors`
-(it excludes the sentinel rows). A plain unpartitioned table keeps the
-legacy whole-table rewrite.
+The fold is bucket-scoped (``merge_upsert_scoped`` into the hash-bucketed
+survivor table — see ``merge.require_bucketed``): a micro-batch reads and
+rewrites ONLY the buckets its content hashes land in. A per-bucket replay
+ledger (sentinel ``content_hash = '__ledger__'`` row inside each bucket
+partition) makes the additive ``dup_cnt`` exactly-once per bucket under
+replay. Read survivors through :meth:`ExactDedupSink.survivors` (it
+excludes the sentinel rows).
 """
 
 from __future__ import annotations
@@ -46,13 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.merge import (
-    PART_COL,
     S_PREFIX,
     T_PREFIX,
     LedgerSpec,
     maybe_rebucket,
-    merge_upsert,
     merge_upsert_scoped,
+    require_bucketed,
+    stage_then_commit,
 )
 from ..operators.storage import ParquetTable
 from ..operators.text_dedup import (
@@ -96,15 +82,11 @@ def _payload_expr(t, s):
     return F.when(s_wins, s).otherwise(t)
 
 
-def _is_bucketed(table: ParquetTable) -> bool:
-    return table.partition_by == [PART_COL]
-
-
 class ExactDedupSink:
     """foreachBatch sink folding each micro-batch into the survivor table.
 
-    ``rebucket_target_bytes``: on a bucketed table, auto-split the bucket
-    layout after a fold whenever mean bucket size exceeds the target
+    ``rebucket_target_bytes``: auto-split the bucket layout after a fold
+    whenever mean bucket size exceeds the target
     (merge.maybe_rebucket) — the knob that keeps per-trigger I/O
     batch-proportional as the survivor state grows without bound (a fixed
     modulus re-couples trigger cost to state size; docs/BENCH_NOTES.md).
@@ -113,7 +95,7 @@ class ExactDedupSink:
     ``min_by(payload, id)`` semantics, folded across batches — the
     payload follows the running min-id survivor). Adding payload columns
     on a RESTART over state written without them is the supported
-    schema-evolution path (scoped layout): the fold widens the table
+    schema-evolution path: the fold widens the table
     in-place via ``merge_upsert_scoped(evolve_schema=True)`` — no state
     rebuild. Rows whose survivor was established before the evolution
     carry NULL payload until a smaller-id delivery arrives (the payload
@@ -130,13 +112,13 @@ class ExactDedupSink:
         rebucket_target_bytes: int | None = None,
         payload_cols: Sequence[str] = (),
     ):
+        require_bucketed(table, "ExactDedupSink")
         if table.schema is None and not payload_cols and not table.exists():
             # payload types are only known from the stream; with payloads
             # (or over an EXISTING table, whose physical schema may be
             # wider than this software knows — e.g. a restart that dropped
-            # payload_cols) the table reads schema-on-read: clamping an
-            # evolved table to the core schema here would silently erase
-            # stored payload columns on the next whole-table rewrite
+            # payload_cols) the table reads schema-on-read, so survivors()
+            # keeps the stored payload columns
             table.schema = SURVIVOR_SCHEMA
         self.table = table
         self.id_col = id_col
@@ -145,8 +127,7 @@ class ExactDedupSink:
         self.payload_cols = list(payload_cols)
 
     def survivors(self, spark: SparkSession) -> DataFrame:
-        """The maintained survivor table (scoped-path ledger rows
-        excluded) — identical schema/content to batch ``exact_dedup``."""
+        """The maintained survivor table (ledger rows excluded) — identical schema/content to batch ``exact_dedup``."""
         return self.table.read(spark).filter(
             ~F.col("content_hash").eqNullSafe(F.lit(LEDGER_HASH))
         )
@@ -159,42 +140,22 @@ class ExactDedupSink:
         exprs = dict(_SURVIVOR_EXPRS)
         for c in self.payload_cols:
             exprs[c] = _payload_expr
-        if _is_bucketed(self.table):
-            merge_upsert_scoped(
-                spark,
-                self.table,
-                batch,
-                keys=["content_hash"],
-                merge_exprs=exprs,
-                ledger=LedgerSpec(LEDGER_HASH, "dup_cnt"),
-                batch_id=batch_id,
-                # always evolve: widens in place when a restart ADDED
-                # payload columns, and tolerates (preserves) columns a
-                # restart DROPPED — either direction of payload drift must
-                # never crash the stream or erase stored state
-                evolve_schema=True,
-            )
-            if self.rebucket_target_bytes is not None:
-                maybe_rebucket(spark, self.table, self.rebucket_target_bytes)
-            return
-        if self.table.exists():
-            # merge against the FULL physical schema, not table.read's
-            # declared-schema projection: a sink reconstructed with the
-            # core SURVIVOR_SCHEMA over a payload-widened table would
-            # otherwise drop the payload columns from the target and the
-            # whole-table rewrite would erase them permanently (the
-            # declared schema stays a read-surface narrowing only)
-            merged = merge_upsert(
-                self.table.scan(spark),
-                batch,
-                keys=["content_hash"],
-                merge_exprs=exprs,
-                evolve_schema=True,
-            )
-        else:
-            merged = batch  # first batch (payload mode has no declared
-            # schema for an empty-table read; MERGE into nothing = insert)
-        self.table.overwrite_atomic(merged)
+        merge_upsert_scoped(
+            spark,
+            self.table,
+            batch,
+            keys=["content_hash"],
+            merge_exprs=exprs,
+            ledger=LedgerSpec(LEDGER_HASH, "dup_cnt"),
+            batch_id=batch_id,
+            # always evolve: widens in place when a restart ADDED payload
+            # columns, and tolerates (preserves) columns a restart DROPPED
+            # — either direction of payload drift must never crash the
+            # stream or erase stored state
+            evolve_schema=True,
+        )
+        if self.rebucket_target_bytes is not None:
+            maybe_rebucket(spark, self.table, self.rebucket_target_bytes)
 
 
 def _start_parquet_batch_stream(
@@ -271,11 +232,9 @@ class MinHashLshDedupSink:
     1. MinHash signatures for the batch (map-side folds);
     2. ``minhash_lsh_pairs_incremental`` against the persisted signature
        table — new-vs-corpus and new-vs-new candidate pairs only;
-    3. both tables fold via ``merge_upsert`` (keyed on doc / (id_a, id_b)),
-       so a replayed micro-batch after a restart re-merges the same rows
-       idempotently instead of appending duplicates. Hash-BUCKETED tables
-       (``partition_by=[merge.PART_COL]``) fold bucket-scoped — per-trigger
-       I/O proportional to the batch's bucket footprint, not the corpus.
+    3. both tables fold bucket-scoped, keyed on doc / (id_a, id_b), so a
+       replayed micro-batch after a restart re-merges the same rows
+       idempotently instead of appending duplicates.
 
     The invariant (pytest-proven here in streaming form; the batch twin is
     proven in tests/test_curation.py): after draining any prefix of the
@@ -302,6 +261,8 @@ class MinHashLshDedupSink:
         max_bucket_width: int | None = 10_000,
         rebucket_target_bytes: int | None = None,
     ):
+        require_bucketed(sig_table, "MinHashLshDedupSink")
+        require_bucketed(pairs_table, "MinHashLshDedupSink")
         if pairs_table.schema is None:
             pairs_table.schema = PAIR_SCHEMA
         self.sig_table = sig_table
@@ -336,89 +297,38 @@ class MinHashLshDedupSink:
                 max_bucket_width=self.max_bucket_width,
                 persist=False,  # nb lifecycle covered by new_sigs persist
             )
-            # both folds are keyed upserts (idempotent under replay — no
-            # ledger needed); a bucketed table gets the scoped rewrite,
-            # a plain table the legacy whole-table swap
-            if _is_bucketed(self.pairs_table) and _is_bucketed(self.sig_table):
-                # fully-scoped fast path (r16): stage both merges' write
-                # jobs CONCURRENTLY off the shared new_sigs cache (guide
-                # §2.6), then commit pairs before sigs — the current
-                # order. A crash between the commits is replay-safe both
-                # ways: the replayed batch recomputes pairs against the
-                # pre-batch corpus (sigs not yet committed) and re-merges
-                # both tables idempotently by key. The sigs merge uses
-                # replace_keys: the merge key IS the replace key, so
-                # "drop matching docs + insert the batch's signatures" is
-                # exactly the keyed upsert — minus the full-outer
-                # sort-merge join (the pruned signature scan is no longer
-                # shuffled; the key set broadcasts from the persisted
-                # new_sigs cache). The pairs stage reads the sig table's
-                # LIVE manifest/files throughout — staging never mutates
-                # visible state, so its corpus view stays pre-batch.
-                from concurrent.futures import ThreadPoolExecutor
-
-                staged_p = staged_s = None
-                errs = []
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    f_p = ex.submit(
-                        merge_upsert_scoped,
-                        spark,
-                        self.pairs_table,
-                        pairs,
-                        keys=["id_a", "id_b"],
-                        stage_only=True,
-                    )
-                    f_s = ex.submit(
-                        merge_upsert_scoped,
-                        spark,
-                        self.sig_table,
-                        new_sigs,
-                        keys=["doc"],
-                        replace_keys=new_sigs.select("doc").distinct(),
-                        stage_only=True,
-                    )
-                    try:
-                        staged_p = f_p.result()
-                    except Exception as e:  # noqa: BLE001 — re-raised
-                        errs.append(e)
-                    try:
-                        staged_s = f_s.result()
-                    except Exception as e:  # noqa: BLE001 — re-raised
-                        errs.append(e)
-                if errs:
-                    for st in (staged_p, staged_s):
-                        if st is not None:
-                            st.abort()
-                    raise errs[0]
-                staged_p.commit()
-                staged_s.commit()
-            elif _is_bucketed(self.pairs_table):
-                merge_upsert_scoped(
-                    spark, self.pairs_table, pairs, keys=["id_a", "id_b"]
-                )
-            else:
-                merged_pairs = merge_upsert(
-                    self.pairs_table.read(spark), pairs, keys=["id_a", "id_b"]
-                )
-                self.pairs_table.overwrite_atomic(merged_pairs)
-            if _is_bucketed(self.pairs_table) and _is_bucketed(self.sig_table):
-                pass  # folded into the staged fast path above
-            elif _is_bucketed(self.sig_table):
-                # replace_keys (r16): see the fast path's sigs note
-                merge_upsert_scoped(
+            # Both folds are keyed upserts (idempotent under replay — no
+            # ledger needed); their write jobs stage concurrently off the
+            # shared new_sigs cache, then pairs commit before sigs. A crash
+            # between the commits is replay-safe: the replayed batch
+            # recomputes pairs against the pre-batch corpus (sigs not yet
+            # committed) and re-merges both tables by key. The pairs stage
+            # reads the sig table's LIVE files throughout — staging never
+            # mutates visible state, so its corpus view stays pre-batch.
+            # The sigs merge uses replace_keys: the merge key IS the
+            # replace key, so "drop matching docs + insert the batch's
+            # signatures" is exactly the keyed upsert, minus the full-outer
+            # sort-merge join.
+            stage_then_commit(
+                lambda: merge_upsert_scoped(
+                    spark,
+                    self.pairs_table,
+                    pairs,
+                    keys=["id_a", "id_b"],
+                    stage_only=True,
+                ),
+                lambda: merge_upsert_scoped(
                     spark,
                     self.sig_table,
                     new_sigs,
                     keys=["doc"],
                     replace_keys=new_sigs.select("doc").distinct(),
-                )
-            else:
-                merged_sigs = merge_upsert(corpus_sigs, new_sigs, keys=["doc"])
-                self.sig_table.overwrite_atomic(merged_sigs)
+                    stage_only=True,
+                ),
+            )
             if self.rebucket_target_bytes is not None:
                 for t in (self.pairs_table, self.sig_table):
-                    if t.partition_by == [PART_COL]:
-                        maybe_rebucket(spark, t, self.rebucket_target_bytes)
+                    maybe_rebucket(spark, t, self.rebucket_target_bytes)
         finally:
             new_sigs.unpersist()
 

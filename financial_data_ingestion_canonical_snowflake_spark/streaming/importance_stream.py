@@ -11,28 +11,21 @@ broadcast join away (:func:`operators.importance.importance_weights`'s
 ratio math, via ``scores_against``).
 
 Exactly-once fold: foreachBatch is at-least-once, and an additive fold
-double-counts a replayed delivery, so the sink keeps an applied-batch
-ledger as a SENTINEL ROW inside the table itself (``bucket = -1``, cnt =
-last applied batch_id — real buckets are md5 % 2**hash_bits, never
-negative). The ledger swaps atomically WITH the counts in
-``overwrite_atomic`` — a crash between data write and ledger write is
-impossible by construction, unlike a sidecar meta file — and a replayed
-``batch_id <= ledger`` is skipped. Restart/replay equality is
-pytest-proven in tests/test_streaming_importance.py.
+double-counts a replayed delivery. The fold is bucket-scoped into a
+hash-bucketed table (``merge.require_bucketed``) and keeps a per-bucket
+applied-batch ledger (merge.LedgerSpec: a sentinel row ``bucket = -1``
+inside each bucket partition, cnt = last applied batch_id — real buckets
+are md5 % 2**hash_bits, never negative). Each ledger row swaps atomically
+WITH its bucket's counts, so a replayed ``batch_id`` is skipped and a
+crash mid-swap replays only the buckets that didn't land.
+Restart/replay equality is pytest-proven in
+tests/test_streaming_importance.py.
 
-Per-trigger cost: one batch-sized feature explode + groupBy, one
-full-outer merge against a table bounded by the 2**hash_bits feature
-space (65,536 rows at the default 16 bits) — trigger cost is batch-
-proportional with a hash-space-bounded state, the same shape as the
-streaming HLL sink.
-
-A hash-BUCKETED table (``partition_by=[merge.PART_COL]``) folds
-bucket-scoped instead: only the buckets the batch's features land in are
-read and rewritten, and the replay ledger moves from one global sentinel
-row to one PER BUCKET (each swaps atomically with its bucket's counts —
-merge.LedgerSpec), so a crash mid-swap replays only the buckets that
-didn't land. For this sink the state is hash-space-bounded either way;
-the scoped path exists so the fold shape matches the corpus-sized sinks.
+Per-trigger cost: one batch-sized feature explode + groupBy, one keyed
+merge against the touched buckets of a table bounded by the 2**hash_bits
+feature space (65,536 rows at the default 16 bits) — trigger cost is
+batch-proportional with a hash-space-bounded state, the same shape as
+the streaming HLL sink.
 """
 
 from __future__ import annotations
@@ -42,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.importance import hashed_ngram_features
-from ..operators.merge import PART_COL, LedgerSpec, merge_upsert_scoped
+from ..operators.merge import LedgerSpec, merge_upsert_scoped, require_bucketed
 from ..operators.storage import ParquetTable
 
 FEATURE_SCHEMA = T.StructType(
@@ -66,6 +59,7 @@ class ImportanceFeatureSink:
         shingle_len: int = 2,
         hash_bits: int = 16,
     ):
+        require_bucketed(table, "ImportanceFeatureSink")
         if table.schema is None:
             table.schema = FEATURE_SCHEMA
         self.table = table
@@ -74,91 +68,37 @@ class ImportanceFeatureSink:
         self.shingle_len = shingle_len
         self.hash_bits = hash_bits
 
-    def _last_applied(self, current: DataFrame) -> int:
-        row = (
-            current.filter(F.col("bucket") == _LEDGER_BUCKET)
-            .select("cnt")
-            .collect()
-        )
-        return int(row[0][0]) if row else -1
-
     def feature_table(self, spark: SparkSession) -> DataFrame:
         """The maintained ``(bucket, cnt)`` table (ledger row excluded)."""
         return self.table.read(spark).filter(F.col("bucket") != _LEDGER_BUCKET)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if self.table.partition_by == [PART_COL]:
-            # bucket-scoped fold: batch counts -> additive merge into the
-            # touched buckets only; per-bucket ledger handles replay skip
-            b = (
-                hashed_ngram_features(
-                    batch_df,
-                    self.id_col,
-                    self.text_col,
-                    shingle_len=self.shingle_len,
-                    hash_bits=self.hash_bits,
-                )
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        # batch counts -> additive merge into the touched buckets only; the
+        # per-bucket ledger skips replayed buckets
+        b = (
+            hashed_ngram_features(
+                batch_df,
+                self.id_col,
+                self.text_col,
+                shingle_len=self.shingle_len,
+                hash_bits=self.hash_bits,
             )
-            merge_upsert_scoped(
-                spark,
-                self.table,
-                b,
-                keys=["bucket"],
-                merge_exprs={
-                    "cnt": lambda t, s: (
-                        F.coalesce(t, F.lit(0)) + F.coalesce(s, F.lit(0))
-                    ).cast("long")
-                },
-                ledger=LedgerSpec(_LEDGER_BUCKET, "cnt"),
-                batch_id=batch_id,
-            )
-            return
-        # ONE table read per trigger: the cached frame feeds both the
-        # ledger probe and the merge input (the table is hash-space-bounded
-        # — 2**hash_bits + 1 rows — so the cache is small by construction);
-        # previously the ledger collect and the merge each re-scanned the
-        # parquet table.
-        current = self.table.read(spark).cache()
-        try:
-            if batch_id <= self._last_applied(current):
-                return  # replayed at-least-once delivery: already folded
-            b = (
-                hashed_ngram_features(
-                    batch_df,
-                    self.id_col,
-                    self.text_col,
-                    shingle_len=self.shingle_len,
-                    hash_bits=self.hash_bits,
-                )
-                .groupBy("bucket")
-                .agg(F.count(F.lit(1)).cast("long").alias("__b_cnt"))
-            )
-            t = current.filter(F.col("bucket") != _LEDGER_BUCKET).select(
-                "bucket", F.col("cnt").alias("__t_cnt")
-            )
-            merged = (
-                t.join(b, "bucket", "full_outer")
-                .select(
-                    "bucket",
-                    (
-                        F.coalesce("__t_cnt", F.lit(0))
-                        + F.coalesce("__b_cnt", F.lit(0))
-                    )
-                    .cast("long")
-                    .alias("cnt"),
-                )
-                .unionByName(
-                    spark.createDataFrame(
-                        [(_LEDGER_BUCKET, batch_id)], FEATURE_SCHEMA
-                    )
-                )
-            )
-            self.table.overwrite_atomic(merged)
-        finally:
-            current.unpersist()
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        )
+        merge_upsert_scoped(
+            batch_df.sparkSession,
+            self.table,
+            b,
+            keys=["bucket"],
+            merge_exprs={
+                "cnt": lambda t, s: (
+                    F.coalesce(t, F.lit(0)) + F.coalesce(s, F.lit(0))
+                ).cast("long")
+            },
+            ledger=LedgerSpec(_LEDGER_BUCKET, "cnt"),
+            batch_id=batch_id,
+        )
 
 
 def scores_against(

@@ -11,17 +11,17 @@ analog of each batch stage, built on the idiomatic Spark surfaces:
   (streaming twin of the VW_LOAD_AUDIT_SUMMARY / tumbling-agg queries);
 - ``dropDuplicatesWithinWatermark`` for the W1 survivorship semantics on an
   unbounded stream (reference sql/03_transform_headers.sql:79);
-- ``foreachBatch`` merge sink reusing the batch ``merge_upsert`` operator —
-  arbitrary sinks can't MERGE, so each micro-batch runs the same full-outer
-  merge the batch path uses (SURVEY.md §7.4-7).
+- ``foreachBatch`` merge sink reusing the batch path's bucket-scoped
+  ``merge_upsert_scoped`` — arbitrary sinks can't MERGE, so each
+  micro-batch runs the same merge the batch path uses (SURVEY.md §7.4-7).
 
 Scale notes:
 - State stores (window aggs, streaming dedupe) are keyed by the group/dedupe
   keys and bounded by the watermark — at 1000-executor scale state shards by
   ``spark.sql.shuffle.partitions``; set it to 2-3x cores BEFORE the first
   start (state-store partitioning is fixed at query start).
-- The foreachBatch merge inherits the batch operator's properties: shuffle on
-  merge keys only, AQE broadcast for small micro-batches.
+- The foreachBatch merge inherits the batch operator's properties: only the
+  buckets a micro-batch touches are read and rewritten.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.merge import PART_COL, merge_upsert, merge_upsert_scoped
+from ..operators.merge import merge_upsert_scoped, require_bucketed
 from ..operators.storage import ParquetTable
 
 
@@ -192,11 +192,12 @@ def stream_stream_interval_join(
 
 
 class MergeSink:
-    """foreachBatch sink: MERGE each micro-batch into a ParquetTable.
+    """foreachBatch sink: MERGE each micro-batch into a hash-bucketed
+    ParquetTable.
 
-    Reuses the batch ``merge_upsert`` (full-outer join + atomic directory
-    swap), so batch and streaming produce byte-identical canonical tables.
-    Micro-batches may re-deliver rows after a restart (file source replays
+    Reuses the batch pipeline's ``merge_upsert_scoped`` (only the touched
+    buckets are rewritten), so batch and streaming produce identical
+    canonical tables. Micro-batches may re-deliver rows after a restart (file source replays
     uncommitted batches); the merge is idempotent, which is the exactly-once
     story — same as the reference's rerun-safe MERGE
     (reference docs/architecture.md:88).
@@ -210,6 +211,7 @@ class MergeSink:
         dedupe_order: Sequence | None = None,
         transform: Callable[[DataFrame], DataFrame] | None = None,
     ):
+        require_bucketed(table, "MergeSink")
         self.table = table
         self.keys = list(keys)
         self.preserve = list(preserve)
@@ -219,29 +221,14 @@ class MergeSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.transform is not None:
             batch_df = self.transform(batch_df)
-        spark = batch_df.sparkSession
-        if self.table.partition_by == [PART_COL]:
-            # hash-bucketed canonical table: rewrite only touched buckets —
-            # micro-batches are small deltas, exactly the case the
-            # partition-scoped merge exists for
-            merge_upsert_scoped(
-                spark,
-                self.table,
-                batch_df,
-                keys=self.keys,
-                preserve=self.preserve,
-                dedupe_order=self.dedupe_order,
-            )
-            return
-        target = self.table.read(spark)
-        merged = merge_upsert(
-            target,
+        merge_upsert_scoped(
+            batch_df.sparkSession,
+            self.table,
             batch_df,
             keys=self.keys,
             preserve=self.preserve,
             dedupe_order=self.dedupe_order,
         )
-        self.table.overwrite_atomic(merged)
 
 
 def start_merge_stream(

@@ -6,7 +6,7 @@ ANN index from the full corpus per refresh is the corpus-wide pass a
 against a FIXED broadcast quantizer, so the inverted-list table is
 mergeable state: this sink folds each micro-batch's assignments
 ``(vec_id, centroid_id, embedding)`` into a persisted index via
-:func:`operators.merge.merge_upsert` keyed on the vector id — a replayed
+:func:`operators.merge.merge_upsert_scoped` keyed on the vector id — a replayed
 at-least-once delivery re-merges the same rows idempotently (no ledger
 needed: the fold is keyed, not additive), and a RE-INGESTED vector
 updates its assignment and embedding instead of duplicating.
@@ -25,19 +25,11 @@ across restarts and replays, the index equals the batch
 ``assign_to_centroids`` over everything ingested, and top-k served from
 it is row-identical to ``ivf_topk`` over the same corpus + centroids.
 
-Per-trigger cost: COMPUTE is batch-proportional — one broadcast
-crossJoin over the BATCH (k centroid candidates per vector, map-side
-max_by collapse) + one keyed merge against the index. WRITE I/O depends
-on the table layout: a plain table rewrites the whole index per trigger
-(``overwrite_atomic`` — state-sized write amplification, wrong for a
-corpus-sized index); a hash-BUCKETED index
-(``partition_by=[merge.PART_COL]``) rewrites only the buckets the
-batch's vector ids land in — the reference's MERGE-touches-matched-rows
-economics (sql/05_merge_canonical.sql:6-53), the layout a 100 TB
-deployment should use. The fold is a keyed upsert (idempotent under
-replay — no ledger needed). At 100 TB the index table is the corpus's
-(id, int, vector) projection, hash-partitionable by centroid_id for
-probe-locality.
+Per-trigger cost is batch-proportional — one broadcast crossJoin over
+the BATCH (k centroid candidates per vector, map-side max_by collapse) +
+one keyed merge that rewrites only the buckets of the hash-bucketed index
+(``merge.require_bucketed``) the batch's vector ids land in. At 100 TB the
+index table is the corpus's (id, int, vector) projection.
 """
 
 from __future__ import annotations
@@ -47,10 +39,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.merge import (
-    PART_COL,
     maybe_rebucket,
-    merge_upsert,
     merge_upsert_scoped,
+    require_bucketed,
 )
 from ..operators.similarity import assign_to_centroids
 from ..operators.storage import ParquetTable
@@ -93,6 +84,7 @@ class IvfIndexSink:
         vec_col: str = "embedding",
         rebucket_target_bytes: int | None = None,
     ):
+        require_bucketed(index_table, "IvfIndexSink")
         if index_table.schema is None:
             index_table.schema = _index_schema(id_col, vec_col)
         from ..operators.manifest import ManifestTable
@@ -108,7 +100,7 @@ class IvfIndexSink:
         self.centroids_table = centroids_table
         self.id_col = id_col
         self.vec_col = vec_col
-        # auto-split the bucketed index past this mean bucket size
+        # auto-split the index past this mean bucket size
         # (merge.maybe_rebucket) — the corpus-sized table's growth knob
         self.rebucket_target_bytes = rebucket_target_bytes
 
@@ -130,19 +122,9 @@ class IvfIndexSink:
             ),
             self.id_col,
         ).select(self.id_col, "centroid_id", self.vec_col)
-        if self.index_table.partition_by == [PART_COL]:
-            merge_upsert_scoped(
-                spark, self.index_table, assigned, keys=[self.id_col]
-            )
-            if self.rebucket_target_bytes is not None:
-                maybe_rebucket(
-                    spark, self.index_table, self.rebucket_target_bytes
-                )
-            return
-        merged = merge_upsert(
-            self.index_table.read(spark), assigned, keys=[self.id_col]
-        )
-        self.index_table.overwrite_atomic(merged)
+        merge_upsert_scoped(spark, self.index_table, assigned, keys=[self.id_col])
+        if self.rebucket_target_bytes is not None:
+            maybe_rebucket(spark, self.index_table, self.rebucket_target_bytes)
 
 
 def stream_ivf_index(

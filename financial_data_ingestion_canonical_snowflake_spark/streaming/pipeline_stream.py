@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..operators.merge import require_bucketed
 from ..operators.storage import ParquetTable
 from ..plans.pipeline import CAN_TXN_COLS, scalars_is_valid
 from ..plans.transform_headers import transform_headers
@@ -108,6 +109,8 @@ class FullCanonicalSink:
         join_mode: str = "faithful",
         batch_ts: dt.datetime | None = None,
     ):
+        for t in (can_txn, can_txn_line, can_txn_anomaly):
+            require_bucketed(t, "FullCanonicalSink")
         self.can_txn = can_txn
         self.can_txn_line = can_txn_line
         self.can_txn_anomaly = can_txn_anomaly
@@ -129,9 +132,7 @@ class FullCanonicalSink:
             else F.current_timestamp()
         )
 
-        # Each table merges through MergeSink — it picks the partition-
-        # scoped merge for hash-bucketed tables and the plain full-outer
-        # merge otherwise, exactly like the single-table streaming sinks.
+        # each table merges bucket-scoped through MergeSink
         stg_header = transform_headers(*args).cache()
         hdr_source = (
             stg_header.filter(F.col("rn") == 1)

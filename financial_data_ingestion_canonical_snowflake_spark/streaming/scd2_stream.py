@@ -14,10 +14,12 @@ maintenance loop a warehouse runs continuously). Per micro-batch:
    lag-collapse, so a REPLAYED micro-batch after a restart recomputes the
    identical versions (idempotent, pytest-proven across a checkpoint
    restart);
-4. fold back with ``merge_upsert`` keyed on (key, version_n). Version
-   counts are monotone non-decreasing under re-collapse (adjacent versions
-   differ by construction, so inserting events can only split runs, never
-   merge them) — stale version rows cannot linger.
+4. fold back bucket-scoped (``merge_upsert_scoped`` into the
+   hash-bucketed version table — ``merge.require_bucketed``) keyed on
+   (key, version_n). Version counts are monotone non-decreasing under
+   re-collapse (adjacent versions differ by construction, so inserting
+   events can only split runs, never merge them) — stale version rows
+   cannot linger.
 
 Late-data caveat: versions are COLLAPSED runs; an event older than the
 key's current version boundary re-orders correctly against version *start*
@@ -46,9 +48,9 @@ from pyspark.sql import types as T
 from ..operators.merge import (
     PART_COL,
     maybe_rebucket,
-    merge_upsert,
     merge_upsert_scoped,
     part_expr,
+    require_bucketed,
 )
 from ..operators.scd import scd2_build
 from ..operators.storage import ParquetTable
@@ -106,12 +108,13 @@ class Scd2Sink:
         evolve_schema: bool = False,
         rebuild_policy: RebuildPolicy | None = None,
     ):
+        require_bucketed(table, "Scd2Sink")
         self.table = table
         self.key_col = key_col
         self.state_col = state_col
         self.ts_col = ts_col
         self.seq_col = seq_col
-        # auto-split the bucketed version table past this mean bucket size
+        # auto-split the version table past this mean bucket size
         # (merge.maybe_rebucket) — keeps per-trigger I/O batch-proportional
         # as the dimension grows without bound
         self.rebucket_target_bytes = rebucket_target_bytes
@@ -146,7 +149,6 @@ class Scd2Sink:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        scoped = self.table.partition_by == [PART_COL]
         events = batch_df.select(
             self.key_col, self.state_col, self.ts_col, self.seq_col
         )
@@ -175,23 +177,29 @@ class Scd2Sink:
             )
             target = self.table.scan(spark, stored=stored)
             affected = events.select(self.key_col).distinct()
-            if scoped:
-                # bucket-prune the version read to the batch keys' buckets
-                # (same part_expr the table is laid out with), THEN key-join
-                # — the dimension scan never leaves the batch's footprint
-                n = meta["n_buckets"]
-                parts = [
-                    r[0]
-                    for r in affected.select(
-                        part_expr(self.key_col, n).alias("p")
-                    )
-                    .distinct()
-                    .collect()
-                ]
-                target = target.filter(F.col(PART_COL).isin(parts)).drop(
-                    PART_COL
-                )
+            # bucket-prune the version read to the batch keys' buckets (same
+            # part_expr the table is laid out with), THEN key-join — the
+            # dimension scan never leaves the batch's footprint
+            n = meta["n_buckets"]
+            parts = [
+                r[0]
+                for r in affected.select(part_expr(self.key_col, n).alias("p"))
+                .distinct()
+                .collect()
+            ]
+            target = target.filter(F.col(PART_COL).isin(parts)).drop(PART_COL)
             tgt_cols = set(target.columns)
+            if (
+                stored is None
+                and self.table.schema is not None
+                and set(self.table.schema.fieldNames()) != tgt_cols
+            ):
+                # a declared schema that differs from the stored files
+                # (e.g. omits the internal hwm columns): a plain scoped
+                # merge would target the declared columns only, so fold
+                # through the evolve path, which merges against the
+                # physical layout and records it
+                evolve = True
             touched = target.join(affected, self.key_col)  # batch-sized
             if track_hwm:
                 # out-of-order probe against the stored per-key high-water
@@ -227,8 +235,8 @@ class Scd2Sink:
                 )
                 if not has_hwm:
                     # first policy fold over a pre-policy table: widen it
-                    # in place (scoped merges evolve via the recorded
-                    # union schema; whole-table merges union the frames)
+                    # in place (the scoped merge evolves via the recorded
+                    # union schema)
                     evolve = True
             recomputed_src = self._as_events(touched).unionByName(events)
         recomputed = scd2_build(
@@ -268,61 +276,43 @@ class Scd2Sink:
                 .withColumn("hwm_seq", F.col("__h.s"))
                 .drop("__h")
             )
-        if scoped:
-            # keyed upsert (idempotent re-collapse — replay-safe); only the
-            # affected keys' buckets are rewritten. The recomputed versions
-            # carry exactly the affected keys, whose buckets were already
-            # collected above — pass them through so the merge skips its
-            # own touched-bucket action AND the source persist (r12: the
-            # bucketed live drain paid two extra driver actions a trigger).
-            #
-            # replace_keys fast path (r16): ``recomputed`` is by
-            # construction the COMPLETE re-collapsed version set for
-            # exactly the affected keys, and version counts are monotone
-            # non-decreasing under re-collapse (module docstring point 4),
-            # so no stale higher-version target row can exist outside the
-            # source — the full-outer MERGE on (key, version_n), which
-            # Spark can only run as a sort-merge join, is equivalent to
-            # dropping the affected keys' rows (broadcast anti-join on the
-            # batch's key set — the pruned dimension scan is never
-            # shuffled or sorted) and unioning the re-collapse in. Only
-            # taken when the target's physical schema already matches the
-            # recomputed frame (an evolving fold — first policy trigger,
-            # or a widened table folded without hwm tracking — keeps the
-            # schema-reconciling MERGE semantics).
-            rk = None
-            if (
-                not evolve
-                and tgt_cols is not None
-                and tgt_cols == set(recomputed.columns)
-            ):
-                rk = affected
-            merge_upsert_scoped(
-                spark,
-                self.table,
-                recomputed,
-                keys=[self.key_col, "version_n"],
-                parts=parts,
-                evolve_schema=evolve,
-                replace_keys=rk,
-            )
-            if self.rebucket_target_bytes is not None:
-                maybe_rebucket(spark, self.table, self.rebucket_target_bytes)
-            self._maybe_scheduled_rebuild(spark, late_detected)
-            return
-        if self.table.exists():
-            # merge against the FULL physical schema (scan), not read()'s
-            # declared-schema projection — a whole-table rewrite from a
-            # projected target would erase the hwm columns permanently
-            merged = merge_upsert(
-                self.table.scan(spark),
-                recomputed,
-                keys=[self.key_col, "version_n"],
-                evolve_schema=evolve,
-            )
-        else:
-            merged = recomputed
-        self.table.overwrite_atomic(merged)
+        # keyed upsert (idempotent re-collapse — replay-safe); only the
+        # affected keys' buckets are rewritten. The recomputed versions
+        # carry exactly the affected keys, whose buckets were already
+        # collected above — pass them through so the merge skips its own
+        # touched-bucket action AND the source persist.
+        #
+        # replace_keys fast path: ``recomputed`` is by construction the
+        # COMPLETE re-collapsed version set for exactly the affected keys,
+        # and version counts are monotone non-decreasing under re-collapse
+        # (module docstring point 4), so no stale higher-version target row
+        # can exist outside the source — the full-outer MERGE on
+        # (key, version_n), which Spark can only run as a sort-merge join,
+        # is equivalent to dropping the affected keys' rows (broadcast
+        # anti-join on the batch's key set — the pruned dimension scan is
+        # never shuffled or sorted) and unioning the re-collapse in. Only
+        # taken when the target's physical schema already matches the
+        # recomputed frame (an evolving fold — first policy trigger, or a
+        # widened table folded without hwm tracking — keeps the
+        # schema-reconciling MERGE semantics).
+        rk = None
+        if (
+            not evolve
+            and tgt_cols is not None
+            and tgt_cols == set(recomputed.columns)
+        ):
+            rk = affected
+        merge_upsert_scoped(
+            spark,
+            self.table,
+            recomputed,
+            keys=[self.key_col, "version_n"],
+            parts=parts,
+            evolve_schema=evolve,
+            replace_keys=rk,
+        )
+        if self.rebucket_target_bytes is not None:
+            maybe_rebucket(spark, self.table, self.rebucket_target_bytes)
         self._maybe_scheduled_rebuild(spark, late_detected)
 
     def _maybe_scheduled_rebuild(self, spark: SparkSession, late: bool) -> None:
@@ -379,28 +369,25 @@ class Scd2Sink:
                 .withColumn("hwm_seq", F.col("__h.s"))
                 .drop("__h")
             )
-        if self.table.partition_by == [PART_COL]:
-            # a rebuild rewrites everything by definition; re-derive the
-            # bucket layout so subsequent scoped folds keep pruning
-            meta = self.table.read_meta()
-            n = meta["n_buckets"] if meta else self.table.n_buckets
-            rebuilt = rebuilt.withColumn(
-                PART_COL, part_expr(self.key_col, n)
-            ).repartition(n, F.col(PART_COL))
-            self.table.overwrite_atomic(rebuilt)
-            # merge-preserving: overwrite_atomic just recorded the rewrite's
-            # measured total_bytes (and carried any evolved schema_json) —
-            # re-stamping the layout keys must not drop them
-            self.table.write_meta(
-                **{
-                    **(self.table.read_meta() or {}),
-                    "n_buckets": n,
-                    "part_col": PART_COL,
-                    "keys": [self.key_col, "version_n"],
-                }
-            )
-            return
+        # a rebuild rewrites everything by definition; re-derive the bucket
+        # layout so subsequent scoped folds keep pruning
+        meta = self.table.read_meta()
+        n = meta["n_buckets"] if meta else self.table.n_buckets
+        rebuilt = rebuilt.withColumn(
+            PART_COL, part_expr(self.key_col, n)
+        ).repartition(n, F.col(PART_COL))
         self.table.overwrite_atomic(rebuilt)
+        # merge-preserving: overwrite_atomic just recorded the rewrite's
+        # measured total_bytes (and carried any evolved schema_json) —
+        # re-stamping the layout keys must not drop them
+        self.table.write_meta(
+            **{
+                **(self.table.read_meta() or {}),
+                "n_buckets": n,
+                "part_col": PART_COL,
+                "keys": [self.key_col, "version_n"],
+            }
+        )
 
 
 def rebuild_scd2(

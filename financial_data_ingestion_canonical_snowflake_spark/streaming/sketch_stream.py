@@ -16,11 +16,9 @@ merge against a table bounded by groups x 2^b rows — never a re-scan of
 history. The distinct-count estimate reads off the table at any time via
 ``hll_estimate``.
 
-The register table is bounded by the hash space, so whole-table rewrite
-per trigger is cheap here; a hash-BUCKETED table
-(``partition_by=[merge.PART_COL]``) nevertheless folds bucket-scoped
-(keyed greatest() merge on (bucket, group) — idempotent under replay, no
-ledger needed), matching the fold shape of the corpus-sized sinks.
+The fold is bucket-scoped like every sink's (``merge.require_bucketed``):
+a keyed greatest() merge on (bucket, group) — idempotent under replay, no
+ledger needed.
 """
 
 from __future__ import annotations
@@ -30,8 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.merge import PART_COL, merge_upsert_scoped
-from ..operators.sketches import hll_estimate, hll_merge, hll_state
+from ..operators.merge import merge_upsert_scoped, require_bucketed
+from ..operators.sketches import hll_estimate, hll_state
 from ..operators.storage import ParquetTable
 
 
@@ -45,35 +43,23 @@ class HllSink:
         value_col: str,
         b: int = 8,
     ):
+        require_bucketed(table, "HllSink")
         self.table = table
         self.group_cols = list(group_cols)
         self.value_col = value_col
         self.b = b
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_state = hll_state(batch_df, self.group_cols, self.value_col, self.b)
-        if self.table.partition_by == [PART_COL]:
-            # register-keyed elementwise max — "bucket" leads the key list
-            # so the table hash-partitions on the register index (uniform)
-            # rather than a possibly-low-cardinality group column
-            merge_upsert_scoped(
-                spark,
-                self.table,
-                batch_state,
-                keys=["bucket", *self.group_cols],
-                merge_exprs={
-                    "r": lambda t, s: F.greatest(t, s).cast("int")
-                },
-            )
-            return
-        if self.table.exists():
-            merged = hll_merge(
-                [self.table.read(spark), batch_state], self.group_cols
-            )
-        else:
-            merged = batch_state
-        self.table.overwrite_atomic(merged)
+        # register-keyed elementwise max — "bucket" leads the key list so
+        # the table hash-partitions on the register index (uniform) rather
+        # than a possibly-low-cardinality group column
+        merge_upsert_scoped(
+            batch_df.sparkSession,
+            self.table,
+            hll_state(batch_df, self.group_cols, self.value_col, self.b),
+            keys=["bucket", *self.group_cols],
+            merge_exprs={"r": lambda t, s: F.greatest(t, s).cast("int")},
+        )
 
     def estimate(self, spark: SparkSession) -> DataFrame:
         """Current distinct-count estimate per group, straight off the

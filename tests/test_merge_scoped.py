@@ -21,6 +21,7 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
     merge_upsert,
     merge_upsert_scoped,
     part_expr,
+    stage_then_commit,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import ParquetTable
 
@@ -303,13 +304,79 @@ def test_staged_merge_abort_and_ordered_commit(spark, table, tmp_path):
         }
 
 
+def test_stage_then_commit_aborts_every_stage_on_any_failure(
+    spark, table, tmp_path
+):
+    """The multi-table fold protocol: one failing stage aborts every stage
+    that succeeded (no staged files left, both tables bit-untouched), and
+    when all stages succeed every table commits."""
+    other = ParquetTable(str(tmp_path / "other"), SCHEMA, [PART_COL], n_buckets=8)
+    for t in (table, other):
+        merge_upsert_scoped(spark, t, _df(spark, [("a", 1, "s1")]), keys=["k"])
+    before = {t.path: _snapshot(t.path) for t in (table, other)}
+    upd = _df(spark, [("a", 2, "s2"), ("b", 3, "s2")])
+
+    def stage(t):
+        return lambda: merge_upsert_scoped(
+            spark, t, upd, keys=["k"], stage_only=True
+        )
+
+    def boom():
+        raise RuntimeError("stage failed")
+
+    with pytest.raises(RuntimeError, match="stage failed"):
+        stage_then_commit(stage(table), boom)
+    for t in (table, other):
+        assert _snapshot(t.path) == before[t.path]
+    assert not [d for d in os.listdir(tmp_path) if ".tmp-" in d]
+
+    stage_then_commit(stage(table), stage(other))
+    for t in (table, other):
+        assert {r["k"]: r["v"] for r in t.read(spark).collect()} == {
+            "a": 2,
+            "b": 3,
+        }
+
+
+def test_manifest_commit_refuses_a_collected_staged_generation(spark, tmp_path):
+    """A commit landing between stage and commit garbage-collects the
+    still-unreferenced staged generation; the staged commit must then
+    raise and leave the table as that other commit left it, instead of
+    publishing a manifest that re-points nothing."""
+    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
+        ManifestTable,
+    )
+
+    t = ManifestTable(str(tmp_path / "m"), SCHEMA, [PART_COL], n_buckets=8)
+    merge_upsert_scoped(spark, t, _df(spark, [("a", 1, "s1")]), keys=["k"])
+    staged = merge_upsert_scoped(
+        spark, t, _df(spark, [("a", 2, "s2")]), keys=["k"], stage_only=True
+    )
+    t.append(
+        _df(spark, [("b", 3, "s3")]).withColumn(PART_COL, part_expr("k", 8))
+    )
+    rows = sorted(map(tuple, t.read(spark).collect()))
+    parts, meta = t._load_manifest()["parts"], t.read_meta()
+    with pytest.raises(FileNotFoundError, match="no longer exists"):
+        staged.commit()
+    assert sorted(map(tuple, t.read(spark).collect())) == rows
+    assert t._load_manifest()["parts"] == parts
+    assert t.read_meta() == meta
+
+
 def test_replace_keys_equals_merge(spark, table):
     """r16: the replace_keys fast path (broadcast anti-join + union) must
     equal the full-outer MERGE whenever the source is the complete state
     for its keys — here with the replace scope a PREFIX of the merge key
     (the SCD2 shape: all of a key's versions are replaced together)."""
-    seed = [("a", 1, "v1"), ("a", 2, "v1"), ("b", 1, "v1"), ("c", 1, "v1")]
-    upd = [("a", 1, "v2"), ("a", 2, "v2"), ("a", 3, "v2"), ("c", 1, "v2")]
+    seed = [
+        ("a", 1, "v1"), ("a", 2, "v1"), ("b", 1, "v1"), ("c", 1, "v1"),
+        (None, 1, "v1"),
+    ]
+    upd = [
+        ("a", 1, "v2"), ("a", 2, "v2"), ("a", 3, "v2"), ("c", 1, "v2"),
+        (None, 1, "v2"),
+    ]
     sch = "k string, version long, payload string"
     t_merge = ParquetTable(table.path + "_m", None, [PART_COL], n_buckets=8)
     t_repl = ParquetTable(table.path + "_r", None, [PART_COL], n_buckets=8)
@@ -326,9 +393,11 @@ def test_replace_keys_equals_merge(spark, table):
         keys=["k", "version"],
         replace_keys=src.select("k").distinct(),
     )
-    want = sorted(map(tuple, t_merge.read(spark).collect()))
-    got = sorted(map(tuple, t_repl.read(spark).collect()))
-    assert got == want and len(got) == 5  # a x3 (replaced), b x1 (kept), c x1
+    key = lambda r: tuple((v is None, v) for v in r)  # noqa: E731 — NULL-safe sort
+    want = sorted(map(tuple, t_merge.read(spark).collect()), key=key)
+    got = sorted(map(tuple, t_repl.read(spark).collect()), key=key)
+    # a x3 (replaced), b x1 (kept), c x1, NULL x1 (replaced null-safely)
+    assert got == want and len(got) == 6
     # matched-row semantics cannot ride along with a replacement
     with pytest.raises(AssertionError, match="whole-key replacement"):
         merge_upsert_scoped(

@@ -255,65 +255,73 @@ def test_exact_dedup_payload_downgrade_preserves_stored_payload(
     spark, tmp_path
 ):
     """The REVERSE restart (payload_cols dropped — config rollback) must
-    neither crash the fold nor erase stored payload values, on BOTH
-    layouts: the unspoken column is preserved on matched survivors."""
+    neither crash the fold nor erase stored payload values: the unspoken
+    column is preserved on matched survivors, and every core column still
+    equals the batch operator over the whole ingested union."""
     rows = [(10, "alpha text", "en"), (11, "beta text", "de")]
     more = [(12, "alpha text", "fr"), (20, "gamma text", "es")]
     cols = ["doc_id", "text", "lang"]
-    for layout in ("scoped", "flat"):
-        if layout == "scoped":
-            t = _bucketed(tmp_path, f"surv_{layout}")
-        else:
-            t = ParquetTable(str(tmp_path / f"surv_{layout}"))
-        up = ExactDedupSink(t, "doc_id", "text", payload_cols=["lang"])
-        up(spark.createDataFrame(rows, cols), 0)
+    up = ExactDedupSink(
+        _bucketed(tmp_path, "surv"), "doc_id", "text", payload_cols=["lang"]
+    )
+    up(spark.createDataFrame(rows, cols), 0)
 
-        # rollback restart: fresh table object, NO payload tracking
-        if layout == "scoped":
-            t2 = _bucketed(tmp_path, f"surv_{layout}")
-        else:
-            t2 = ParquetTable(str(tmp_path / f"surv_{layout}"))
-        down = ExactDedupSink(t2, "doc_id", "text")
-        down(spark.createDataFrame(more, cols), 1)
+    # rollback restart: fresh table object, NO payload tracking
+    t2 = _bucketed(tmp_path, "surv")
+    down = ExactDedupSink(t2, "doc_id", "text")
+    down(spark.createDataFrame(more, cols), 1)
 
-        full = ExactDedupSink(t2, "doc_id", "text", payload_cols=["lang"])
-        got = {
-            r["survivor_id"]: (r["dup_cnt"], r["lang"])
-            for r in full.survivors(spark).collect()
-        }
-        # folds applied, stored payload preserved (not nulled/erased);
-        # the downgraded software simply didn't speak to the column
-        assert got[10] == (2, "en")   # alpha: dup from doc 12 counted
-        assert got[11] == (1, "de")   # untouched survivor keeps payload
-        assert got[20][0] == 1        # new hash inserted by the downgrade
+    full = ExactDedupSink(t2, "doc_id", "text", payload_cols=["lang"])
+    survivors = full.survivors(spark).collect()
+    got = {r["survivor_id"]: (r["dup_cnt"], r["lang"]) for r in survivors}
+    # folds applied, stored payload preserved (not nulled/erased); the
+    # downgraded software simply didn't speak to the column
+    assert got[10] == (2, "en")   # alpha: dup from doc 12 counted
+    assert got[11] == (1, "de")   # untouched survivor keeps payload
+    assert got[20][0] == 1        # new hash inserted by the downgrade
+    core = ("content_hash", "survivor_id", "dup_cnt")
+    union = spark.createDataFrame(rows + more, cols)
+    assert sorted(tuple(r[c] for c in core) for r in survivors) == sorted(
+        tuple(r[c] for c in core)
+        for r in exact_dedup(union, "doc_id", "text").collect()
+    )
 
 
-def test_payload_downgrade_with_declared_core_schema_flat(spark, tmp_path):
+def test_payload_downgrade_with_declared_core_schema(spark, tmp_path):
     """The sharpest form of the rollback: the restart declares the CORE
-    SURVIVOR_SCHEMA explicitly over a payload-widened flat table. The
-    declared schema must stay a read-surface narrowing — the fold merges
-    against the full physical schema, so the stored payload survives the
-    whole-table rewrite."""
+    SURVIVOR_SCHEMA explicitly over a payload-widened table. The declared
+    schema must stay a read-surface narrowing — the fold merges against
+    the full physical schema, so the stored payload survives the fold."""
     from financial_data_ingestion_canonical_snowflake_spark.streaming.dedup_stream import (
         SURVIVOR_SCHEMA,
     )
 
     cols = ["doc_id", "text", "lang"]
-    t = ParquetTable(str(tmp_path / "surv_decl"))
-    up = ExactDedupSink(t, "doc_id", "text", payload_cols=["lang"])
-    up(spark.createDataFrame([(10, "alpha", "en"), (11, "beta", "de")], cols), 0)
+    rows = [(10, "alpha", "en"), (11, "beta", "de")]
+    more = [(20, "gamma", "es")]
+    up = ExactDedupSink(
+        _bucketed(tmp_path, "surv_decl"), "doc_id", "text", payload_cols=["lang"]
+    )
+    up(spark.createDataFrame(rows, cols), 0)
 
-    t2 = ParquetTable(str(tmp_path / "surv_decl"), SURVIVOR_SCHEMA)
+    t2 = ParquetTable(
+        str(tmp_path / "surv_decl"), SURVIVOR_SCHEMA, [PART_COL], n_buckets=8
+    )
     down = ExactDedupSink(t2, "doc_id", "text")
-    down(spark.createDataFrame([(20, "gamma", "es")], cols), 1)
+    down(spark.createDataFrame(more, cols), 1)
 
     full = ExactDedupSink(
-        ParquetTable(str(tmp_path / "surv_decl")),
-        "doc_id",
-        "text",
-        payload_cols=["lang"],
+        _bucketed(tmp_path, "surv_decl"), "doc_id", "text", payload_cols=["lang"]
     )
-    got = {
-        r["survivor_id"]: r["lang"] for r in full.survivors(spark).collect()
+    survivors = full.survivors(spark).collect()
+    assert {r["survivor_id"]: r["lang"] for r in survivors} == {
+        10: "en",
+        11: "de",
+        20: None,
     }
-    assert got == {10: "en", 11: "de", 20: None}
+    core = ("content_hash", "survivor_id", "dup_cnt")
+    union = spark.createDataFrame(rows + more, cols)
+    assert sorted(tuple(r[c] for c in core) for r in survivors) == sorted(
+        tuple(r[c] for c in core)
+        for r in exact_dedup(union, "doc_id", "text").collect()
+    )

@@ -7,9 +7,6 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.sketches impor
     hll_ndv,
     hll_state,
 )
-from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
-    ParquetTable,
-)
 from financial_data_ingestion_canonical_snowflake_spark.plans.registry import table
 from financial_data_ingestion_canonical_snowflake_spark.streaming.sketch_stream import (
     HllSink,
@@ -17,6 +14,7 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.sketch_stream 
 )
 
 from .conftest import SF_SMOKE
+from .helpers import bucketed_table
 
 
 def _registers(df):
@@ -31,7 +29,7 @@ def test_stream_hll_equals_batch_and_survives_restart(spark, tmp_path):
     events.filter("event_id % 3 = 0").coalesce(1).write.mode("append").parquet(src)
     events.filter("event_id % 3 = 1").coalesce(1).write.mode("append").parquet(src)
 
-    t = ParquetTable(str(tmp_path / "hll"))
+    t = bucketed_table(tmp_path, "hll")
     ckpt = str(tmp_path / "ckpt")
     q = stream_hll_ndv(spark, src, t, ckpt, max_files_per_trigger=1)
     q.awaitTermination(120)
@@ -66,7 +64,7 @@ def test_stream_hll_replay_idempotent(spark, tmp_path):
     """Re-applying a micro-batch (the at-least-once crash window) cannot
     change the registers — max-merge is idempotent."""
     events = table(spark, SF_SMOKE, "events").filter("event_id < 500")
-    t = ParquetTable(str(tmp_path / "hll"))
+    t = bucketed_table(tmp_path, "hll")
     sink = HllSink(t, ["event_type"], "user_id")
     sink(events, 0)
     first = _registers(t.read(spark))

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from financial_data_ingestion_canonical_snowflake_spark.operators.merge import PART_COL
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import ParquetTable
 from financial_data_ingestion_canonical_snowflake_spark.plans.registry import table
 from financial_data_ingestion_canonical_snowflake_spark.streaming.ingest import (
@@ -111,7 +112,7 @@ def test_foreach_batch_merge_upserts_incrementally(spark, events_dir, tmp_path):
     )
     updated.write.parquet(b2_dir)
 
-    target = ParquetTable(f"{tmp_path}/tbl", schema=src.schema)
+    target = ParquetTable(f"{tmp_path}/tbl", src.schema, [PART_COL], 8)
     sink = MergeSink(target, keys=["event_id"], dedupe_order=[F.col("ts").desc()])
     stream = file_stream(
         spark, f"{tmp_path}/in/*", schema=src.schema, max_files_per_trigger=1
@@ -172,7 +173,9 @@ def test_stream_raw_to_canonical_matches_batch(spark, tmp_path):
     )
 
     # one micro-batch == batch pipeline exactly (incl. DUPLICATE_TXN flags)
-    target = ParquetTable(f"{tmp_path}/stream_can_txn", schema=schemas.CAN_TXN)
+    target = ParquetTable(
+        f"{tmp_path}/stream_can_txn", schemas.CAN_TXN, [PART_COL], 8
+    )
     q = stream_raw_to_canonical(
         spark,
         pipe.raw_tables["JSON"].path,
@@ -195,7 +198,9 @@ def test_stream_raw_to_canonical_matches_batch(spark, tmp_path):
         .filter(F.array_contains("anomaly_codes", "DUPLICATE_TXN"))
         .collect()
     }
-    target2 = ParquetTable(f"{tmp_path}/stream_can_txn2", schema=schemas.CAN_TXN)
+    target2 = ParquetTable(
+        f"{tmp_path}/stream_can_txn2", schemas.CAN_TXN, [PART_COL], 8
+    )
     q2 = stream_raw_to_canonical(
         spark,
         pipe.raw_tables["JSON"].path,
@@ -290,7 +295,7 @@ def test_stream_raw_csv_to_canonical_matches_batch(spark, tmp_path):
         )
     )
 
-    target = ParquetTable(f"{tmp_path}/stream_csv", schema=schemas.CAN_TXN)
+    target = ParquetTable(f"{tmp_path}/stream_csv", schemas.CAN_TXN, [PART_COL], 8)
     q = stream_raw_to_canonical(
         spark,
         pipe.raw_tables["CSV"].path,
@@ -455,9 +460,13 @@ def test_stream_full_canonical_chain_matches_batch(spark, tmp_path):
     want_anom = _json_rows(pipe.can_txn_anomaly)
     assert want_anom, "fixtures must exercise anomalies"
 
-    txn = ParquetTable(f"{tmp_path}/s_can_txn", schema=schemas.CAN_TXN)
-    line = ParquetTable(f"{tmp_path}/s_can_line", schema=schemas.CAN_TXN_LINE)
-    anom = ParquetTable(f"{tmp_path}/s_can_anom", schema=schemas.CAN_TXN_ANOMALY)
+    txn = ParquetTable(f"{tmp_path}/s_can_txn", schemas.CAN_TXN, [PART_COL], 8)
+    line = ParquetTable(
+        f"{tmp_path}/s_can_line", schemas.CAN_TXN_LINE, [PART_COL], 8
+    )
+    anom = ParquetTable(
+        f"{tmp_path}/s_can_anom", schemas.CAN_TXN_ANOMALY, [PART_COL], 8
+    )
     q = stream_raw_to_full_canonical(
         spark,
         pipe.raw_tables["JSON"].path,

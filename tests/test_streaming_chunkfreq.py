@@ -14,9 +14,6 @@ from financial_data_ingestion_canonical_snowflake_spark.functions.scalars import
 from financial_data_ingestion_canonical_snowflake_spark.functions.text import (
     cdc_chunk_documents,
 )
-from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
-    ParquetTable,
-)
 from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
     remove_shared_spans,
 )
@@ -24,6 +21,8 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.chunk_freq_str
     CdcChunkSink,
     stream_cdc_chunks,
 )
+
+from .helpers import bucketed_table
 
 _BOILER = " ".join(f"boiler{i}" for i in range(60))
 _BATCH_1 = [
@@ -73,8 +72,8 @@ def _batch_freq(chunks_df):
 
 def test_stream_chunk_freq_matches_batch_across_restart(spark, tmp_path):
     src = str(tmp_path / "docs_src")
-    chunks_t = ParquetTable(str(tmp_path / "chunks"))
-    freq_t = ParquetTable(str(tmp_path / "freq"))
+    chunks_t = bucketed_table(tmp_path, "chunks")
+    freq_t = bucketed_table(tmp_path, "freq")
     ckpt = str(tmp_path / "ckpt")
 
     _write_batch(spark, src, _BATCH_1, 1)
@@ -107,8 +106,8 @@ def test_stream_chunk_freq_matches_batch_across_restart(spark, tmp_path):
 def test_replayed_batch_folds_once(spark, tmp_path):
     """At-least-once delivery: re-invoking the sink with an already-applied
     batch_id must change NEITHER table (ledger skip + keyed chunk merge)."""
-    chunks_t = ParquetTable(str(tmp_path / "chunks"))
-    freq_t = ParquetTable(str(tmp_path / "freq"))
+    chunks_t = bucketed_table(tmp_path, "chunks")
+    freq_t = bucketed_table(tmp_path, "freq")
     sink = CdcChunkSink(chunks_t, freq_t)
 
     b1 = spark.createDataFrame(_BATCH_1, ["doc_id", "text"])
@@ -134,8 +133,8 @@ def test_span_removal_from_maintained_state_equals_batch(spark, tmp_path):
     """remove_shared_spans(chunks=state, freq=state) over the maintained
     tables == the from-scratch batch operator over the ingested union —
     span removal on an incrementally-ingested corpus without a rechunk."""
-    chunks_t = ParquetTable(str(tmp_path / "chunks"))
-    freq_t = ParquetTable(str(tmp_path / "freq"))
+    chunks_t = bucketed_table(tmp_path, "chunks")
+    freq_t = bucketed_table(tmp_path, "freq")
     sink = CdcChunkSink(chunks_t, freq_t)
     sink(spark.createDataFrame(_BATCH_1, ["doc_id", "text"]), 0)
     sink(spark.createDataFrame(_BATCH_2, ["doc_id", "text"]), 1)

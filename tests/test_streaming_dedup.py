@@ -8,15 +8,15 @@ import os
 
 from pyspark.sql import functions as F
 
-from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
-    ParquetTable,
-)
 from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
     exact_dedup,
 )
 from financial_data_ingestion_canonical_snowflake_spark.streaming.dedup_stream import (
+    ExactDedupSink,
     stream_exact_dedup,
 )
+
+from .helpers import bucketed_table
 
 # ids increase with arrival order so the batch min-id survivor equals the
 # streaming first-seen survivor
@@ -41,7 +41,7 @@ def _sorted_rows(df):
 
 def test_stream_dedup_matches_batch_over_union(spark, tmp_path):
     src = str(tmp_path / "docs_src")
-    table = ParquetTable(str(tmp_path / "survivors"))
+    table = bucketed_table(tmp_path, "survivors")
     ckpt = str(tmp_path / "ckpt")
 
     _write_batch(spark, src, _BATCH_1, 1)
@@ -50,11 +50,12 @@ def test_stream_dedup_matches_batch_over_union(spark, tmp_path):
         spark, src, table, ckpt, max_files_per_trigger=1, available_now=True
     )
     q.awaitTermination(120)
+    survivors = ExactDedupSink(table, "doc_id", "text").survivors
 
     all_docs = spark.createDataFrame(
         _BATCH_1 + _BATCH_2, ["doc_id", "text"]
     )
-    assert _sorted_rows(table.read(spark)) == _sorted_rows(
+    assert _sorted_rows(survivors(spark)) == _sorted_rows(
         exact_dedup(all_docs, "doc_id", "text")
     )
 
@@ -68,9 +69,9 @@ def test_stream_dedup_matches_batch_over_union(spark, tmp_path):
         _BATCH_1 + _BATCH_2 + _BATCH_3, ["doc_id", "text"]
     )
     expected = exact_dedup(all_docs, "doc_id", "text")
-    assert _sorted_rows(table.read(spark)) == _sorted_rows(expected)
+    assert _sorted_rows(survivors(spark)) == _sorted_rows(expected)
     # cross-batch duplicate counted additively
-    row = {r["survivor_id"]: r for r in table.read(spark).collect()}
+    row = {r["survivor_id"]: r for r in survivors(spark).collect()}
     assert row[1]["dup_cnt"] == 3  # "alpha beta" in batches 1 (x2) and 2
     assert row[5]["dup_cnt"] == 2  # "delta" across batches 2 and 3
 
@@ -79,7 +80,7 @@ def test_stream_dedup_backfilled_smaller_id_becomes_survivor(spark, tmp_path):
     """A later batch backfilling a SMALLER doc_id must take over as
     survivor (least-merge), keeping stream == batch for out-of-order ids."""
     src = str(tmp_path / "docs_src")
-    table = ParquetTable(str(tmp_path / "survivors"))
+    table = bucketed_table(tmp_path, "survivors")
     ckpt = str(tmp_path / "ckpt")
 
     _write_batch(spark, src, [(10, "alpha")], 1)
@@ -88,6 +89,6 @@ def test_stream_dedup_backfilled_smaller_id_becomes_survivor(spark, tmp_path):
         spark, src, table, ckpt, max_files_per_trigger=1, available_now=True
     )
     q.awaitTermination(120)
-    rows = table.read(spark).collect()
+    rows = ExactDedupSink(table, "doc_id", "text").survivors(spark).collect()
     assert len(rows) == 1
     assert rows[0]["survivor_id"] == 3 and rows[0]["dup_cnt"] == 2

@@ -11,14 +11,13 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.importance imp
     hashed_ngram_features,
     importance_weights,
 )
-from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
-    ParquetTable,
-)
 from financial_data_ingestion_canonical_snowflake_spark.streaming.importance_stream import (
     ImportanceFeatureSink,
     scores_against,
     stream_importance_features,
 )
+
+from .helpers import bucketed_table
 
 _BATCH_1 = [(1, "the quick brown fox"), (2, "lazy dog sleeps here")]
 _BATCH_2 = [(3, "the quick red fox"), (4, "zzz qqq www eee")]
@@ -46,7 +45,7 @@ def _counts(df):
 
 def test_stream_features_match_batch_and_survive_restart(spark, tmp_path):
     src = str(tmp_path / "docs_src")
-    table = ParquetTable(str(tmp_path / "features"))
+    table = bucketed_table(tmp_path, "features")
     ckpt = str(tmp_path / "ckpt")
 
     _write_batch(spark, src, _BATCH_1)
@@ -75,7 +74,7 @@ def test_replayed_batch_does_not_double_count(spark, tmp_path):
     """foreachBatch is at-least-once; the in-table ledger row must make a
     replayed (batch_id, data) delivery a no-op instead of doubling every
     count."""
-    table = ParquetTable(str(tmp_path / "features_replay"))
+    table = bucketed_table(tmp_path, "features_replay")
     sink = ImportanceFeatureSink(table)
     b1 = spark.createDataFrame(_BATCH_1, "doc_id long, text string")
     b2 = spark.createDataFrame(_BATCH_2, "doc_id long, text string")
@@ -95,8 +94,8 @@ def test_scores_against_maintained_tables_match_batch_operator(spark, tmp_path):
     raw_rows = _BATCH_1 + _BATCH_2
     tgt_rows = [(10, "the quick brown fox"), (11, "the quick brown dog")]
 
-    raw_t = ParquetTable(str(tmp_path / "raw_feats"))
-    tgt_t = ParquetTable(str(tmp_path / "tgt_feats"))
+    raw_t = bucketed_table(tmp_path, "raw_feats")
+    tgt_t = bucketed_table(tmp_path, "tgt_feats")
     raw_sink = ImportanceFeatureSink(raw_t)
     tgt_sink = ImportanceFeatureSink(tgt_t)
     raw_sink(spark.createDataFrame(_BATCH_1, "doc_id long, text string"), 0)

@@ -21,6 +21,8 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.ivf_stream imp
     stream_ivf_index,
 )
 
+from .helpers import bucketed_table
+
 _DIM = 8
 
 
@@ -54,7 +56,7 @@ def _index_rows(df):
 
 def test_stream_ivf_index_matches_batch_across_restart(spark, tmp_path):
     src = str(tmp_path / "emb_src")
-    index_t = ParquetTable(str(tmp_path / "index"))
+    index_t = bucketed_table(tmp_path, "index")
     cents_t = ParquetTable(str(tmp_path / "cents"))
     ckpt = str(tmp_path / "ckpt")
 
@@ -96,7 +98,7 @@ def test_stream_ivf_index_matches_batch_across_restart(spark, tmp_path):
 def test_replay_and_reingest_fold_idempotently(spark, tmp_path):
     """A replayed batch is a no-op (keyed merge); a RE-INGESTED vector
     updates its embedding + assignment instead of duplicating."""
-    index_t = ParquetTable(str(tmp_path / "index"))
+    index_t = bucketed_table(tmp_path, "index")
     cents_t = ParquetTable(str(tmp_path / "cents"))
     cents_t.overwrite_atomic(spark.createDataFrame(_emb_rows(range(4)), _SCHEMA))
     sink = IvfIndexSink(index_t, cents_t)
@@ -116,7 +118,7 @@ def test_replay_and_reingest_fold_idempotently(spark, tmp_path):
 
 
 def test_topk_from_maintained_index_equals_from_scratch(spark, tmp_path):
-    index_t = ParquetTable(str(tmp_path / "index"))
+    index_t = bucketed_table(tmp_path, "index")
     cents_t = ParquetTable(str(tmp_path / "cents"))
     cents = spark.createDataFrame(_emb_rows(range(6)), _SCHEMA)
     cents_t.overwrite_atomic(cents)

@@ -4,15 +4,14 @@ across micro-batches and a checkpoint restart."""
 
 from __future__ import annotations
 
-from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
-    ParquetTable,
-)
 from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
     minhash_lsh_pairs,
 )
 from financial_data_ingestion_canonical_snowflake_spark.streaming.dedup_stream import (
     stream_minhash_dedup,
 )
+
+from .helpers import bucketed_table
 
 _BASE = [
     "the quick brown fox jumps over the lazy dog near the river bank",
@@ -36,8 +35,8 @@ def _rows(df):
 
 def test_stream_minhash_pairs_match_full_selfjoin(spark, tmp_path):
     src = str(tmp_path / "docs_src")
-    sig_t = ParquetTable(str(tmp_path / "sigs"))
-    pair_t = ParquetTable(str(tmp_path / "pairs"))
+    sig_t = bucketed_table(tmp_path, "sigs")
+    pair_t = bucketed_table(tmp_path, "pairs")
     ckpt = str(tmp_path / "ckpt")
 
     for rows in _BATCHES[:2]:

@@ -7,6 +7,9 @@ from __future__ import annotations
 import datetime as dt
 
 from financial_data_ingestion_canonical_snowflake_spark.operators.scd import scd2_build
+from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
+    PART_COL,
+)
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
     ParquetTable,
 )
@@ -15,6 +18,8 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.scd2_stream im
     rebuild_scd2,
     stream_scd2,
 )
+
+from .helpers import bucketed_table
 
 _T0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
 
@@ -42,7 +47,7 @@ def _sorted_rows(df):
 
 def test_stream_scd2_matches_batch_and_survives_restart(spark, tmp_path):
     src = str(tmp_path / "events_src")
-    table = ParquetTable(str(tmp_path / "scd2"))
+    table = bucketed_table(tmp_path, "scd2")
     ckpt = str(tmp_path / "ckpt")
 
     _write_batch(spark, src, _BATCH_1)
@@ -82,7 +87,7 @@ def test_stream_scd2_rebuild_repairs_late_data_coarsening(spark, tmp_path):
     repeat that ended the run is gone), and rebuild_scd2 over the retained
     event log restores the exact batch scd2_build history."""
     src = str(tmp_path / "events_src")
-    table = ParquetTable(str(tmp_path / "scd2"))
+    table = bucketed_table(tmp_path, "scd2")
     sink = Scd2Sink(table, "user_id", "event_type", "ts", "event_id")
 
     # batch 1 collapses user 1 to ONE 'a' run [0, inf); batch 2 then lands
@@ -124,7 +129,7 @@ def test_stream_scd2_replayed_batch_is_idempotent(spark, tmp_path):
     """Re-applying a micro-batch over the already-folded table (the
     at-least-once crash window) recomputes identical versions."""
     src = str(tmp_path / "events_src")
-    table = ParquetTable(str(tmp_path / "scd2"))
+    table = bucketed_table(tmp_path, "scd2")
     sink = Scd2Sink(table, "user_id", "event_type", "ts", "event_id")
 
     b1 = spark.createDataFrame(_BATCH_1, _SCHEMA)
@@ -147,7 +152,7 @@ def test_rebuild_policy_auto_repairs_late_data(spark, tmp_path):
     )
 
     src = str(tmp_path / "events_src")
-    table = ParquetTable(str(tmp_path / "scd2"))
+    table = bucketed_table(tmp_path, "scd2")
     ckpt = str(tmp_path / "ckpt")
     pol = RebuildPolicy(source_dir=src)
 
@@ -196,7 +201,7 @@ def test_rebuild_policy_cadence_bound(spark, tmp_path):
     )
 
     src = str(tmp_path / "events_src")
-    table = ParquetTable(str(tmp_path / "scd2"))
+    table = bucketed_table(tmp_path, "scd2")
     pol = RebuildPolicy(
         source_dir=src, every_n_triggers=2, on_late_events=False
     )
@@ -242,7 +247,9 @@ def test_rebuild_policy_works_under_declared_schema(spark, tmp_path):
             T.StructField("eff_from_seq", T.LongType()),
         ]
     )
-    table = ParquetTable(str(tmp_path / "scd2"), schema=declared)
+    table = ParquetTable(
+        str(tmp_path / "scd2"), declared, [PART_COL], n_buckets=8
+    )
     pol = RebuildPolicy(source_dir=src)
     sink = Scd2Sink(
         table, "user_id", "event_type", "ts", "event_id", rebuild_policy=pol
@@ -274,10 +281,6 @@ def test_scd2_sink_on_manifest_table(spark, tmp_path):
     from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
         ManifestTable,
     )
-    from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
-        PART_COL,
-    )
-
     table = ManifestTable(
         str(tmp_path / "scd2_m"), partition_by=[PART_COL], n_buckets=4
     )

@@ -1,14 +1,15 @@
 """Bucket-scoped streaming state folds (VERDICT r11 next-step #1).
 
-Every stateful sink accepts a hash-BUCKETED state table
-(``partition_by=[merge.PART_COL]``) and then folds each micro-batch with
+Every stateful sink folds into a hash-BUCKETED state table
+(``partition_by=[merge.PART_COL]``, the only layout the sinks accept) with
 bucket-scoped I/O: only the buckets the batch touches are read and
 rewritten — the reference's MERGE-touches-matched-rows economics
 (sql/05_merge_canonical.sql:6-53) on the streaming path. These tests
 prove, per sink:
 
+- every sink constructor refuses an unbucketed table;
 - stream == batch: the scoped-fold state equals the batch operator over
-  the ingested union (and equals the whole-table sink's state);
+  the whole ingested union;
 - untouched buckets byte-identical: a trigger leaves every bucket it
   didn't touch with bit-identical files (the test_merge_scoped pattern);
 - replay safety: re-invoking with an applied batch_id changes nothing —
@@ -25,10 +26,20 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from financial_data_ingestion_canonical_snowflake_spark.functions.scalars import (
+    md5_long,
+)
+from financial_data_ingestion_canonical_snowflake_spark.functions.text import (
+    cdc_chunk_documents,
+)
+from financial_data_ingestion_canonical_snowflake_spark.operators.importance import (
+    hashed_ngram_features,
+)
 from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
     PART_COL,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.sketches import (
+    hll_ndv,
     hll_state,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.similarity import (
@@ -55,8 +66,14 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.dedup_stream i
 from financial_data_ingestion_canonical_snowflake_spark.streaming.importance_stream import (
     ImportanceFeatureSink,
 )
+from financial_data_ingestion_canonical_snowflake_spark.streaming.ingest import (
+    MergeSink,
+)
 from financial_data_ingestion_canonical_snowflake_spark.streaming.ivf_stream import (
     IvfIndexSink,
+)
+from financial_data_ingestion_canonical_snowflake_spark.streaming.pipeline_stream import (
+    FullCanonicalSink,
 )
 from financial_data_ingestion_canonical_snowflake_spark.streaming.scd2_stream import (
     Scd2Sink,
@@ -108,6 +125,36 @@ def _touched(table_path: str, before: dict[str, str]) -> set[str]:
         for p in set(before) | set(after)
         if before.get(p) != after.get(p)
     }
+
+
+_SINKS = {
+    "exact_dedup": lambda t, b: ExactDedupSink(t, "doc_id", "text"),
+    "minhash_sigs": lambda t, b: MinHashLshDedupSink(t, b, "doc_id", "text"),
+    "minhash_pairs": lambda t, b: MinHashLshDedupSink(b, t, "doc_id", "text"),
+    "cdc_chunks": lambda t, b: CdcChunkSink(t, b),
+    "cdc_freq": lambda t, b: CdcChunkSink(b, t),
+    "importance": lambda t, b: ImportanceFeatureSink(t),
+    "ivf_index": lambda t, b: IvfIndexSink(t, b),
+    "hll": lambda t, b: HllSink(t, ["event_type"], "user_id"),
+    "merge": lambda t, b: MergeSink(t, keys=["k"]),
+    "scd2": lambda t, b: Scd2Sink(t, "user_id", "event_type", "ts", "event_id"),
+    "full_canonical": lambda t, b: FullCanonicalSink(t, b, b),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_SINKS))
+def test_sink_constructors_refuse_unbucketed_tables(tmp_path, sink):
+    """An unpartitioned (or otherwise partitioned) state table cannot be
+    handed to any sink: construction raises, before any trigger runs. The
+    sink's other tables are bucketed, so the refusal is about the one
+    under test."""
+    ok = _bucketed(tmp_path, "ok")
+    for bad in (
+        ParquetTable(str(tmp_path / "plain")),
+        ParquetTable(str(tmp_path / "by_day"), partition_by=["load_date"]),
+    ):
+        with pytest.raises(ValueError, match="must be hash-bucketed"):
+            _SINKS[sink](bad, ok)
 
 
 DOCS_1 = [(10, "aa bb cc"), (11, "dd ee ff"), (12, "aa bb cc")]
@@ -185,6 +232,8 @@ def test_exact_dedup_scoped_via_real_stream(spark, tmp_path):
 
 
 def test_minhash_scoped_equals_whole_table(spark, tmp_path):
+    """Scoped pair state == the batch LSH self-join over the whole
+    ingested union; keyed folds make replays no-ops."""
     body = " ".join(f"w{i}" for i in range(40))
     docs_a = [(i, body + f" tail{i}") for i in range(6)]
     docs_b = [(i + 6, body + f" tail{i + 6}") for i in range(4)]
@@ -221,22 +270,25 @@ def test_minhash_scoped_equals_whole_table(spark, tmp_path):
 
 
 def test_importance_scoped_matches_whole_table_and_replays(spark, tmp_path):
+    """Scoped feature counts == the batch count table over the whole
+    ingested union; replays are per-bucket-ledger no-ops."""
     docs_a = [(1, "aa bb cc dd"), (2, "bb cc dd ee")]
     docs_b = [(3, "cc dd ee ff"), (4, "zz yy xx ww")]
-    flat_t = ParquetTable(str(tmp_path / "flat"))
     buck_t = _bucketed(tmp_path, "bucketed")
-    flat = ImportanceFeatureSink(flat_t, hash_bits=8)
     buck = ImportanceFeatureSink(buck_t, hash_bits=8)
-    for sink in (flat, buck):
-        sink(spark.createDataFrame(docs_a, ["doc_id", "text"]), 0)
+    buck(spark.createDataFrame(docs_a, ["doc_id", "text"]), 0)
     before = _snapshot(buck_t.path)
-    for sink in (flat, buck):
-        sink(spark.createDataFrame(docs_b, ["doc_id", "text"]), 1)
+    buck(spark.createDataFrame(docs_b, ["doc_id", "text"]), 1)
     touched = _touched(buck_t.path, before)
     _assert_untouched_buckets_identical(before, _snapshot(buck_t.path), touched)
 
+    union = spark.createDataFrame(docs_a + docs_b, ["doc_id", "text"])
     want = sorted(
-        tuple(r) for r in flat.feature_table(spark).collect()
+        tuple(r)
+        for r in hashed_ngram_features(union, "doc_id", "text", hash_bits=8)
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .collect()
     )
     got = sorted(tuple(r) for r in buck.feature_table(spark).collect())
     assert got == want and len(got) > 0
@@ -253,79 +305,95 @@ CH_1 = [(1, _BOILER + " " + " ".join(f"alpha{i}" for i in range(40)))]
 CH_2 = [(2, _BOILER), (3, " ".join(f"beta{i}" for i in range(50)))]
 
 
-def test_chunkfreq_scoped_matches_whole_table_and_replays(spark, tmp_path):
-    flat = CdcChunkSink(
-        ParquetTable(str(tmp_path / "fc")), ParquetTable(str(tmp_path / "ff"))
+def _chunk_state(spark, rows):
+    """Batch twin of CdcChunkSink's two tables over ``rows``: the sorted
+    chunk rows and (chunk_hash, doc_freq) rows."""
+    chunks = cdc_chunk_documents(
+        spark.createDataFrame(rows, ["doc_id", "text"]), "doc_id", "text",
+        divisor=8,
+    ).withColumn("chunk_hash", md5_long(F.lower(F.col("chunk_text"))))
+    freq = (
+        chunks.select("chunk_hash", "doc_id")
+        .distinct()
+        .groupBy("chunk_hash")
+        .agg(F.count(F.lit(1)).cast("long").alias("doc_freq"))
     )
+    return {"chunks": _chunk_rows(chunks), "freq": _freq_rows(freq)}
+
+
+def _chunk_rows(df):
+    return sorted(
+        tuple(r[c] for c in ("doc_id", "chunk_idx", "chunk_text", "n_tokens", "chunk_hash"))
+        for r in df.collect()
+    )
+
+
+def _freq_rows(df):
+    return sorted((r["chunk_hash"], r["doc_freq"]) for r in df.collect())
+
+
+def test_chunkfreq_scoped_matches_whole_table_and_replays(spark, tmp_path):
+    """Both maintained tables == the batch rechunk and frequency count over
+    the whole ingested union, before and after replays; the additive freq
+    fold is a byte-level no-op under replay."""
     buck = CdcChunkSink(
         _bucketed(tmp_path, "bc"), _bucketed(tmp_path, "bf")
     )
-    for sink in (flat, buck):
-        sink(spark.createDataFrame(CH_1, ["doc_id", "text"]), 0)
+    buck(spark.createDataFrame(CH_1, ["doc_id", "text"]), 0)
     before = _snapshot(buck.freq_table.path)
-    for sink in (flat, buck):
-        sink(spark.createDataFrame(CH_2, ["doc_id", "text"]), 1)
+    buck(spark.createDataFrame(CH_2, ["doc_id", "text"]), 1)
     touched = _touched(buck.freq_table.path, before)
     _assert_untouched_buckets_identical(
         before, _snapshot(buck.freq_table.path), touched
     )
+    want = _chunk_state(spark, CH_1 + CH_2)
+    got = {
+        "chunks": _chunk_rows(buck.chunks(spark)),
+        "freq": _freq_rows(buck.freq(spark)),
+    }
     for get in ("chunks", "freq"):
-        want = sorted(
-            tuple(r) for r in getattr(flat, get)(spark).collect()
-        )
-        got = sorted(tuple(r) for r in getattr(buck, get)(spark).collect())
-        assert got == want and len(got) > 0, get
+        assert got[get] == want[get] and len(got[get]) > 0, get
 
-    state_c = _snapshot(buck.chunks_table.path)
     state_f = _snapshot(buck.freq_table.path)
     buck(spark.createDataFrame(CH_2, ["doc_id", "text"]), 1)  # replay
     buck(spark.createDataFrame(CH_1, ["doc_id", "text"]), 0)  # stale replay
     assert _snapshot(buck.freq_table.path) == state_f
     # the chunk re-merge is a semantic no-op (keyed, same values)
-    assert sorted(tuple(r) for r in buck.chunks(spark).collect()) == sorted(
-        tuple(r) for r in flat.chunks(spark).collect()
-    )
-    del state_c
+    assert _chunk_rows(buck.chunks(spark)) == want["chunks"]
 
 
 def test_chunkfreq_reingest_guard_fails_loudly(spark, tmp_path):
     """ADVICE r11: a document re-ingested under the same id in a LATER
-    batch must raise, not silently corrupt the additive doc_freq state —
-    in both layouts. Replays of the SAME batch stay benign."""
-    for mk in (
-        lambda: CdcChunkSink(
-            ParquetTable(str(tmp_path / "gc")), ParquetTable(str(tmp_path / "gf"))
-        ),
-        lambda: CdcChunkSink(_bucketed(tmp_path, "gbc"), _bucketed(tmp_path, "gbf")),
-    ):
-        sink = mk()
-        sink(spark.createDataFrame(CH_1, ["doc_id", "text"]), 0)
-        with pytest.raises(ValueError, match="already ingested"):
-            sink(
-                spark.createDataFrame([(1, "revised text body")], ["doc_id", "text"]),
-                1,
-            )
+    batch must raise, not silently corrupt the additive doc_freq state.
+    Replays of the SAME batch stay benign."""
+    sink = CdcChunkSink(_bucketed(tmp_path, "gbc"), _bucketed(tmp_path, "gbf"))
+    sink(spark.createDataFrame(CH_1, ["doc_id", "text"]), 0)
+    with pytest.raises(ValueError, match="already ingested"):
+        sink(
+            spark.createDataFrame([(1, "revised text body")], ["doc_id", "text"]),
+            1,
+        )
 
 
 def test_hll_scoped_matches_whole_table(spark, tmp_path):
+    """Scoped registers == batch hll_state over the whole ingested union,
+    and the estimate read off them == the batch one-call estimate; the
+    max fold is replay-idempotent."""
     ev_a = [(f"t{i % 3}", i) for i in range(200)]
     ev_b = [(f"t{i % 3}", i + 150) for i in range(200)]
-    flat_t = ParquetTable(str(tmp_path / "hf"))
     buck_t = _bucketed(tmp_path, "hb")
-    flat = HllSink(flat_t, ["event_type"], "user_id", b=6)
     buck = HllSink(buck_t, ["event_type"], "user_id", b=6)
-    for sink in (flat, buck):
-        sink(spark.createDataFrame(ev_a, ["event_type", "user_id"]), 0)
+    buck(spark.createDataFrame(ev_a, ["event_type", "user_id"]), 0)
     before = _snapshot(buck_t.path)
-    for sink in (flat, buck):
-        sink(spark.createDataFrame(ev_b, ["event_type", "user_id"]), 1)
+    buck(spark.createDataFrame(ev_b, ["event_type", "user_id"]), 1)
     touched = _touched(buck_t.path, before)
     _assert_untouched_buckets_identical(before, _snapshot(buck_t.path), touched)
-    want = sorted(tuple(r) for r in flat.estimate(spark).collect())
+    union = spark.createDataFrame(ev_a + ev_b, ["event_type", "user_id"])
+    want = sorted(
+        tuple(r) for r in hll_ndv(union, ["event_type"], "user_id", 6).collect()
+    )
     got = sorted(tuple(r) for r in buck.estimate(spark).collect())
     assert got == want
-    # register table == batch state over the union (max is replay-idempotent)
-    union = spark.createDataFrame(ev_a + ev_b, ["event_type", "user_id"])
     want_regs = sorted(
         tuple(r) for r in hll_state(union, ["event_type"], "user_id", 6).collect()
     )

@@ -1,11 +1,8 @@
-"""Measure per-trigger state-table write I/O: whole-table vs bucket-scoped.
+"""Measure per-trigger state-table write I/O of the bucket-scoped sinks.
 
-VERDICT r11 next-step #1 asks for a before/after written-bytes number for
-the streaming sinks' state folds. This drives the SAME sink class
-(ExactDedupSink — additive fold, ledger-guarded in scoped mode; and
-IvfIndexSink — keyed fold) over the same batches in both layouts and
-reports, per trigger, the bytes of parquet files that were created or
-changed under the state-table root.
+Drives ExactDedupSink (additive fold, ledger-guarded) and IvfIndexSink
+(keyed fold) over the same batches and reports, per trigger, the bytes of
+parquet files that were created or changed under the state-table root.
 
 The regime matters. A micro-batch touches one bucket per distinct key
 hash, so with B batch keys and N buckets the expected rewrite is
@@ -339,28 +336,21 @@ def main() -> None:
     cents = ParquetTable(work + "/cents")
     cents.overwrite_atomic(emb.orderBy("vec_id").limit(16))
 
-    results = {}
-    for layout, mk in (
-        ("whole_table", lambda nm: ParquetTable(f"{work}/{nm}_flat")),
-        (
-            f"bucketed_{n_buckets}",
-            lambda nm: ParquetTable(
-                f"{work}/{nm}_b", partition_by=[PART_COL], n_buckets=n_buckets
-            ),
-        ),
-    ):
-        w = run_sink(
-            lambda nm="dedup", mk=mk, layout=layout: mk(nm + layout),
+    def mk(nm: str) -> ParquetTable:
+        return ParquetTable(
+            f"{work}/{nm}", partition_by=[PART_COL], n_buckets=n_buckets
+        )
+
+    results = {
+        "exact_dedup": run_sink(
+            lambda: mk("dedup"),
             lambda t: ExactDedupSink(t, "doc_id", "text"),
             doc_batches,
-        )
-        results[f"exact_dedup/{layout}"] = w
-        w = run_sink(
-            lambda nm="ivf", mk=mk, layout=layout: mk(nm + layout),
-            lambda t: IvfIndexSink(t, cents),
-            emb_batches,
-        )
-        results[f"ivf_index/{layout}"] = w
+        ),
+        "ivf_index": run_sink(
+            lambda: mk("ivf"), lambda t: IvfIndexSink(t, cents), emb_batches
+        ),
+    }
 
     print(json.dumps({
         "sf_dir": sf_dir, "n_incr": n_incr, "inc_rows": inc_rows,
@@ -372,13 +362,11 @@ def main() -> None:
             f"{k:28s} seed write {mb[0]} MB; "
             f"per-increment MB written: {mb[1:]}  incr total {sum(mb[1:]):.2f}"
         )
-    # headline: mean increment-trigger ratio (the steady-state cost)
-    for fam in ("exact_dedup", "ivf_index"):
-        flat = sum(results[f"{fam}/whole_table"][1:]) / n_incr
-        buck = sum(results[f"{fam}/bucketed_{n_buckets}"][1:]) / n_incr
+    # headline: mean increment-trigger write vs the seeded state size
+    for fam, w in results.items():
         print(
-            f"{fam}: mean increment write {flat / 1e6:.2f} MB whole-table vs "
-            f"{buck / 1e6:.2f} MB bucket-scoped ({flat / max(buck, 1):.1f}x)"
+            f"{fam}: mean increment write {sum(w[1:]) / n_incr / 1e6:.2f} MB "
+            f"over a {w[0] / 1e6:.2f} MB seeded state"
         )
     spark.stop()
 
