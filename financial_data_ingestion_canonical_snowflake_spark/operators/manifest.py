@@ -46,7 +46,8 @@ the test's strategy stub models an object PUT instead).
 
 Drop-in: implements the same surface ``merge_upsert_scoped`` / ``rebucket``
 / ``compact`` consume (``exists/read/scan/read_meta/write_meta/
-overwrite_atomic/replace_partitions/append/data_bytes/partition_dir_names``),
+overwrite_atomic/replace_partitions/append/data_bytes/data_files/
+partition_dir_names``),
 so every scoped-merge feature — per-bucket ledger replay protection, schema
 evolution, auto-rebucket — runs unchanged on either store (pytest-proven
 side by side).
@@ -62,7 +63,16 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .storage import LocalFileCommit, ParquetTable, _parquet_bytes, _UNSET
+from .storage import (
+    APPEND,
+    MODE_COL,
+    REWRITE,
+    LocalFileCommit,
+    ParquetTable,
+    _parquet_bytes,
+    _UNSET,
+    with_mode,
+)
 
 MANIFEST_NAME = "_MANIFEST.json"
 #: generation directories use key=value naming so Spark's partition
@@ -357,52 +367,80 @@ class ManifestTable(ParquetTable):
 
     def stage_replace_partitions(self, df: DataFrame) -> dict:
         """STAGE half (see ``ParquetTable.stage_replace_partitions``): write
-        the replacement partitions into a fresh, UNREFERENCED generation
-        directory. Nothing references the generation until the commit's
-        manifest PUT, so a staged-then-crashed write is invisible garbage —
-        the protocol's pre-existing story. The generation is named with the
-        seq visible at stage time; the name only needs uniqueness (the uuid
+        the replacement partitions into fresh, UNREFERENCED generation
+        directories — one for the REWRITE partitions and one for the
+        APPEND partitions (``MODE_COL``), written by ONE job with the
+        generation as the top hive level under ``data/``. Nothing
+        references a generation until the commit's manifest PUT, so a
+        staged-then-crashed write is invisible garbage — the protocol's
+        pre-existing story. The generations are named with the seq
+        visible at stage time; the name only needs uniqueness (the uuid
         suffix), the committed seq is re-read at commit time."""
         if not self.partition_by:
             raise ValueError(
                 f"{self.path}: replace_partitions needs partition_by"
             )
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
-        gen = self._new_gen(m["seq"] + 1)
-        gen_dir = os.path.join(self._data_root, gen)
-        df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(
-            gen_dir
+        gens = {mode: self._new_gen(m["seq"] + 1) for mode in (REWRITE, APPEND)}
+        gen_value = lambda mode: F.lit(gens[mode].split("=", 1)[1])  # noqa: E731
+        (
+            with_mode(df)
+            .withColumn(
+                GEN_COL,
+                F.when(F.col(MODE_COL) == APPEND, gen_value(APPEND)).otherwise(
+                    gen_value(REWRITE)
+                ),
+            )
+            .drop(MODE_COL)
+            .write.mode("append")
+            .partitionBy(GEN_COL, *self.partition_by)
+            .parquet(self._data_root)
         )
-        return {"gen": gen, "gen_dir": gen_dir, "spark": df.sparkSession}
+        return {
+            "gens": {
+                mode: g
+                for mode, g in gens.items()
+                if os.path.isdir(os.path.join(self._data_root, g))
+            },
+            "spark": df.sparkSession,
+        }
 
     def abort_replace_partitions(self, staged: dict) -> None:
-        self.commit.remove_tree(staged["gen_dir"])
+        for g in staged["gens"].values():
+            self.commit.remove_tree(os.path.join(self._data_root, g))
 
     def commit_replace_partitions(self, staged: dict) -> list[str]:
-        """COMMIT half: one manifest PUT re-pointing the touched leaves at
-        the staged generation (driver-side only — no Spark job, no rename
-        of any data path). Raises when the staged generation is gone —
-        another commit's GC deleted it while it was still unreferenced —
-        instead of publishing a manifest that re-points nothing."""
-        gen, gen_dir = staged["gen"], staged["gen_dir"]
-        if not os.path.isdir(gen_dir):
-            raise FileNotFoundError(
-                f"{self.path}: staged generation {gen} no longer exists; "
-                "another commit landed on the table between stage and "
-                "commit (see merge.StagedScopedMerge)"
-            )
+        """COMMIT half: one manifest PUT that re-points each REWRITE leaf at
+        its staged generation and adds the APPEND generation to each
+        APPEND leaf's list (driver-side only — no Spark job, no rename of
+        any data path). Raises when a staged generation is gone — another
+        commit's GC deleted it while it was still unreferenced — instead
+        of publishing a manifest that re-points nothing."""
+        for g in staged["gens"].values():
+            if not os.path.isdir(os.path.join(self._data_root, g)):
+                raise FileNotFoundError(
+                    f"{self.path}: staged generation {g} no longer exists; "
+                    "another commit landed on the table between stage and "
+                    "commit (see merge.StagedScopedMerge)"
+                )
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
         seq = m["seq"] + 1
-        touched = [r for r in self._written_parts(gen_dir) if r]
         bytes_delta = 0  # stats only the TOUCHED leaves (delta cost)
-        parts = dict(m["parts"])
-        for rel in touched:
-            bytes_delta += _parquet_bytes(os.path.join(gen_dir, rel))
-            for old_gen in parts.get(rel, []):
-                bytes_delta -= _parquet_bytes(
-                    os.path.join(self._data_root, old_gen, rel)
-                )
-            parts[rel] = [gen]
+        parts = {k: list(v) for k, v in m["parts"].items()}
+        touched = []
+        for mode, gen in staged["gens"].items():
+            gen_dir = os.path.join(self._data_root, gen)
+            for rel in self._written_parts(gen_dir):
+                bytes_delta += _parquet_bytes(os.path.join(gen_dir, rel))
+                if mode == APPEND:
+                    parts.setdefault(rel, []).append(gen)
+                else:
+                    for old_gen in parts.get(rel, []):
+                        bytes_delta -= _parquet_bytes(
+                            os.path.join(self._data_root, old_gen, rel)
+                        )
+                    parts[rel] = [gen]
+                touched.append(rel)
         if touched:
             # real leaves supersede the explicit-empty pseudo-partition
             parts.pop("", None)
@@ -414,7 +452,7 @@ class ManifestTable(ParquetTable):
         self._prune_history()
         self._gc(new_m)
         staged["spark"].catalog.refreshByPath(self._data_root)
-        return touched
+        return sorted(touched)
 
     def append(self, df: DataFrame) -> None:
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
@@ -455,6 +493,21 @@ class ManifestTable(ParquetTable):
         if not m:
             return 0
         return sum(_parquet_bytes(leaf) for leaf in self._live_leaves(m))
+
+    def data_files(self, rel: str) -> list[str]:
+        """Live parquet data files of one partition, across every
+        generation its manifest entry lists."""
+        m = self._load_manifest()
+        out = []
+        for g in (m or {}).get("parts", {}).get(rel, []):
+            d = os.path.join(self._data_root, g, rel)
+            if os.path.isdir(d):
+                out.extend(
+                    os.path.join(d, f)
+                    for f in os.listdir(d)
+                    if f.endswith(".parquet")
+                )
+        return sorted(out)
 
     def partition_dir_names(self) -> list[str]:
         m = self._load_manifest()

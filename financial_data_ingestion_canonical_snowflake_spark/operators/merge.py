@@ -70,6 +70,18 @@ class LedgerSpec:
 #: hidden hash-bucket partition column for partition-scoped merges
 PART_COL = "txn_part"
 
+#: an insert-only bucket that already holds this many data files is
+#: rewritten (compacted to one file) instead of appended to, so a bucket
+#: never holds more files than this
+MAX_BUCKET_FILES = 8
+
+#: per-row tag of a scoped merge's output: what the merge did to the row.
+#: A bucket holding an _UPDATE or _DROP row is rewritten; a bucket of
+#: _KEEP and _INSERT rows only appends its _INSERT rows. _DROP rows (the
+#: stored rows a replace_keys merge replaces) are never written.
+_ROW = "__merge_row"
+_KEEP, _INSERT, _UPDATE, _DROP = 0, 1, 2, 3
+
 
 @dataclass
 class StagedScopedMerge:
@@ -78,7 +90,8 @@ class StagedScopedMerge:
     maintains several tables per trigger run the expensive staging writes
     concurrently and then apply the COMMITS in the exact order its crash
     contract requires (:func:`stage_then_commit`). ``commit()`` is
-    driver-side only (meta write + directory swaps / manifest PUT);
+    driver-side only (meta write + directory swaps and appended-file
+    publishes / manifest PUT);
     ``abort()`` discards the staged files. A staged merge that is never
     committed leaves only invisible tmp/generation garbage for ``vacuum``
     — the same story as a crash mid-write.
@@ -116,12 +129,18 @@ def require_bucketed(table, owner: str) -> None:
     hash-bucketed table, ``partition_by=[PART_COL]``.
 
     Every sink folds a micro-batch with :func:`merge_upsert_scoped`, which
-    reads and rewrites only the buckets the batch's keys land in — per-
-    trigger I/O proportional to the batch, like the reference's MERGE
-    (sql/05_merge_canonical.sql:6-53). Additive folds also keep a per-
-    bucket replay ledger inside those buckets (:class:`LedgerSpec`), which
-    makes a replayed micro-batch exactly-once. An unpartitioned table has
-    neither property, so it is refused here, at sink construction."""
+    reads only the buckets the batch's keys land in and writes each of
+    them in one of two modes: an insert-only bucket gets one new file of
+    its inserted rows; any other bucket, and any bucket already holding
+    ``MAX_BUCKET_FILES`` files, is rewritten. A batch of new keys (the
+    IVF index, MinHash signatures and pairs) therefore writes what it
+    adds, like the reference's MERGE (sql/05_merge_canonical.sql:6-53);
+    a batch that updates keys still rewrites the buckets it touches.
+    Additive folds keep a per-bucket replay ledger inside those buckets
+    (:class:`LedgerSpec`), which makes a replayed micro-batch
+    exactly-once — and, because the ledger row changes on every fold,
+    always rewrites. An unpartitioned table has none of these
+    properties, so it is refused here, at sink construction."""
     if table.partition_by != [PART_COL]:
         raise ValueError(
             f"{owner}: state table {table.path} must be hash-bucketed "
@@ -236,6 +255,32 @@ def merge_upsert(
     ``COALESCE(line_number, -1)`` to the same effect,
     sql/06_anomaly_detection.sql:36-39).
     """
+    return _merge_rows(
+        target,
+        source,
+        keys,
+        preserve,
+        dedupe_order,
+        set_on_update,
+        set_on_insert,
+        evolve_schema,
+        merge_exprs,
+    ).drop(_ROW)
+
+
+def _merge_rows(
+    target: DataFrame,
+    source: DataFrame,
+    keys: Sequence[str],
+    preserve: Sequence[str],
+    dedupe_order: Sequence | None,
+    set_on_update: dict | None,
+    set_on_insert: dict | None,
+    evolve_schema: bool,
+    merge_exprs: dict[str, MergeExpr] | None,
+) -> DataFrame:
+    """:func:`merge_upsert`'s post-merge rows, each tagged in ``_ROW`` with
+    what the merge did to it (``_KEEP``/``_INSERT``/``_UPDATE``)."""
     keys = list(keys)
     if evolve_schema:
         t_types = dict(target.dtypes)
@@ -322,7 +367,12 @@ def merge_upsert(
         if c in set_on_insert:
             base = F.when(inserted, set_on_insert[c]).otherwise(base)
         projections.append(base.alias(c))
-    return joined.select(*projections)
+    row_class = (
+        F.when(matched, F.lit(_UPDATE))
+        .when(inserted, F.lit(_INSERT))
+        .otherwise(F.lit(_KEEP))
+    )
+    return joined.select(*projections, row_class.alias(_ROW))
 
 
 def snapshot_diff(
@@ -405,21 +455,44 @@ def merge_upsert_scoped(
 
     Reference MERGE's I/O is proportional to the delta
     (sql/05_merge_canonical.sql:6-53); a full-outer-join + whole-table rewrite
-    is O(table) per batch. This variant makes the emulation delta-proportional:
+    is O(table) per batch. This variant scopes the emulation to the buckets
+    the batch touches:
 
     1. bucket the source on ``part_expr(keys[0])`` — same function the table
        is laid out with, so matches can only live in the source's buckets;
     2. read ONLY those buckets from the target (hive partition pruning — the
-       ``isin`` filter prunes directories, verified in tests);
+       ``isin`` filter prunes directories, verified in tests), under the
+       table's stored layout (recorded union schema, else the files' own
+       columns — never a narrower declared schema);
     3. ``merge_upsert`` within the touched buckets (with ``merge_exprs``
        custom matched-row combiners when given — the streaming state sinks'
        additive / least / greatest folds);
-    4. swap just those partition directories (``replace_partitions``).
+    4. sort each touched bucket into a write mode, inside the write job
+       (a window over the already-bucketed rows: no extra job):
 
-    A batch touching k of N buckets reads and rewrites k/N of the table. At
-    100 TB with e.g. 4096 buckets, an incremental batch costs GBs, not TBs.
-    ``table`` must have ``partition_by=[PART_COL]``. Returns the replaced
-    partition rel-paths.
+       - APPEND when no source key matches a stored key (``replace_keys``:
+         when no stored row's scope key is replaced, null-safely) and the
+         bucket holds fewer than ``MAX_BUCKET_FILES`` data files — only
+         the inserted rows are written, as one new file beside the
+         bucket's files. Appended keys never collide with stored ones,
+         so reads need no merge step;
+       - REWRITE otherwise — the whole post-merge bucket replaces the
+         old one, compacting it to one file. A ledgered fold always
+         rewrites (its sentinel row changes), and so does a merge whose
+         output widens the stored layout (``evolve_schema``);
+    5. commit both modes at once (``replace_partitions``: a directory swap
+       per rewritten bucket and a file publish per appended one on
+       ``ParquetTable``; one manifest PUT on ``ManifestTable``).
+
+    A batch of new keys therefore writes about its own size; a batch that
+    updates keys in k of N buckets rewrites those k buckets — k/N of the
+    table, and since B keys spread over ``N * (1 - exp(-B/N))`` buckets,
+    a batch of more than ~N keys rewrites nearly the whole table.
+    ``Pipeline.run_batch`` re-merges its full history every call, so every
+    stored key matches and every bucket is rewritten; only a delta-scoped
+    source would change that. ``table`` must have
+    ``partition_by=[PART_COL]``. Returns the rel-paths of the partitions
+    the merge changed, in either mode.
 
     ``ledger`` + ``batch_id`` add per-bucket replay protection for
     non-idempotent folds (see :class:`LedgerSpec`): buckets whose stored
@@ -544,26 +617,17 @@ def merge_upsert_scoped(
             # with an evolved schema the read supplies the recorded union
             # schema explicitly — old files fill the added columns with
             # typed NULLs (a footer-inferred read could pick an old file
-            # and drop the new columns entirely)
+            # and drop the new columns entirely). The merge works on that
+            # LAYOUT (recorded union schema, else the files' own), never on
+            # a declared schema: a declaration narrower than the files
+            # would drop the undeclared columns from rewritten buckets and
+            # leave appended files unlike their neighbours
             base = table.scan(spark, stored=stored)
-            if stored is not None:
-                data_cols = [f.name for f in stored.fields]
-            else:
-                if evolve_schema:
-                    # first evolution: files are still uniform — the physical
-                    # footer schema is the authoritative current layout (the
-                    # source's new columns are not in any file yet)
-                    data_cols = [c for c in base.columns if c != PART_COL]
-                else:
-                    data_cols = (
-                        [f.name for f in table.schema.fields]
-                        if table.schema is not None
-                        else [c for c in source.columns]
-                    )
+            layout = [f for f in base.schema.fields if f.name != PART_COL]
             tgt = (
                 base
                 .filter(F.col(PART_COL).isin(parts))
-                .select(*data_cols, PART_COL)
+                .select(*[f.name for f in layout], PART_COL)
             )
             if ledger is not None:
                 # in-plan replay skip: ≤ len(parts) sentinel rows broadcast
@@ -596,21 +660,33 @@ def merge_upsert_scoped(
                     f"schemas; target={tgt.columns} source={src.columns}"
                 )
                 # null-safe, like the MERGE it replaces: a NULL scope key
-                # drops its stored rows too
+                # drops its stored rows too. A left join (not an anti-join)
+                # so the dropped rows still mark their bucket for rewrite;
+                # a duplicate scope key can only duplicate dropped rows
                 rk_cols = list(replace_keys.columns)
                 rk = replace_keys.select(
-                    *[F.col(c).alias(f"__rk_{c}") for c in rk_cols]
+                    *[F.col(c).alias(f"__rk_{c}") for c in rk_cols],
+                    F.lit(True).alias("__rk_hit"),
                 )
-                merged = tgt.join(
-                    F.broadcast(rk),
-                    reduce(
-                        lambda a, b: a & b,
-                        [F.col(c).eqNullSafe(F.col(f"__rk_{c}")) for c in rk_cols],
-                    ),
-                    "left_anti",
-                ).unionByName(src)
+                merged = (
+                    tgt.join(
+                        F.broadcast(rk),
+                        reduce(
+                            lambda a, b: a & b,
+                            [F.col(c).eqNullSafe(F.col(f"__rk_{c}")) for c in rk_cols],
+                        ),
+                        "left",
+                    )
+                    .select(
+                        *tgt.columns,
+                        F.when(F.col("__rk_hit"), F.lit(_DROP))
+                        .otherwise(F.lit(_KEEP))
+                        .alias(_ROW),
+                    )
+                    .unionByName(src.withColumn(_ROW, F.lit(_INSERT)))
+                )
             else:
-                merged = merge_upsert(
+                merged = _merge_rows(
                     tgt,
                     src,
                     keys,
@@ -618,9 +694,13 @@ def merge_upsert_scoped(
                     dedupe_order,
                     set_on_update,
                     set_on_insert,
-                    evolve_schema=evolve_schema,
-                    merge_exprs=merge_exprs,
+                    evolve_schema,
+                    merge_exprs,
                 )
+                if ledger is not None:
+                    # a ledgered fold updates every bucket's sentinel row,
+                    # so it always rewrites: no row tags, no write modes
+                    merged = merged.drop(_ROW)
         else:
             # first batch: MERGE into empty = dedupe + insert-only projection —
             # skip the full-outer join against nothing (and without a ledger,
@@ -632,7 +712,9 @@ def merge_upsert_scoped(
                 merged = dedupe_source(merged, keys, dedupe_order)
             for c, expr in (set_on_insert or {}).items():
                 merged = merged.withColumn(c, expr)
-        out_fields = [f for f in merged.schema.fields if f.name != PART_COL]
+        out_fields = [
+            f for f in merged.schema.fields if f.name not in (PART_COL, _ROW)
+        ]
         if ledger is not None:
             stamps = _ledger_rows_plan(src, out_fields, keys[0], ledger, batch_id)
             if exists and caller_parts:
@@ -673,6 +755,8 @@ def merge_upsert_scoped(
         merged = merged.repartition(
             len(parts) if parts else n_buckets, F.col(PART_COL)
         )
+        if _ROW in merged.columns:
+            merged = _bucket_modes(table, merged, parts, layout, out_fields)
         meta = {"n_buckets": n_buckets, "part_col": PART_COL, "keys": keys}
         if meta0 and "total_bytes" in meta0:
             # carry the size tracker forward (replace_partitions applies
@@ -709,6 +793,53 @@ def merge_upsert_scoped(
         # into executor storage across checkpoint retries
         if src_cached is not None:
             src_cached.unpersist()
+
+
+def _bucket_modes(table, merged: DataFrame, parts, layout, out_fields) -> DataFrame:
+    """Sort each bucket of a tagged merge output (``_ROW``, hash-partitioned
+    on ``PART_COL``) into its write mode, IN the write job: a window over
+    the bucket — which the repartition already clusters, so no exchange
+    and no job is added — finds whether any row was updated or dropped.
+
+    - APPEND: no stored row of the bucket changes, and the bucket holds
+      fewer than ``MAX_BUCKET_FILES`` files; only the inserted rows are
+      written, as one new file beside the stored ones.
+    - REWRITE: every other bucket, written whole, minus dropped rows.
+
+    An output whose columns or types differ from the stored layout (an
+    evolving merge widening the table) rewrites every bucket, so each
+    bucket's files keep one physical schema."""
+    from pyspark.sql.window import Window
+
+    from .storage import APPEND, MODE_COL, REWRITE
+
+    def shape(fields):
+        return [(f.name, f.dataType.simpleString()) for f in fields]
+
+    if shape(out_fields) != shape(layout):
+        return (
+            merged.filter(F.col(_ROW) != _DROP)
+            .drop(_ROW)
+            .withColumn(MODE_COL, F.lit(REWRITE))
+        )
+    rewrite = F.max(_ROW).over(Window.partitionBy(PART_COL)) >= _UPDATE
+    full = [
+        p
+        for p in parts
+        if len(table.data_files(f"{PART_COL}={p}")) >= MAX_BUCKET_FILES
+    ]
+    if full:
+        rewrite = rewrite | F.col(PART_COL).isin(full)
+    return (
+        merged.withColumn(
+            MODE_COL, F.when(rewrite, F.lit(REWRITE)).otherwise(F.lit(APPEND))
+        )
+        .filter(
+            (F.col(_ROW) == _INSERT)
+            | ((F.col(MODE_COL) == REWRITE) & (F.col(_ROW) != _DROP))
+        )
+        .drop(_ROW)
+    )
 
 
 def _ledger_rows_plan(

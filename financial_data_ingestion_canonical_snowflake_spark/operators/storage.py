@@ -29,6 +29,26 @@ from pyspark.sql import types as T
 #: today the hash-bucket modulus of partition-scoped merge tables.
 META_NAME = "_fincan_meta.json"
 
+#: per-partition write mode of a staged replacement, carried in the staged
+#: output and consumed by the commit, never seen by the live table: one
+#: more hive level here (``<tmp>/__mode=append/txn_part=3``), one staged
+#: generation per mode in ``ManifestTable``. A REWRITE partition replaces
+#: the live one; an APPEND partition's files are added beside the live
+#: files (its rows are new keys only — see ``merge.merge_upsert_scoped``).
+#: Frames without the column stage as REWRITE.
+MODE_COL = "__mode"
+APPEND = "append"
+REWRITE = "rewrite"
+
+
+def with_mode(df: DataFrame) -> DataFrame:
+    """``df`` with its write mode column; absent means REWRITE."""
+    from pyspark.sql import functions as F
+
+    if MODE_COL in df.columns:
+        return df
+    return df.withColumn(MODE_COL, F.lit(REWRITE))
+
 
 class LocalFileCommit:
     """Commit protocol for the swap/commit steps of table maintenance —
@@ -42,8 +62,9 @@ class LocalFileCommit:
       partial copy at either. ``overwrite_atomic`` and
       ``replace_partitions`` build their crash-safety story on this.
     - ``publish_file`` replaces a single file's content atomically
-      (metadata commits) — readers see the old bytes or the new bytes,
-      never a torn write.
+      (metadata commits, and the new data files of an appended
+      partition) — readers see the old bytes or the new bytes, never a
+      torn write.
     - ``remove_tree`` is only ever called on already-displaced garbage;
       it carries no atomicity requirement.
 
@@ -210,6 +231,15 @@ class ParquetTable:
         """Parquet bytes of the LIVE table data (maintenance sizing)."""
         return _parquet_bytes(self.path)
 
+    def data_files(self, rel: str) -> list[str]:
+        """Live parquet data files of one partition (``txn_part=3``)."""
+        d = os.path.join(self.path, rel)
+        if not os.path.isdir(d):
+            return []
+        return sorted(
+            os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+        )
+
     def partition_dir_names(self) -> list[str]:
         """First-level hive partition directory names (``key=value``) of
         the live layout — the weak pre-metadata modulus check reads these."""
@@ -372,8 +402,12 @@ class ParquetTable:
         crash in the instant between the two renames of one partition leaves
         THAT partition absent until the batch reruns (each partition is
         all-old, all-new, or absent — never mixed); the production seam for
-        stronger guarantees is an ACID table format. Returns the replaced
-        partition rel-paths (e.g. ``['txn_part=3', 'txn_part=7']``).
+        stronger guarantees is an ACID table format.
+
+        Rows whose ``MODE_COL`` is ``APPEND`` are instead added to their
+        live partition as new files beside the files already there (see
+        ``MODE_COL``). Returns the rel-paths of every partition the commit
+        changed, in either mode (e.g. ``['txn_part=3', 'txn_part=7']``).
 
         This is the delta-proportional write primitive for the merge path —
         cost scales with the partitions a batch touches, matching reference
@@ -384,8 +418,9 @@ class ParquetTable:
     def stage_replace_partitions(self, df: DataFrame) -> dict:
         """STAGE half of ``replace_partitions``: run the Spark write job that
         materializes the replacement partitions into an uncommitted tmp
-        sibling, touching nothing a reader can see. Returns an opaque staged
-        handle for ``commit_replace_partitions`` / ``abort_replace_partitions``.
+        sibling (``<tmp>/__mode=<mode>/<partitions>``), touching nothing a
+        reader can see. Returns an opaque staged handle for
+        ``commit_replace_partitions`` / ``abort_replace_partitions``.
 
         The split exists so sinks maintaining SEVERAL tables per trigger
         (e.g. the CDC chunk+frequency pair) can run the expensive staging
@@ -398,7 +433,9 @@ class ParquetTable:
         if not self.partition_by:
             raise ValueError(f"{self.path}: replace_partitions needs partition_by")
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy(*self.partition_by).parquet(tmp)
+        with_mode(df).write.mode("overwrite").partitionBy(
+            MODE_COL, *self.partition_by
+        ).parquet(tmp)
         return {"tmp": tmp, "spark": df.sparkSession}
 
     def abort_replace_partitions(self, staged: dict) -> None:
@@ -406,14 +443,17 @@ class ParquetTable:
         self.commit.remove_tree(staged["tmp"])
 
     def commit_replace_partitions(self, staged: dict) -> list[str]:
-        """COMMIT half of ``replace_partitions``: swap the staged partition
-        directories into the table (driver-side file ops only — no Spark
-        job). Same crash story as the monolithic form, whose docstring has
-        the details."""
+        """COMMIT half of ``replace_partitions``: swap the staged REWRITE
+        partition directories into the table and publish the staged APPEND
+        files into their live partitions (driver-side file ops only — no
+        Spark job). Same crash story as the monolithic form, whose
+        docstring has the details; an append is one ``publish_file`` per
+        new file, so a crash leaves a partition with all, some or none of
+        its new files — the replayed batch then finds its keys stored and
+        rewrites the partition."""
         tmp = staged["tmp"]
         depth = len(self.partition_by)
-        replaced: list[str] = []
-        # leaf partition dirs sit exactly `depth` levels under tmp
+        # leaf partition dirs sit exactly `depth` levels under each mode dir
         def leaves(base: str, level: int) -> list[str]:
             if level == 0:
                 return [""]
@@ -427,11 +467,17 @@ class ParquetTable:
         os.makedirs(self.path, exist_ok=True)
         trash = os.path.join(tmp, "__displaced__")  # outside the table root
         os.makedirs(trash, exist_ok=True)
-        touched = leaves(tmp, depth)
+        touched = [
+            (mode, os.path.join(tmp, f"{MODE_COL}={mode}"), rel)
+            for mode in (REWRITE, APPEND)
+            if os.path.isdir(os.path.join(tmp, f"{MODE_COL}={mode}"))
+            for rel in leaves(os.path.join(tmp, f"{MODE_COL}={mode}"), depth)
+        ]
         # maintain the size tracker merge.maybe_rebucket reads — but only
         # once it has been initialized (by maybe_rebucket's first full
         # walk): before that there is no base to apply a delta to. The
-        # delta (stats only the TOUCHED partitions) is applied BEFORE the
+        # delta (stats only the TOUCHED partitions; an append adds its new
+        # bytes, a rewrite swaps old for new) is applied BEFORE the
         # swaps: a crash in between leaves the tracker OVERcounting, which
         # maybe_rebucket's confirm walk corrects downward before any
         # rewrite — the reverse order would leave a permanent UNDERcount
@@ -440,26 +486,33 @@ class ParquetTable:
         meta = self.read_meta()
         if meta is not None and "total_bytes" in meta:
             bytes_delta = 0
-            for rel in touched:
-                bytes_delta += _parquet_bytes(os.path.join(tmp, rel))
+            for mode, base, rel in touched:
+                bytes_delta += _parquet_bytes(os.path.join(base, rel))
                 dst = os.path.join(self.path, rel)
-                if os.path.isdir(dst):
+                if mode == REWRITE and os.path.isdir(dst):
                     bytes_delta -= _parquet_bytes(dst)
             self.write_meta(
                 **{**meta, "total_bytes": meta["total_bytes"] + bytes_delta}
             )
-        for rel in touched:
-            src = os.path.join(tmp, rel)
+        for mode, base, rel in touched:
+            src = os.path.join(base, rel)
             dst = os.path.join(self.path, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
+            if mode == APPEND:
+                os.makedirs(dst, exist_ok=True)
+                for f in sorted(os.listdir(src)):
+                    if f.endswith(".parquet"):
+                        self.commit.publish_file(
+                            os.path.join(src, f), os.path.join(dst, f)
+                        )
+                continue
             old = os.path.join(trash, rel.replace(os.sep, "__"))
             if os.path.isdir(dst):
                 self.commit.move_dir(dst, old)
             self.commit.move_dir(src, dst)
-            replaced.append(rel)
         self.commit.remove_tree(tmp)
         staged["spark"].catalog.refreshByPath(self.path)
-        return replaced
+        return sorted(rel for _mode, _base, rel in touched)
 
     def overwrite_partitions(self, df: DataFrame) -> None:
         """Dynamic-partition overwrite: replace ONLY the hive partitions

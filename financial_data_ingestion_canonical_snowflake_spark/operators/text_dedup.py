@@ -474,12 +474,12 @@ def _capped_postings(
     n-gram Jaccard and winnowing pair generators; the policy that picks a
     shape is documented on ``ngram_jaccard_pairs`` (``hot_key_guard``).
 
-    NULL keys: both shapes KEEP a NULL posting key (a window partition is
-    a valid NULL group; an anti-join never matches NULL against the hot
-    set) where the pre-r15 aggregate+join shape dropped it — callers'
-    keys are non-null by construction (token concatenations / hashes),
-    pinned here so a future extractor change can't silently alter
-    jaccard denominators (ADVICE r15).
+    NULL keys: both shapes treat all NULL posting keys as ONE key, capped
+    like any other — kept at or under ``cap`` postings, dropped above it
+    (the window partitions NULLs together; the anti-join matches the hot
+    set null-safely). Callers' keys are non-null by construction (token
+    concatenations / hashes); this pins the shapes to one answer so a
+    future extractor change can't silently alter jaccard denominators.
     """
     if hot_key_guard:
         # Skew-proof pre-drop: exact counts via hash aggregate (map-side
@@ -502,9 +502,10 @@ def _capped_postings(
             .filter(F.col("__c") > cap)
             .select(key)
         )
-        return postings.join(F.broadcast(hot), key, "left_anti").repartition(
-            key
-        )
+        hot = hot.select(F.col(key).alias("__hot"))
+        return postings.join(
+            F.broadcast(hot), F.col(key).eqNullSafe(F.col("__hot")), "left_anti"
+        ).repartition(key)
     # window count (r15): ONE shuffle on exactly the key the pair
     # self-join needs next — extraction evaluates once with no extra
     # cache, at the cost of routing each key's full posting list through

@@ -67,7 +67,9 @@ class PipelineConfig:
     batch_ts: dt.datetime | None = None  # pin for deterministic tests
     skip_loaded_files: bool = True  # COPY load-history emulation
     # hash-bucket count for partition-scoped canonical merges; a batch
-    # touching k buckets rewrites k/N of the table (thousands at 100 TB)
+    # updating keys in k buckets rewrites k/N of the table (thousands at
+    # 100 TB). run_batch re-merges the full history, so every bucket
+    # holding stored rows is rewritten on every call
     merge_buckets: int = 16
     # also register the OPS views as durable catalog objects (reference
     # sql/07_ops_views.sql creates durable views, not session temp views)
@@ -93,8 +95,8 @@ class Pipeline:
         }
         self.raw_load_audit = ParquetTable(f"{w}/raw/raw_load_audit", schemas.RAW_LOAD_AUDIT)
         # canonical tables are hash-bucket partitioned on the merge key so
-        # incremental merges rewrite only touched buckets (delta-proportional,
-        # like reference MERGE); PART_COL never leaves storage — read()
+        # a merge writes only the buckets its source touches; PART_COL
+        # never leaves storage — read()
         # projects the declared schema only
         part, nb = [PART_COL], cfg.merge_buckets
         self.can_txn = ParquetTable(f"{w}/canon/can_txn", schemas.CAN_TXN, part, nb)

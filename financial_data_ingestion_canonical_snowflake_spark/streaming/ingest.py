@@ -21,7 +21,8 @@ Scale notes:
   ``spark.sql.shuffle.partitions``; set it to 2-3x cores BEFORE the first
   start (state-store partitioning is fixed at query start).
 - The foreachBatch merge inherits the batch operator's properties: only the
-  buckets a micro-batch touches are read and rewritten.
+  buckets a micro-batch touches are read, and each is appended to (new
+  keys only) or rewritten.
 """
 
 from __future__ import annotations
@@ -196,7 +197,7 @@ class MergeSink:
     ParquetTable.
 
     Reuses the batch pipeline's ``merge_upsert_scoped`` (only the touched
-    buckets are rewritten), so batch and streaming produce identical
+    buckets are written), so batch and streaming produce identical
     canonical tables. Micro-batches may re-deliver rows after a restart (file source replays
     uncommitted batches); the merge is idempotent, which is the exactly-once
     story — same as the reference's rerun-safe MERGE

@@ -27,9 +27,10 @@ it is row-identical to ``ivf_topk`` over the same corpus + centroids.
 
 Per-trigger cost is batch-proportional — one broadcast crossJoin over
 the BATCH (k centroid candidates per vector, map-side max_by collapse) +
-one keyed merge that rewrites only the buckets of the hash-bucketed index
-(``merge.require_bucketed``) the batch's vector ids land in. At 100 TB the
-index table is the corpus's (id, int, vector) projection.
+one keyed merge into the buckets of the hash-bucketed index
+(``merge.require_bucketed``) the batch's vector ids land in. New vector
+ids append one file per bucket; a re-ingested id rewrites its bucket. At
+100 TB the index table is the corpus's (id, int, vector) projection.
 """
 
 from __future__ import annotations

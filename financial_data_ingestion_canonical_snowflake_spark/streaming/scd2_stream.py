@@ -189,17 +189,6 @@ class Scd2Sink:
             ]
             target = target.filter(F.col(PART_COL).isin(parts)).drop(PART_COL)
             tgt_cols = set(target.columns)
-            if (
-                stored is None
-                and self.table.schema is not None
-                and set(self.table.schema.fieldNames()) != tgt_cols
-            ):
-                # a declared schema that differs from the stored files
-                # (e.g. omits the internal hwm columns): a plain scoped
-                # merge would target the declared columns only, so fold
-                # through the evolve path, which merges against the
-                # physical layout and records it
-                evolve = True
             touched = target.join(affected, self.key_col)  # batch-sized
             if track_hwm:
                 # out-of-order probe against the stored per-key high-water

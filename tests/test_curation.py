@@ -1250,6 +1250,32 @@ def test_hot_key_guard_cap_shapes_identical(spark):
     spark.catalog.clearCache()
 
 
+def test_capped_postings_shapes_agree_on_null_keys(spark):
+    """Both cap shapes treat NULL posting keys as one key: kept at the
+    cap, dropped above it. The guarded shape's anti-join used to be a
+    plain equi-join, which never matched a hot NULL key and kept it."""
+    from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
+        _capped_postings,
+    )
+
+    cap = 3
+    for n_null, want_null in ((cap, cap), (cap + 2, 0)):
+        rows = [(None, i) for i in range(n_null)] + [("k", 1), ("k", 2)]
+        rows += [("hot", i) for i in range(cap + 1)]
+        postings = spark.createDataFrame(rows, "key string, doc long")
+        shapes = [
+            sorted(
+                map(repr, _capped_postings(postings, "key", cap, guard).collect())
+            )
+            for guard in (False, True)
+        ]
+        assert shapes[0] == shapes[1]
+        got = _capped_postings(postings, "key", cap, True).collect()
+        assert sum(r.key is None for r in got) == want_null
+        assert {r.key for r in got} - {None} == {"k"}
+    spark.catalog.clearCache()
+
+
 def test_adaptive_prefix_bits_boundaries():
     """Integer-exact corpus-scaled simhash prefix (smallest b in [8,24]
     with 256*2^b >= n) — matches the oracle threshold CASE by construction."""

@@ -460,3 +460,100 @@ def test_scd2_matches_python_reference(spark, events):
                 state, int(ts.timestamp() * 1_000_000), eff_to, 1 if last else 0
             )
     assert got == expect
+
+
+_fold_key = st.one_of(st.none(), st.integers(min_value=0, max_value=4).map(str))
+_fold_batch = st.tuples(
+    st.booleans(),  # fresh: non-NULL keys unique to this batch (insert-only)
+    st.lists(
+        st.tuples(
+            _fold_key,
+            st.integers(min_value=0, max_value=3),
+            st.sampled_from(["p", "q", ""]),
+        ),
+        min_size=1,
+        max_size=8,
+    ),
+)
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    replace=st.booleans(),
+    batches=st.lists(_fold_batch, min_size=2, max_size=3),
+)
+def test_append_or_rewrite_fold_equals_plain_merge_fold(
+    spark, tmp_path_factory, replace, batches
+):
+    """Random sequences of insert-only and mixed batches folded through
+    merge_upsert_scoped — whose buckets append or rewrite — read the same
+    on ParquetTable and ManifestTable as a plain merge_upsert fold, and no
+    bucket ever holds more than MAX_BUCKET_FILES files. Upsert folds carry
+    NULL keys, duplicate source keys under dedupe_order, preserve and
+    set_on_insert; replace_keys folds carry NULL and duplicate scope keys
+    (several versions per key, the SCD2 shape) with a source that is the
+    complete state of its scope keys."""
+    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
+        ManifestTable,
+    )
+    from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
+        MAX_BUCKET_FILES,
+        PART_COL,
+        merge_upsert_scoped,
+    )
+    from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
+        ParquetTable,
+    )
+
+    root = str(tmp_path_factory.mktemp("fold"))
+    tables = [
+        cls(f"{root}/{cls.__name__}", None, [PART_COL], n_buckets=2)
+        for cls in (ParquetTable, ManifestTable)
+    ]
+    if replace:
+        schema = "key string, ver long, payload string"
+        keys = ["key", "ver"]
+        kwargs = lambda i, src: {"replace_keys": src.select("key")}  # noqa: E731
+    else:
+        schema = "key string, seq long, payload string, created long"
+        keys = ["key"]
+        kwargs = lambda i, src: {  # noqa: E731
+            "preserve": ["created"],
+            "dedupe_order": [F.col("seq").desc(), F.col("payload")],
+            "set_on_insert": {"created": F.lit(i).cast("long")},
+        }
+    oracle = spark.createDataFrame([], schema)
+    n_versions: dict = {}
+    for i, (fresh, rows) in enumerate(batches):
+        rows = [
+            (f"b{i}:{k}" if fresh and k is not None else k, n, p)
+            for k, n, p in rows
+        ]
+        if replace:
+            # complete state per scope key: every stored version is re-sent
+            first = {}
+            for k, n, p in rows:
+                first.setdefault(k, (n, p))
+            src_rows = []
+            for k, (n, p) in first.items():
+                n_versions[k] = max(n + 1, n_versions.get(k, 0))
+                src_rows += [(k, v, p) for v in range(n_versions[k])]
+        else:
+            src_rows = [(k, n, p, None) for k, n, p in rows]
+        src = spark.createDataFrame(src_rows, schema)
+        for t in tables:
+            merge_upsert_scoped(spark, t, src, keys, **kwargs(i, src))
+        plain = {
+            k: v for k, v in kwargs(i, src).items() if k != "replace_keys"
+        }
+        oracle = merge_upsert(oracle, src, keys, **plain)
+    want = sorted(repr(tuple(r)) for r in oracle.collect())
+    for t in tables:
+        got = sorted(repr(tuple(r)) for r in t.read(spark).collect())
+        assert got == want, type(t).__name__
+        for p in range(2):
+            assert len(t.data_files(f"{PART_COL}={p}")) <= MAX_BUCKET_FILES

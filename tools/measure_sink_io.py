@@ -1,8 +1,12 @@
 """Measure per-trigger state-table write I/O of the bucket-scoped sinks.
 
-Drives ExactDedupSink (additive fold, ledger-guarded) and IvfIndexSink
-(keyed fold) over the same batches and reports, per trigger, the bytes of
-parquet files that were created or changed under the state-table root.
+Drives ExactDedupSink (additive fold, ledger-guarded), MinHashLshDedupSink
+(signature and pair folds) and IvfIndexSink (keyed fold) over the same
+batches and reports, per trigger, the bytes of parquet files that were
+created or changed under the state-table roots, split into APPENDED bytes
+(new files in a bucket whose stored files all survived — an insert-only
+bucket) and REWRITTEN bytes (every other bucket). The ledgered exact-dedup
+fold always rewrites; folds of new keys append.
 
 The regime matters. A micro-batch touches one bucket per distinct key
 hash, so with B batch keys and N buckets the expected rewrite is
@@ -54,6 +58,7 @@ from financial_data_ingestion_canonical_snowflake_spark.session import (  # noqa
 )
 from financial_data_ingestion_canonical_snowflake_spark.streaming.dedup_stream import (  # noqa: E402
     ExactDedupSink,
+    MinHashLshDedupSink,
 )
 from financial_data_ingestion_canonical_snowflake_spark.streaming.ivf_stream import (  # noqa: E402
     IvfIndexSink,
@@ -71,20 +76,52 @@ def _files(root: str) -> dict[str, tuple[int, float]]:
     return out
 
 
+def _written_split(before: dict, after: dict) -> tuple[int, int]:
+    """(appended, rewritten) bytes of the parquet files created or changed
+    between two ``_files`` listings, by bucket: a bucket whose stored
+    files all survived unchanged was appended to, any other bucket with
+    new files was rewritten. Buckets are the ``txn_part=`` path component,
+    so this reads both the rename layout and the manifest's generation
+    directories."""
+
+    def bucket(p: str) -> str:
+        return next(
+            (c for c in p.split(os.sep) if c.startswith(f"{PART_COL}=")), ""
+        )
+
+    new: dict[str, int] = {}
+    for p, sig in after.items():
+        if before.get(p) != sig:
+            new[bucket(p)] = new.get(bucket(p), 0) + sig[0]
+    kept = {b: True for b in new}
+    for p, sig in before.items():
+        if bucket(p) in kept and after.get(p) != sig:
+            kept[bucket(p)] = False
+    appended = sum(n for b, n in new.items() if b and kept[b])
+    return appended, sum(new.values()) - appended
+
+
 def _written_bytes(before: dict, after: dict) -> int:
     return sum(
         sz for p, (sz, mt) in after.items() if before.get(p) != (sz, mt)
     )
 
 
-def run_sink(mk_table, mk_sink, batches) -> list[int]:
+def run_sink(mk_tables, mk_sink, batches) -> list[tuple[int, int]]:
+    """Per trigger, (appended, rewritten) parquet bytes summed over the
+    sink's state tables."""
+    tables = mk_tables()
+    sink = mk_sink(*tables)
+
+    def listing():
+        return [_files(t.path) if os.path.isdir(t.path) else {} for t in tables]
+
     written = []
-    table = mk_table()
-    sink = mk_sink(table)
     for i, b in enumerate(batches):
-        before = _files(table.path) if os.path.isdir(table.path) else {}
+        before = listing()
         sink(b, i)
-        written.append(_written_bytes(before, _files(table.path)))
+        split = [_written_split(*ba) for ba in zip(before, listing())]
+        written.append((sum(a for a, _r in split), sum(r for _a, r in split)))
     return written
 
 
@@ -272,11 +309,12 @@ def protocol_main() -> None:
             # not with the trigger's delta. This is the dir-granular
             # manifest's scaling seam (VERDICT r14 next-step #4).
             mpath = os.path.join(table.path, "_MANIFEST.json")
+            appended, rewritten = _written_split(before, _files(table.path))
             rows.append(
                 {
-                    "parquet_mb": round(
-                        _written_bytes(before, _files(table.path)) / 1e6, 3
-                    ),
+                    "parquet_mb": round((appended + rewritten) / 1e6, 3),
+                    "appended_mb": round(appended / 1e6, 3),
+                    "rewritten_mb": round(rewritten / 1e6, 3),
                     "commit_json_b": _all_file_bytes(table.path, ".json")
                     - meta_before,
                     "manifest_obj_b": (
@@ -343,12 +381,17 @@ def main() -> None:
 
     results = {
         "exact_dedup": run_sink(
-            lambda: mk("dedup"),
+            lambda: [mk("dedup")],
             lambda t: ExactDedupSink(t, "doc_id", "text"),
             doc_batches,
         ),
+        "minhash_dedup": run_sink(
+            lambda: [mk("sigs"), mk("pairs")],
+            lambda s, p: MinHashLshDedupSink(s, p, "doc_id", "text"),
+            doc_batches,
+        ),
         "ivf_index": run_sink(
-            lambda: mk("ivf"), lambda t: IvfIndexSink(t, cents), emb_batches
+            lambda: [mk("ivf")], lambda t: IvfIndexSink(t, cents), emb_batches
         ),
     }
 
@@ -357,16 +400,20 @@ def main() -> None:
         "n_buckets": n_buckets, "docs": n, "vecs": ne,
     }))
     for k, w in results.items():
-        mb = [round(x / 1e6, 2) for x in w]
+        app = [round(a / 1e6, 3) for a, _r in w]
+        rew = [round(r / 1e6, 3) for _a, r in w]
         print(
-            f"{k:28s} seed write {mb[0]} MB; "
-            f"per-increment MB written: {mb[1:]}  incr total {sum(mb[1:]):.2f}"
+            f"{k:16s} seed write {app[0] + rew[0]:.3f} MB; per increment, "
+            f"appended MB {app[1:]} rewritten MB {rew[1:]}"
         )
     # headline: mean increment-trigger write vs the seeded state size
     for fam, w in results.items():
+        inc = w[1:]
         print(
-            f"{fam}: mean increment write {sum(w[1:]) / n_incr / 1e6:.2f} MB "
-            f"over a {w[0] / 1e6:.2f} MB seeded state"
+            f"{fam}: mean increment write "
+            f"{sum(a for a, _r in inc) / n_incr / 1e6:.3f} MB appended + "
+            f"{sum(r for _a, r in inc) / n_incr / 1e6:.3f} MB rewritten "
+            f"over a {sum(w[0]) / 1e6:.2f} MB seeded state"
         )
     spark.stop()
 
