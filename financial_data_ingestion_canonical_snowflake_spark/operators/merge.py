@@ -487,10 +487,10 @@ def merge_upsert_scoped(
     A batch of new keys therefore writes about its own size; a batch that
     updates keys in k of N buckets rewrites those k buckets — k/N of the
     table, and since B keys spread over ``N * (1 - exp(-B/N))`` buckets,
-    a batch of more than ~N keys rewrites nearly the whole table.
-    ``Pipeline.run_batch`` re-merges its full history every call, so every
-    stored key matches and every bucket is rewritten; only a delta-scoped
-    source would change that. ``table`` must have
+    a batch of more than ~N keys rewrites nearly the whole table — unless,
+    as in ``Pipeline.run_batch`` (which merges only its key closure), most
+    of its keys are new: only the buckets holding an updated key rewrite.
+    ``table`` must have
     ``partition_by=[PART_COL]``. Returns the rel-paths of the partitions
     the merge changed, in either mode.
 

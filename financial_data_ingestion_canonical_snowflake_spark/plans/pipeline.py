@@ -14,15 +14,26 @@
 Session scoping of the reference's TEMP tables becomes plain DataFrame
 hand-off inside one SparkSession; ``stg_header`` is cached because stages
 04/05/06 all consume it (SURVEY.md §4).
+
+Stages 03-06 are one function, :func:`merge_canonical`, shared with the
+streaming ``FullCanonicalSink``. ``run_batch`` feeds it only the KEY
+CLOSURE of the rows its own ingest loaded (:func:`key_closure`): every RAW
+row, old or new, in a rank group those rows touch, so ranking, duplicate
+flags and survivorship equal a full-history run, and the merges see only
+the delta's keys (insert-only buckets append). A run that loads no rows
+runs no transform and no merge. A run that died between its ingest and
+its last merge leaves a marker file; the next run re-derives all of RAW.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -38,7 +49,7 @@ from .ops_views import (
     smoke_counts,
     smoke_probes,
 )
-from .transform_headers import transform_headers
+from .transform_headers import rank_keys, source_txn_id, transform_headers
 from .transform_lines import transform_lines
 
 # The reference's three COPY statements (sql/01_raw_ingestion.sql:62,89,116).
@@ -66,10 +77,10 @@ class PipelineConfig:
     join_mode: str = "faithful"  # 'faithful' (file-granular J1) | 'row'
     batch_ts: dt.datetime | None = None  # pin for deterministic tests
     skip_loaded_files: bool = True  # COPY load-history emulation
-    # hash-bucket count for partition-scoped canonical merges; a batch
-    # updating keys in k buckets rewrites k/N of the table (thousands at
-    # 100 TB). run_batch re-merges the full history, so every bucket
-    # holding stored rows is rewritten on every call
+    # hash-bucket count for partition-scoped canonical merges. run_batch
+    # merges only its key closure: a bucket holding none of its keys is
+    # not written, one receiving only new keys appends them, and one
+    # holding an updated key (a restatement) is rewritten
     merge_buckets: int = 16
     # also register the OPS views as durable catalog objects (reference
     # sql/07_ops_views.sql creates durable views, not session temp views)
@@ -94,6 +105,7 @@ class Pipeline:
             "CSV": ParquetTable(f"{w}/raw/raw_csv_generic"),
         }
         self.raw_load_audit = ParquetTable(f"{w}/raw/raw_load_audit", schemas.RAW_LOAD_AUDIT)
+        self.pending = f"{w}/_merge_pending"  # see run_batch
         # canonical tables are hash-bucket partitioned on the merge key so
         # a merge writes only the buckets its source touches; PART_COL
         # never leaves storage — read()
@@ -122,9 +134,16 @@ class Pipeline:
         )
 
     # ------------------------------------------------------------------
-    def ingest(self) -> dict[str, DataFrame]:
+    def ingest(self) -> tuple[dict[str, DataFrame | None], dict[str, DataFrame]]:
         """Stage 01: one COPY per spec + audit capture immediately after each
-        (reference sql/01_raw_ingestion.sql:74-86 in-session coupling)."""
+        (reference sql/01_raw_ingestion.sql:74-86 in-session coupling).
+
+        Returns the RAW tables (full history; ``None`` for a table never
+        written) and, per RAW table this call appended to, a read of the
+        parquet files it wrote: the rows it loaded. Those files are told
+        apart by listing the table before and after the appends, so the
+        list is bounded by the appends' write tasks, not by the number of
+        input files."""
         # COPY load-history emulation as a broadcast LEFT ANTI join against
         # the audit's file list — never a driver-collected set: at warehouse
         # scale the history holds millions of files, and a literal IN-list
@@ -175,6 +194,7 @@ class Pipeline:
                 (active if has_rows else skipped).append(item)
             for _, raw, _a in skipped:
                 raw.unpersist()
+            before = {k: set(t.data_files("")) for k, t in self.raw_tables.items()}
             list(ex.map(land, active))
         # audit rows land for EVERY spec that saw files — including fully
         # failed loads (rows_loaded=0 -> LOAD_FAILED rows must reach
@@ -187,7 +207,13 @@ class Pipeline:
             self.raw_load_audit.append(
                 self.spark.createDataFrame(all_audit, schemas.RAW_LOAD_AUDIT)
             )
-        return {k: t.read(self.spark) if t.exists() else None for k, t in self.raw_tables.items()}
+        raw = {k: t.read(self.spark) if t.exists() else None for k, t in self.raw_tables.items()}
+        landed = {}
+        for k, t in self.raw_tables.items():
+            new = sorted(set(t.data_files("")) - before[k])
+            if new:  # the history's schema: no second inference job
+                landed[k] = self.spark.read.schema(raw[k].schema).parquet(*new)
+        return raw, landed
 
     # ------------------------------------------------------------------
     def _tables(self) -> list[ParquetTable]:
@@ -213,88 +239,50 @@ class Pipeline:
         return deleted
 
     # ------------------------------------------------------------------
+    def _scope(
+        self,
+        raw: dict[str, DataFrame | None],
+        landed: dict[str, DataFrame],
+        recover: bool,
+    ) -> dict[str, DataFrame] | None:
+        """The RAW rows stages 03-06 re-derive this run: all of RAW when
+        ``recover`` (an earlier run died before its merges finished), else
+        the key closure of the rows this run's ingest landed, or ``None``
+        when there is nothing to merge."""
+        history = {k: v for k, v in raw.items() if v is not None}
+        if recover:
+            return history or None
+        return key_closure(history, landed) if landed else None
+
     def run_batch(self) -> dict:
-        """Stages 01-08; returns the smoke-test artifacts."""
+        """Stages 01-08; returns the smoke-test artifacts.
+
+        The marker file ``_merge_pending`` brackets the run: written before
+        ingest lands any row, removed once every merge has committed. A
+        run that finds it left behind re-derives all of RAW, because the
+        rows a dead run landed seed no later closure (their files are in
+        the load history, so no later ingest loads them again)."""
         vacuumed = self.vacuum()  # maintenance first: age-gated, crash-safe
-        raw = self.ingest()
-        ts = self._ts()
-
-        stg_header = transform_headers(
-            raw.get("JSON"), raw.get("XML"), raw.get("CSV")
-        ).cache()
-
-        # Stage 05a: CAN_TXN merge (reference sql/05_merge_canonical.sql:6-30)
-        hdr_source = (
-            stg_header.filter(F.col("rn") == 1)
-            .withColumn(
-                "is_valid", scalars_is_valid()
-            )
-            .withColumn("created_ts", ts)
-            .withColumn("updated_ts", ts)
-            .select(*CAN_TXN_COLS)
-        )
-
-        # 05a and 05b write DISJOINT tables from cached staging frames —
-        # run them concurrently (Spark's scheduler interleaves independent
-        # jobs; a real warehouse runs independent MERGEs the same way).
-        # The header merge launches FIRST, so the line transform's plan
-        # construction + analysis (driver-side Catalyst work, a measurable
-        # slice of a small batch) overlaps the header merge's execution;
-        # worst case the two threads race to fill the stg_header cache —
-        # wall-time harmless, the second consumer reads the cache.
-        def _merge_txn() -> None:
-            merge_upsert_scoped(
+        recover = os.path.exists(self.pending)
+        os.makedirs(os.path.dirname(self.pending), exist_ok=True)
+        open(self.pending, "a").close()
+        raw, landed = self.ingest()
+        scope = self._scope(raw, landed, recover)
+        if scope is not None:
+            merge_canonical(
                 self.spark,
                 self.can_txn,
-                hdr_source,
-                keys=["canonical_txn_id"],
-                preserve=["created_ts"],
-                dedupe_order=[F.col("ingest_ts").desc(), F.col("src_file")],
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            txn_future = ex.submit(_merge_txn)
-
-            # Stage 05b: CAN_TXN_LINE merge (:32-53) with the M2
-            # source-dedupe guard (duplicate (id, line_number) keys ->
-            # latest ingest wins). Declared while 05a runs.
-            stg_line = transform_lines(
-                raw.get("JSON"),
-                raw.get("XML"),
-                raw.get("CSV"),
-                stg_header,
-                join_mode=self.cfg.join_mode,
-            ).cache()
-            line_source = (
-                stg_line.withColumn("created_ts", ts)
-                .withColumn("updated_ts", ts)
-                .select(*CAN_LINE_COLS)
-            )
-            line_future = ex.submit(
-                merge_upsert_scoped,
-                self.spark,
                 self.can_txn_line,
-                line_source,
-                ["canonical_txn_id", "line_number"],
-                None,
-                ["created_ts"],
-                [F.col("ingest_ts").desc(), F.col("attributes")],
+                self.can_txn_anomaly,
+                scope,
+                self._ts(),
+                self.cfg.join_mode,
+                history=raw,
             )
-            txn_future.result()
-            line_future.result()
-
-        # Stage 06: anomalies join the POST-merge CAN_TXN (ordering constraint
-        # noted at SURVEY §3 entry point 3).
-        can_txn_df = self.can_txn.read(self.spark)
-        stg_anomaly = stage_anomalies(stg_header, stg_line, can_txn_df)
-        merge_upsert_scoped(
-            self.spark,
-            self.can_txn_anomaly,
-            anomaly_merge_source(stg_anomaly, ts).select(*CAN_ANOMALY_COLS),
-            keys=["canonical_txn_id", "anomaly_code", "line_number", "anomaly_detail"],
-        )
+        os.remove(self.pending)
 
         # Stages 07-08
+        can_txn_df = self.can_txn.read(self.spark)
         can_line_df = self.can_txn_line.read(self.spark)
         anomaly_df = self.can_txn_anomaly.read(self.spark)
         audit_df = self.raw_load_audit.read(self.spark)
@@ -306,15 +294,196 @@ class Pipeline:
                 self.can_txn.path,
                 self.can_txn_anomaly.path,
             )
-        result = {
+        return {
             "smoke_counts": smoke_counts(can_txn_df, can_line_df, anomaly_df),
             "views": views,
             "probes": smoke_probes(views),
             "vacuumed": vacuumed,
         }
+
+
+def _closure_group(client_id: Column, source_txn_id: Column) -> Column:
+    """A row's closure class: its rank group ``(client_id, source_txn_id)``,
+    except that every NULL-client row falls in one class — their
+    canonical_txn_id is NULL (``scalars.canonical_txn_id``), so they all
+    share one CAN_TXN merge key whatever their source id."""
+    return F.when(client_id.isNotNull(), source_txn_id)
+
+
+def key_closure(
+    raw: dict[str, DataFrame], landed: dict[str, DataFrame]
+) -> dict[str, DataFrame]:
+    """The RAW rows, per source system, that stages 03-06 must re-derive
+    once ``landed`` (per source system, the rows a run appended to RAW) is
+    in RAW: every row, old or new and of any format, whose rank group
+    (``client_id``, original ``source_txn_id``; compared null-safe, as
+    ``rank_duplicates`` partitions) appears among the landed rows. A group
+    is then ranked whole, so ``rn``, ``dup_cnt`` and latest-wins
+    survivorship equal the full-history run's.
+
+    Found with key-only projections (:func:`rank_keys`): the landed rows'
+    groups, read from the run's new RAW files only, are broadcast and
+    semi-joined to each RAW table (a path probe per payload; no hashing or
+    JSON rendering). Not cached: each transform's plan reads it once and
+    reuses one broadcast across the three tables, where three separately
+    cached closures each cost a broadcast job (measured: 4 more jobs per
+    ``batch_load`` op, equal op time)."""
+    seeds = reduce(
+        DataFrame.unionByName,
+        [
+            rank_keys(df, fmt).select(
+                F.col("client_id").alias("__client"),
+                _closure_group(F.col("client_id"), F.col("source_txn_id")).alias(
+                    "__group"
+                ),
+            )
+            for fmt, df in landed.items()
+        ],
+    )
+    # no distinct: a repeated key only repeats a broadcast row, where the
+    # distinct would cost a shuffle stage
+    seeds = F.broadcast(seeds)
+    return {
+        fmt: df.join(
+            seeds,
+            F.col("client_id").eqNullSafe(F.col("__client"))
+            & _closure_group(F.col("client_id"), source_txn_id(fmt)).eqNullSafe(
+                F.col("__group")
+            ),
+            "left_semi",
+        )
+        for fmt, df in raw.items()
+    }
+
+
+def _surviving_files(
+    history: dict[str, DataFrame | None], stg_header: DataFrame
+) -> dict[str, DataFrame]:
+    """Faithful-mode line input: every RAW row of each ``(client_id,
+    src_file)`` holding a surviving header of ``stg_header`` — the
+    file-granular join pairs a header with every row of its file."""
+    files = stg_header.filter(F.col("rn") == 1).select(
+        "source_system", "client_id", "src_file"
+    ).distinct()
+    return {
+        fmt: df.join(
+            F.broadcast(
+                files.filter(F.col("source_system") == fmt).drop("source_system")
+            ),
+            ["client_id", "src_file"],
+            "left_semi",
+        )
+        for fmt, df in history.items()
+        if df is not None
+    }
+
+
+def merge_canonical(
+    spark: SparkSession,
+    can_txn: ParquetTable,
+    can_txn_line: ParquetTable,
+    can_txn_anomaly: ParquetTable,
+    raw: dict[str, DataFrame],
+    ts: Column,
+    join_mode: str,
+    history: dict[str, DataFrame | None] | None = None,
+) -> None:
+    """Stages 03-06 over ``raw`` (RAW rows keyed by source system): header
+    transform, CAN_TXN merge, line transform, CAN_TXN_LINE merge, anomaly
+    staging and CAN_TXN_ANOMALY merge. ``ts`` stamps created/updated/
+    detected timestamps.
+
+    ``raw`` must hold whole rank groups (a :func:`key_closure`, a full
+    history, or a streaming micro-batch taken as it is). In
+    ``join_mode='faithful'`` a header's lines come from every row of its
+    file, so with ``history`` given (the full RAW tables) the line
+    transform reads the files of the surviving headers from it; without
+    it, from ``raw`` itself."""
+    stg_header = transform_headers(
+        raw.get("JSON"), raw.get("XML"), raw.get("CSV")
+    ).cache()
+
+    stg_line: DataFrame | None = None
+    try:
+        hdr_source = header_merge_source(stg_header, ts)
+
+        # 05a and 05b write DISJOINT tables from cached staging frames — run
+        # them concurrently (Spark's scheduler interleaves independent jobs; a
+        # real warehouse runs independent MERGEs the same way). The header
+        # merge launches FIRST, so the line transform's plan construction +
+        # analysis (driver-side Catalyst work, a measurable slice of a small
+        # batch) overlaps the header merge's execution; worst case the two
+        # threads race to fill the stg_header cache — wall-time harmless, the
+        # second consumer reads the cache.
+        def _merge_txn() -> None:
+            merge_upsert_scoped(
+                spark,
+                can_txn,
+                hdr_source,
+                keys=["canonical_txn_id"],
+                preserve=["created_ts"],
+                dedupe_order=[F.col("ingest_ts").desc(), F.col("src_file")],
+            )
+
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            txn_future = ex.submit(_merge_txn)
+
+            # Stage 05b: CAN_TXN_LINE merge (:32-53) with the M2 source-dedupe
+            # guard (duplicate (id, line_number) keys -> latest ingest wins).
+            # Declared while 05a runs.
+            line_raw = raw
+            if history is not None and join_mode == "faithful":
+                line_raw = _surviving_files(history, stg_header)
+            stg_line = transform_lines(
+                line_raw.get("JSON"),
+                line_raw.get("XML"),
+                line_raw.get("CSV"),
+                stg_header,
+                join_mode=join_mode,
+            ).cache()
+            line_source = (
+                stg_line.withColumn("created_ts", ts)
+                .withColumn("updated_ts", ts)
+                .select(*CAN_LINE_COLS)
+            )
+            line_future = ex.submit(
+                merge_upsert_scoped,
+                spark,
+                can_txn_line,
+                line_source,
+                ["canonical_txn_id", "line_number"],
+                None,
+                ["created_ts"],
+                [F.col("ingest_ts").desc(), F.col("attributes")],
+            )
+            txn_future.result()
+            line_future.result()
+
+        # Stage 06: anomalies join the POST-merge CAN_TXN (ordering constraint
+        # noted at SURVEY §3 entry point 3).
+        stg_anomaly = stage_anomalies(stg_header, stg_line, can_txn.read(spark))
+        merge_upsert_scoped(
+            spark,
+            can_txn_anomaly,
+            anomaly_merge_source(stg_anomaly, ts).select(*CAN_ANOMALY_COLS),
+            keys=["canonical_txn_id", "anomaly_code", "line_number", "anomaly_detail"],
+        )
+    finally:  # a failed merge leaves no cache behind either
         stg_header.unpersist()
-        stg_line.unpersist()
-        return result
+        if stg_line is not None:
+            stg_line.unpersist()
+
+
+def header_merge_source(stg_header: DataFrame, ts: Column) -> DataFrame:
+    """The CAN_TXN merge source: surviving headers, stamped (reference
+    sql/05_merge_canonical.sql:6-30)."""
+    return (
+        stg_header.filter(F.col("rn") == 1)
+        .withColumn("is_valid", scalars_is_valid())
+        .withColumn("created_ts", ts)
+        .withColumn("updated_ts", ts)
+        .select(*CAN_TXN_COLS)
+    )
 
 
 def scalars_is_valid() -> F.Column:

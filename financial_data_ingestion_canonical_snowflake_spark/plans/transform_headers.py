@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import scalars
-from ..functions.variant import vget, vstr_chain
+from ..functions.variant import vstr_chain
 from ..operators.dedupe import rank_duplicates
 from ..schemas import MONEY
 
@@ -32,6 +32,37 @@ def _attributes_json(payload_json: F.Column, payload_key: str, fmt: str) -> F.Co
     )
 
 
+# The per-format source-id path chains (reference :13, :28, :43): the rank
+# key ``transform_headers`` partitions on, and the key-only projection the
+# delta closure (``rank_keys``) reads, written once for both.
+_SOURCE_TXN_ID = {
+    "JSON": lambda p: vstr_chain(p, "transaction_id", "txn_id", "id"),
+    "XML": lambda p: vstr_chain(
+        p, "$['@transaction_id']", "transaction_id", "txn_id", "id"
+    ),
+    "CSV": lambda p: scalars.array_get(p, 0),
+}
+
+
+def source_txn_id(source_system: str) -> F.Column:
+    """The ORIGINAL source_txn_id of a RAW row of ``source_system`` (before
+    the payload-hash fallback), read from its ``payload``."""
+    return _SOURCE_TXN_ID[source_system](F.col("payload"))
+
+
+def rank_keys(raw: DataFrame, source_system: str) -> DataFrame:
+    """Key-only projection of one RAW table: the rank group
+    ``(client_id, source_txn_id)`` plus its lineage ``src_file``, over the
+    rows ``transform_headers`` reads. No ``to_json``/``sha256``/
+    ``attributes``: a path probe per payload, for finding a delta's key
+    closure."""
+    return raw.filter(F.col("payload").isNotNull()).select(
+        "client_id",
+        source_txn_id(source_system).alias("source_txn_id"),
+        "src_file",
+    )
+
+
 def _json_header(raw: DataFrame) -> DataFrame:
     """json_hdr CTE (reference :11-25)."""
     p = F.col("payload")
@@ -39,7 +70,7 @@ def _json_header(raw: DataFrame) -> DataFrame:
     return raw.select(
         F.col("client_id"),
         F.lit("JSON").alias("source_system"),
-        vstr_chain(p, "transaction_id", "txn_id", "id").alias("source_txn_id"),
+        source_txn_id("JSON").alias("source_txn_id"),
         scalars.try_to_timestamp(
             vstr_chain(p, "transaction_ts", "transaction_time", "timestamp", "txn_timestamp")
         ).alias("txn_timestamp"),
@@ -65,9 +96,7 @@ def _xml_header(raw: DataFrame) -> DataFrame:
     return raw.select(
         F.col("client_id"),
         F.lit("XML").alias("source_system"),
-        vstr_chain(p, "$['@transaction_id']", "transaction_id", "txn_id", "id").alias(
-            "source_txn_id"
-        ),
+        source_txn_id("XML").alias("source_txn_id"),
         scalars.try_to_timestamp(
             vstr_chain(p, "transaction_ts", "transaction_time", "timestamp", "txn_timestamp")
         ).alias("txn_timestamp"),
@@ -93,7 +122,7 @@ def _csv_header(raw: DataFrame) -> DataFrame:
     return raw.select(
         F.col("client_id"),
         F.lit("CSV").alias("source_system"),
-        scalars.array_get(p, 0).alias("source_txn_id"),
+        source_txn_id("CSV").alias("source_txn_id"),
         scalars.try_to_timestamp(scalars.array_get(p, 1)).alias("txn_timestamp"),
         F.upper(scalars.array_get(p, 2)).alias("currency"),
         scalars.try_to_number(scalars.array_get(p, 3)).alias("total_amount"),

@@ -24,10 +24,9 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import schemas
 from ..operators.merge import require_bucketed
 from ..operators.storage import ParquetTable
-from ..plans.pipeline import CAN_TXN_COLS, scalars_is_valid
+from ..plans.pipeline import header_merge_source, merge_canonical
 from ..plans.transform_headers import transform_headers
 from .ingest import MergeSink, file_stream, start_merge_stream
 
@@ -43,15 +42,8 @@ def canonical_header_sink(
     def transform(raw_batch: DataFrame) -> DataFrame:
         args: list[DataFrame | None] = [None, None, None]
         args[_FMT_ARG[source_system]] = raw_batch
-        stg = transform_headers(*args)
         ts = F.lit(batch_ts).cast("timestamp") if batch_ts else F.current_timestamp()
-        return (
-            stg.filter(F.col("rn") == 1)
-            .withColumn("is_valid", scalars_is_valid())
-            .withColumn("created_ts", ts)
-            .withColumn("updated_ts", ts)
-            .select(*CAN_TXN_COLS)
-        )
+        return header_merge_source(transform_headers(*args), ts)
 
     return MergeSink(
         can_txn,
@@ -86,18 +78,19 @@ class FullCanonicalSink:
     """foreachBatch sink running the WHOLE canonical chain per micro-batch:
     stage 03 (header transform) → 05a (CAN_TXN merge) → 04 (line flatten)
     → 05b (CAN_TXN_LINE merge) → 06 (anomaly staging + merge) — the batch
-    pipeline's stage functions verbatim (plans/transform_headers.py,
-    plans/transform_lines.py, plans/anomaly.py, operators/merge.py), so an
+    pipeline's own chain, :func:`plans.pipeline.merge_canonical`, so an
     incremental drain and a one-shot batch run of the same inputs produce
     identical canonical tables (asserted in tests/test_streaming.py).
 
     Cross-batch semantics match :func:`canonical_header_sink`'s note:
     within-batch duplicates are flagged exactly like batch; duplicates
-    split across micro-batches are merged latest-wins but not re-flagged.
-    Stage 06 joins the POST-merge CAN_TXN (the reference's ordering
-    constraint, SURVEY §3 entry point 3), so line anomalies always see the
-    canonical rows this batch just merged. All three merges are idempotent
-    — replayed micro-batches (file-source restart) change nothing.
+    split across micro-batches are merged latest-wins but not re-flagged
+    (the micro-batch is the chain's whole input — ``run_batch`` instead
+    widens its input to the key closure over RAW). Stage 06 joins the
+    POST-merge CAN_TXN (the reference's ordering constraint, SURVEY §3
+    entry point 3), so line anomalies always see the canonical rows this
+    batch just merged. All three merges are idempotent — replayed
+    micro-batches (file-source restart) change nothing.
     """
 
     def __init__(
@@ -119,62 +112,20 @@ class FullCanonicalSink:
         self.batch_ts = batch_ts
 
     def __call__(self, raw_batch: DataFrame, batch_id: int) -> None:
-        from ..plans.anomaly import anomaly_merge_source, stage_anomalies
-        from ..plans.pipeline import CAN_ANOMALY_COLS, CAN_LINE_COLS
-        from ..plans.transform_lines import transform_lines
-
-        spark = raw_batch.sparkSession
-        args: list[DataFrame | None] = [None, None, None]
-        args[_FMT_ARG[self.source_system]] = raw_batch
         ts = (
             F.lit(self.batch_ts).cast("timestamp")
             if self.batch_ts
             else F.current_timestamp()
         )
-
-        # each table merges bucket-scoped through MergeSink
-        stg_header = transform_headers(*args).cache()
-        hdr_source = (
-            stg_header.filter(F.col("rn") == 1)
-            .withColumn("is_valid", scalars_is_valid())
-            .withColumn("created_ts", ts)
-            .withColumn("updated_ts", ts)
-            .select(*CAN_TXN_COLS)
-        )
-        MergeSink(
+        merge_canonical(
+            raw_batch.sparkSession,
             self.can_txn,
-            keys=["canonical_txn_id"],
-            preserve=["created_ts"],
-            dedupe_order=[F.col("ingest_ts").desc(), F.col("src_file")],
-        )(hdr_source, batch_id)
-
-        stg_line = transform_lines(
-            *args, stg_header, join_mode=self.join_mode
-        ).cache()
-        MergeSink(
             self.can_txn_line,
-            keys=["canonical_txn_id", "line_number"],
-            preserve=["created_ts"],
-            dedupe_order=[F.col("ingest_ts").desc(), F.col("attributes")],
-        )(
-            stg_line.withColumn("created_ts", ts)
-            .withColumn("updated_ts", ts)
-            .select(*CAN_LINE_COLS),
-            batch_id,
-        )
-
-        stg_anomaly = stage_anomalies(
-            stg_header, stg_line, self.can_txn.read(spark)
-        )
-        MergeSink(
             self.can_txn_anomaly,
-            keys=[
-                "canonical_txn_id", "anomaly_code", "line_number",
-                "anomaly_detail",
-            ],
-        )(anomaly_merge_source(stg_anomaly, ts).select(*CAN_ANOMALY_COLS), batch_id)
-        stg_header.unpersist()
-        stg_line.unpersist()
+            {self.source_system: raw_batch},
+            ts,
+            self.join_mode,
+        )
 
 
 def stream_raw_to_full_canonical(

@@ -247,18 +247,52 @@ def test_smoke_counts(ran):
     assert counts["CAN_TXN_ANOMALY"] > 0
 
 
-def test_idempotency_and_incremental(spark, fixture_root, tmp_path_factory):
+def _canon_files(pipe, suffix: str = "") -> dict[str, tuple[int, float]]:
+    """(size, mtime) of every file (ending in ``suffix``) under the three
+    canonical tables."""
+    import os
+
+    out = {}
+    for t in (pipe.can_txn, pipe.can_txn_line, pipe.can_txn_anomaly):
+        for root, _dirs, files in os.walk(t.path):
+            for f in (f for f in files if f.endswith(suffix)):
+                st = os.stat(os.path.join(root, f))
+                out[os.path.join(root, f)] = (st.st_size, st.st_mtime)
+    return out
+
+
+def test_idempotency_and_incremental(
+    spark, fixture_root, tmp_path_factory, monkeypatch
+):
+    import os
+
+    from financial_data_ingestion_canonical_snowflake_spark.plans import pipeline
+
     wh = str(tmp_path_factory.mktemp("warehouse_idem"))
     cfg1 = PipelineConfig(ingest_root=fixture_root, warehouse=wh, batch_ts=TS1)
     pipe = Pipeline(spark, cfg1)
     pipe.run_batch()
+    assert not os.path.exists(pipe.pending)  # a finished run leaves no marker
     txn1 = {r.canonical_txn_id: r for r in pipe.can_txn.read(spark).collect()}
 
+    merges = []
+    merge = pipeline.merge_upsert_scoped
+    monkeypatch.setattr(
+        pipeline,
+        "merge_upsert_scoped",
+        lambda *a, **k: merges.append(a[1].path) or merge(*a, **k),
+    )
+
     # Re-run with a later batch_ts: no new files -> canonical values stable,
-    # created_ts preserved (reference sql/05_merge_canonical.sql:22-29)
+    # created_ts preserved (reference sql/05_merge_canonical.sql:22-29);
+    # nothing was loaded, so no merge runs and every canonical file is
+    # left byte-identical, mtime included
+    before = _canon_files(pipe)
     cfg2 = PipelineConfig(ingest_root=fixture_root, warehouse=wh, batch_ts=TS2)
     pipe2 = Pipeline(spark, cfg2)
     pipe2.run_batch()
+    assert merges == []
+    assert _canon_files(pipe2) == before
     txn2 = {r.canonical_txn_id: r for r in pipe2.can_txn.read(spark).collect()}
     assert set(txn1) == set(txn2)
     for cid, row1 in txn1.items():
@@ -276,12 +310,19 @@ def test_idempotency_and_incremental(spark, fixture_root, tmp_path_factory):
             '{"transaction_id": "TXN-1006", "transaction_ts": "2026-02-01T00:00:00",'
             ' "currency": "usd", "total_amount": "9.99", "customer_id": "CUST-1"}\n'
         )
+    stored = _canon_files(pipe2, ".parquet")
     try:
         pipe3 = Pipeline(
             spark,
             PipelineConfig(ingest_root=fixture_root, warehouse=wh, batch_ts=TS2),
         )
         pipe3.run_batch()
+        # the new key's bucket appends: every stored data file survives,
+        # and the one new file is CAN_TXN's
+        after = _canon_files(pipe3, ".parquet")
+        assert {p: after.get(p) for p in stored} == stored
+        added = set(after) - set(stored)
+        assert len(added) == 1 and added.pop().startswith(pipe3.can_txn.path)
         txn3 = {r.canonical_txn_id: r for r in pipe3.can_txn.read(spark).collect()}
         assert len(txn3) == len(txn2) + 1
         new = [r for cid, r in txn3.items() if cid not in txn2]
@@ -291,8 +332,6 @@ def test_idempotency_and_incremental(spark, fixture_root, tmp_path_factory):
         assert pipe3.can_txn_line.read(spark).count() == line_count
         assert pipe3.can_txn_anomaly.read(spark).count() == anom_count
     finally:
-        import os
-
         os.remove(f"{fixture_root}/client_c/json/txn_1006.json")
 
 

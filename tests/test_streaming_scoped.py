@@ -368,11 +368,27 @@ def test_chunkfreq_reingest_guard_fails_loudly(spark, tmp_path):
     Replays of the SAME batch stay benign."""
     sink = CdcChunkSink(_bucketed(tmp_path, "gbc"), _bucketed(tmp_path, "gbf"))
     sink(spark.createDataFrame(CH_1, ["doc_id", "text"]), 0)
+    plans = []
+    stage = sink.chunks_table.stage_replace_partitions
+
+    def capture(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return stage(df)
+
+    sink.chunks_table.stage_replace_partitions = capture
     with pytest.raises(ValueError, match="already ingested"):
         sink(
             spark.createDataFrame([(1, "revised text body")], ["doc_id", "text"]),
             1,
         )
+    # the guard lives in the staged chunk write's own plan: column pruning
+    # kept the guarded src_batch_id expression
+    assert len(plans) == 1
+    guarded = [
+        ln for ln in plans[0].splitlines()
+        if "raise_error" in ln and "CDC_REINGEST:" in ln
+    ]
+    assert guarded and all("AS src_batch_id#" in ln for ln in guarded), plans[0]
 
 
 def test_hll_scoped_matches_whole_table(spark, tmp_path):
