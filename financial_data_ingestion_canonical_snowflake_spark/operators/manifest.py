@@ -45,12 +45,12 @@ commit strategy's ``publish_file`` — on a local FS that is ``os.replace``;
 the test's strategy stub models an object PUT instead).
 
 Drop-in: implements the same surface ``merge_upsert_scoped`` / ``rebucket``
-/ ``compact`` consume (``exists/read/scan/read_meta/write_meta/
-overwrite_atomic/replace_partitions/append/data_bytes/data_files/
-partition_dir_names``),
+/ ``compact`` consume (``exists/read/scan/files/file_seq/read_meta/
+write_meta/overwrite_atomic/replace_partitions/append/data_bytes/
+data_files/partition_dir_names``),
 so every scoped-merge feature — per-bucket ledger replay protection, schema
-evolution, auto-rebucket — runs unchanged on either store (pytest-proven
-side by side).
+evolution, auto-rebucket, delta files resolved on read — runs unchanged on
+either store (pytest-proven side by side).
 """
 
 from __future__ import annotations
@@ -65,12 +65,14 @@ from pyspark.sql import functions as F
 
 from .storage import (
     APPEND,
+    DELTA,
     MODE_COL,
     REWRITE,
     LocalFileCommit,
     ParquetTable,
     _parquet_bytes,
-    _UNSET,
+    _record_deltas,
+    delta_parts,
     with_mode,
 )
 
@@ -318,7 +320,7 @@ class ManifestTable(ParquetTable):
             df = reader.parquet(*leaves)
         return df.drop(GEN_COL)
 
-    def scan(self, spark: SparkSession, stored=_UNSET) -> DataFrame:
+    def files(self, spark: SparkSession, stored=None) -> DataFrame:
         """Physical read of the live leaves (partition column included,
         ``__gen`` dropped). The scan's file index holds ONLY referenced
         directories, so stale generations are invisible even mid-GC, and
@@ -327,12 +329,38 @@ class ManifestTable(ParquetTable):
         m = self._load_manifest()
         if not m:
             raise FileNotFoundError(f"{self.path}: empty manifest table")
-        if stored is _UNSET:
-            stored = self.stored_schema()
         return self._read_manifest_leaves(spark, m, stored)
 
-    # read() is inherited: ParquetTable.read goes through exists()/scan()
-    # and the shared _project, all of which this class overrides below
+    def file_seq(self):
+        """Column: the commit sequence of a row's file — the sequence its
+        generation directory is named with (``__gen=<seq>-<uuid>``). A
+        generation is named at stage time with one past the live
+        manifest's sequence, and one writer stages and commits at a time,
+        so a later commit's generations always carry a higher sequence."""
+        return F.regexp_extract(
+            F.col("_metadata.file_path"), rf"{GEN_COL}=(\d+)-", 1
+        ).cast("long")
+
+    def _newer_rows(self, spark: SparkSession, schema, parts, source=None):
+        """The rows of buckets ``parts`` that may shadow rows of older
+        files: those of every generation after the first in each bucket's
+        list, in the live manifest or the retained one ``source`` (None:
+        no such generation)."""
+        from .merge import PART_COL  # local: avoids an import cycle
+
+        m = source or self._load_manifest()
+        rels = {f"{PART_COL}={p}" for p in parts}
+        newer = {
+            rel: gens[1:]
+            for rel, gens in m["parts"].items()
+            if rel in rels and len(gens) > 1
+        }
+        if not newer:
+            return None
+        return self._read_manifest_leaves(spark, {**m, "parts": newer}, schema)
+
+    # scan() and read() are inherited: they go through exists()/files()/
+    # file_seq()/_newer_rows() and the shared _project
 
     def overwrite_atomic(self, df: DataFrame, new_meta: dict | None = None) -> None:
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
@@ -345,6 +373,7 @@ class ManifestTable(ParquetTable):
         writer.parquet(gen_dir)
         new_bytes = _parquet_bytes(gen_dir)
         meta = dict(new_meta) if new_meta is not None else dict(m["meta"] or {})
+        meta.pop("delta_parts", None)  # no delta file survives a rewrite
         if new_meta is not None or m["meta"] is not None:
             meta["total_bytes"] = new_bytes
         parts = {rel: [gen] for rel in self._written_parts(gen_dir)}
@@ -368,54 +397,63 @@ class ManifestTable(ParquetTable):
     def stage_replace_partitions(self, df: DataFrame) -> dict:
         """STAGE half (see ``ParquetTable.stage_replace_partitions``): write
         the replacement partitions into fresh, UNREFERENCED generation
-        directories — one for the REWRITE partitions and one for the
-        APPEND partitions (``MODE_COL``), written by ONE job with the
-        generation as the top hive level under ``data/``. Nothing
-        references a generation until the commit's manifest PUT, so a
-        staged-then-crashed write is invisible garbage — the protocol's
-        pre-existing story. The generations are named with the seq
-        visible at stage time; the name only needs uniqueness (the uuid
-        suffix), the committed seq is re-read at commit time."""
+        directories — one per write mode (``MODE_COL``), written by ONE
+        job with the generation as the top hive level under ``data/``.
+        Nothing references a generation until the commit's manifest PUT,
+        so a staged-then-crashed write is invisible garbage — the
+        protocol's pre-existing story. The generations are named with one
+        past the sequence visible at stage time, which orders delta files
+        (:meth:`file_seq`); the committed seq is re-read at commit time."""
         if not self.partition_by:
             raise ValueError(
                 f"{self.path}: replace_partitions needs partition_by"
             )
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
-        gens = {mode: self._new_gen(m["seq"] + 1) for mode in (REWRITE, APPEND)}
-        gen_value = lambda mode: F.lit(gens[mode].split("=", 1)[1])  # noqa: E731
+        modes = (REWRITE, APPEND, DELTA)
+        gens = {mode: self._new_gen(m["seq"] + 1) for mode in modes}
+        gen_of = F.lit(gens[REWRITE].split("=", 1)[1])
+        for mode in (APPEND, DELTA):
+            gen_of = F.when(
+                F.col(MODE_COL) == mode, F.lit(gens[mode].split("=", 1)[1])
+            ).otherwise(gen_of)
         (
             with_mode(df)
-            .withColumn(
-                GEN_COL,
-                F.when(F.col(MODE_COL) == APPEND, gen_value(APPEND)).otherwise(
-                    gen_value(REWRITE)
-                ),
-            )
+            .withColumn(GEN_COL, gen_of)
             .drop(MODE_COL)
             .write.mode("append")
             .partitionBy(GEN_COL, *self.partition_by)
             .parquet(self._data_root)
         )
+        gens = {
+            mode: g
+            for mode, g in gens.items()
+            if os.path.isdir(os.path.join(self._data_root, g))
+        }
         return {
-            "gens": {
-                mode: g
-                for mode, g in gens.items()
-                if os.path.isdir(os.path.join(self._data_root, g))
-            },
+            "gens": gens,
             "spark": df.sparkSession,
+            "parts": {
+                mode: self._written_parts(os.path.join(self._data_root, g))
+                for mode, g in gens.items()
+            },
         }
 
     def abort_replace_partitions(self, staged: dict) -> None:
         for g in staged["gens"].values():
             self.commit.remove_tree(os.path.join(self._data_root, g))
 
-    def commit_replace_partitions(self, staged: dict) -> list[str]:
+    def commit_replace_partitions(
+        self, staged: dict, meta: dict | None = None
+    ) -> list[str]:
         """COMMIT half: one manifest PUT that re-points each REWRITE leaf at
-        its staged generation and adds the APPEND generation to each
-        APPEND leaf's list (driver-side only — no Spark job, no rename of
+        its staged generation and adds the APPEND or DELTA generation to
+        each such leaf's list (driver-side only — no Spark job, no rename of
         any data path). Raises when a staged generation is gone — another
         commit's GC deleted it while it was still unreferenced — instead
-        of publishing a manifest that re-points nothing."""
+        of publishing a manifest that re-points nothing. ``meta`` (the
+        table metadata this commit leaves) is PUT first, as on
+        ``ParquetTable``; the commit's PUT then drops the rewritten
+        buckets from its delta list."""
         for g in staged["gens"].values():
             if not os.path.isdir(os.path.join(self._data_root, g)):
                 raise FileNotFoundError(
@@ -423,23 +461,29 @@ class ManifestTable(ParquetTable):
                     "another commit landed on the table between stage and "
                     "commit (see merge.StagedScopedMerge)"
                 )
+        if meta is not None:
+            self.write_meta(**_record_deltas(meta, staged["parts"], False))
         m = self._load_manifest() or {"seq": 0, "parts": {}, "meta": None}
         seq = m["seq"] + 1
         bytes_delta = 0  # stats only the TOUCHED leaves (delta cost)
         parts = {k: list(v) for k, v in m["parts"].items()}
         touched = []
-        for mode, gen in staged["gens"].items():
-            gen_dir = os.path.join(self._data_root, gen)
-            for rel in self._written_parts(gen_dir):
-                bytes_delta += _parquet_bytes(os.path.join(gen_dir, rel))
-                if mode == APPEND:
+        for mode, rels in staged["parts"].items():
+            gen = staged["gens"].get(mode)
+            for rel in rels:
+                leaf = os.path.join(self._data_root, gen, rel) if gen else None
+                bytes_delta += _parquet_bytes(leaf) if leaf else 0
+                if mode != REWRITE:
                     parts.setdefault(rel, []).append(gen)
                 else:
                     for old_gen in parts.get(rel, []):
                         bytes_delta -= _parquet_bytes(
                             os.path.join(self._data_root, old_gen, rel)
                         )
-                    parts[rel] = [gen]
+                    if leaf and os.path.isdir(leaf):
+                        parts[rel] = [gen]
+                    else:  # the merge emptied the bucket
+                        parts.pop(rel, None)
                 touched.append(rel)
         if touched:
             # real leaves supersede the explicit-empty pseudo-partition
@@ -447,6 +491,7 @@ class ManifestTable(ParquetTable):
         meta = dict(m["meta"] or {})
         if "total_bytes" in meta:
             meta["total_bytes"] = meta["total_bytes"] + bytes_delta
+        meta = _record_deltas(meta, staged["parts"], True)
         new_m = {"seq": seq, "parts": parts, "meta": meta or m["meta"]}
         self._publish_manifest(new_m, retain_history=True)
         self._prune_history()
@@ -529,8 +574,10 @@ class ManifestTable(ParquetTable):
             )
         with open(hist[-(n_back + 1)]) as f:
             m = json.load(f)
+        # the snapshot's own metadata says which of its buckets hold deltas
+        df = self._read_manifest_leaves(spark, m, self.stored_schema())
         return self._project(
-            self._read_manifest_leaves(spark, m, self.stored_schema())
+            self.resolve(spark, df, m["meta"], delta_parts(m["meta"]), m)
         )
 
     def vacuum(self, min_age_seconds: float = 24 * 3600) -> list[str]:

@@ -24,8 +24,18 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
+
+from .storage import (
+    APPEND,
+    DELTA,
+    MODE_COL,
+    REWRITE,
+    delta_parts,
+)
 
 _T_PRESENT = "__merge_t_present"
 _S_PRESENT = "__merge_s_present"
@@ -70,17 +80,20 @@ class LedgerSpec:
 #: hidden hash-bucket partition column for partition-scoped merges
 PART_COL = "txn_part"
 
-#: an insert-only bucket that already holds this many data files is
-#: rewritten (compacted to one file) instead of appended to, so a bucket
-#: never holds more files than this
+#: a bucket that already holds this many data files is rewritten
+#: (compacted to one file) instead of gaining an appended or delta file, so
+#: a bucket never holds more files than this
 MAX_BUCKET_FILES = 8
 
 #: per-row tag of a scoped merge's output: what the merge did to the row.
-#: A bucket holding an _UPDATE or _DROP row is rewritten; a bucket of
-#: _KEEP and _INSERT rows only appends its _INSERT rows. _DROP rows (the
-#: stored rows a replace_keys merge replaces) are never written.
+#: _REPLACED marks a stored row a replace_keys merge replaces with a
+#: source row of the same merge key, _DROP one it removes outright. A
+#: bucket holding a _DROP row is rewritten; one holding an _UPDATE or
+#: _REPLACED row writes a delta file of its _INSERT and _UPDATE rows; one
+#: of _KEEP and _INSERT rows only appends its _INSERT rows. _REPLACED and
+#: _DROP rows are never written.
 _ROW = "__merge_row"
-_KEEP, _INSERT, _UPDATE, _DROP = 0, 1, 2, 3
+_KEEP, _INSERT, _UPDATE, _REPLACED, _DROP = 0, 1, 2, 3, 4
 
 
 @dataclass
@@ -109,9 +122,13 @@ class StagedScopedMerge:
     meta: dict
 
     def commit(self) -> list[str]:
-        # meta BEFORE the swap — same ordering rationale as the inline path
-        self.table.write_meta(**self.meta)
-        return self.table.commit_replace_partitions(self.staged)
+        # the metadata lands BEFORE the publish: a crash in between leaves
+        # the recorded schema wider than some files (explicit-schema reads
+        # fill NULLs) and buckets listed as holding a delta that never
+        # landed (read as they are) — both harmless; the reverse order
+        # could leave mixed files with no recorded union schema, or a
+        # delta file whose shadowed rows read too
+        return self.table.commit_replace_partitions(self.staged, meta=self.meta)
 
     def abort(self) -> None:
         self.table.abort_replace_partitions(self.staged)
@@ -130,17 +147,18 @@ def require_bucketed(table, owner: str) -> None:
 
     Every sink folds a micro-batch with :func:`merge_upsert_scoped`, which
     reads only the buckets the batch's keys land in and writes each of
-    them in one of two modes: an insert-only bucket gets one new file of
-    its inserted rows; any other bucket, and any bucket already holding
-    ``MAX_BUCKET_FILES`` files, is rewritten. A batch of new keys (the
-    IVF index, MinHash signatures and pairs) therefore writes what it
-    adds, like the reference's MERGE (sql/05_merge_canonical.sql:6-53);
-    a batch that updates keys still rewrites the buckets it touches.
-    Additive folds keep a per-bucket replay ledger inside those buckets
-    (:class:`LedgerSpec`), which makes a replayed micro-batch
-    exactly-once — and, because the ledger row changes on every fold,
-    always rewrites. An unpartitioned table has none of these
-    properties, so it is refused here, at sink construction."""
+    them in one of three modes: an insert-only bucket gets one new file
+    of its inserted rows; a bucket whose batch updates keys gets one
+    delta file of its inserted and updated rows, which reads resolve
+    (the newest file holding a key wins); a bucket losing rows, and any
+    bucket already holding ``MAX_BUCKET_FILES`` files, is rewritten. A
+    batch therefore writes about what it changes, like the reference's
+    MERGE (sql/05_merge_canonical.sql:6-53). Additive folds keep a
+    per-bucket replay ledger inside those buckets (:class:`LedgerSpec`),
+    which makes a replayed micro-batch exactly-once — and, because the
+    ledger row changes on every fold, always rewrites. An unpartitioned
+    table has none of these properties, so it is refused here, at sink
+    construction."""
     if table.partition_by != [PART_COL]:
         raise ValueError(
             f"{owner}: state table {table.path} must be hash-bucketed "
@@ -202,8 +220,6 @@ def _flagged_outer_join(
 
 def dedupe_source(df: DataFrame, keys: Sequence[str], order_cols: Sequence) -> DataFrame:
     """Keep one row per key, ordered by ``order_cols`` (first row wins)."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(*keys).orderBy(*order_cols)
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -463,36 +479,45 @@ def merge_upsert_scoped(
     2. read ONLY those buckets from the target (hive partition pruning — the
        ``isin`` filter prunes directories, verified in tests), under the
        table's stored layout (recorded union schema, else the files' own
-       columns — never a narrower declared schema);
+       columns — never a narrower declared schema). A bucket holding a
+       delta file reads under the newest-file rule (below);
     3. ``merge_upsert`` within the touched buckets (with ``merge_exprs``
        custom matched-row combiners when given — the streaming state sinks'
        additive / least / greatest folds);
     4. sort each touched bucket into a write mode, inside the write job
        (a window over the already-bucketed rows: no extra job):
 
-       - APPEND when no source key matches a stored key (``replace_keys``:
-         when no stored row's scope key is replaced, null-safely) and the
-         bucket holds fewer than ``MAX_BUCKET_FILES`` data files — only
-         the inserted rows are written, as one new file beside the
-         bucket's files. Appended keys never collide with stored ones,
-         so reads need no merge step;
+       - APPEND when no source key matches a stored key and the bucket
+         holds fewer than ``MAX_BUCKET_FILES`` data files — only the
+         inserted rows are written, as one new file beside the bucket's
+         files. Appended keys never collide with stored ones;
+       - DELTA when source keys match stored keys but no stored row is
+         removed outright (``replace_keys``: every replaced stored row's
+         merge key is re-sent by the source), under the same file bound —
+         the inserted and updated rows are written as one new file, a
+         delta, published with a commit sequence. Readers keep, for each
+         merge key, every row of the newest file holding it
+         (``ParquetTable.resolve``), so NULL and duplicate keys read as
+         the rewritten bucket would hold them;
        - REWRITE otherwise — the whole post-merge bucket replaces the
          old one, compacting it to one file. A ledgered fold always
          rewrites (its sentinel row changes), and so does a merge whose
-         output widens the stored layout (``evolve_schema``);
-    5. commit both modes at once (``replace_partitions``: a directory swap
-       per rewritten bucket and a file publish per appended one on
-       ``ParquetTable``; one manifest PUT on ``ManifestTable``).
+         output widens the stored layout (``evolve_schema``). The file
+         bound is the only compaction trigger;
 
-    A batch of new keys therefore writes about its own size; a batch that
-    updates keys in k of N buckets rewrites those k buckets — k/N of the
-    table, and since B keys spread over ``N * (1 - exp(-B/N))`` buckets,
-    a batch of more than ~N keys rewrites nearly the whole table — unless,
-    as in ``Pipeline.run_batch`` (which merges only its key closure), most
-    of its keys are new: only the buckets holding an updated key rewrite.
-    ``table`` must have
+       a bucket of caller-supplied ``parts`` that gets no source row is
+       not written;
+    5. commit every mode at once (``replace_partitions``: a directory swap
+       per rewritten bucket and a file publish per appended or delta one
+       on ``ParquetTable``; one manifest PUT on ``ManifestTable``). The
+       table metadata records the merge keys and the buckets holding a
+       delta (:class:`StagedScopedMerge` has the ordering).
+
+    A batch therefore writes about its own size whether its keys are new
+    or updates — like the reference's MERGE, and like ``Pipeline.
+    run_batch``, which merges only its key closure. ``table`` must have
     ``partition_by=[PART_COL]``. Returns the rel-paths of the partitions
-    the merge changed, in either mode.
+    the merge changed, in any mode.
 
     ``ledger`` + ``batch_id`` add per-bucket replay protection for
     non-idempotent folds (see :class:`LedgerSpec`): buckets whose stored
@@ -531,11 +556,15 @@ def merge_upsert_scoped(
     either overwritten by a matched source row or provably absent from
     the source only when it must not survive. Under that contract the
     full-outer MERGE is equivalent to: drop the target rows whose scope
-    key appears in ``replace_keys`` (a null-safe BROADCAST anti-join —
-    micro-batch key sets are small by the streaming contract, and the
-    pruned target is then never shuffled or sorted, where the full-outer
-    join forced a sort-merge join on the composite key), then union the
-    source in.
+    key appears in ``replace_keys`` (a null-safe left join), then union
+    the source in. A dropped row whose merge key the source re-sends is
+    replaced, not removed, so its bucket can take a delta. The caller
+    decides whether the key set is broadcast: a streaming sink passes
+    ``F.broadcast(keys)`` (micro-batch key sets are small by the
+    streaming contract, and the pruned target is then never shuffled or
+    sorted); without the hint Spark chooses from the sizes it sees, as it
+    does for the MERGE — ``Pipeline.run_batch``'s key set is a whole
+    history on a first load or a recovery run.
     Incompatible with ``preserve``/``dedupe_order``/``set_on_*``/
     ``merge_exprs``/``ledger``/``evolve_schema`` (those give matched rows
     semantics beyond "source wins" — asserted).
@@ -608,8 +637,6 @@ def merge_upsert_scoped(
             src_cached = src = src.persist()
         stored = None
         if exists and meta0 and "schema_json" in meta0:
-            from pyspark.sql import types as T
-
             stored = T.StructType.fromJson(meta0["schema_json"])
         if exists:
             # the physical read goes through the table's scan seam so a
@@ -622,12 +649,15 @@ def merge_upsert_scoped(
             # a declared schema: a declaration narrower than the files
             # would drop the undeclared columns from rewritten buckets and
             # leave appended files unlike their neighbours
-            base = table.scan(spark, stored=stored)
+            base = table.files(spark, stored)
             layout = [f for f in base.schema.fields if f.name != PART_COL]
             tgt = (
                 base
                 .filter(F.col(PART_COL).isin(parts))
                 .select(*[f.name for f in layout], PART_COL)
+            )
+            tgt = table.resolve(
+                spark, tgt, meta0, sorted(set(delta_parts(meta0)) & set(parts))
             )
             if ledger is not None:
                 # in-plan replay skip: ≤ len(parts) sentinel rows broadcast
@@ -661,7 +691,7 @@ def merge_upsert_scoped(
                 )
                 # null-safe, like the MERGE it replaces: a NULL scope key
                 # drops its stored rows too. A left join (not an anti-join)
-                # so the dropped rows still mark their bucket for rewrite;
+                # so the dropped rows still mark their bucket's write mode;
                 # a duplicate scope key can only duplicate dropped rows
                 rk_cols = list(replace_keys.columns)
                 rk = replace_keys.select(
@@ -670,7 +700,7 @@ def merge_upsert_scoped(
                 )
                 merged = (
                     tgt.join(
-                        F.broadcast(rk),
+                        rk,
                         reduce(
                             lambda a, b: a & b,
                             [F.col(c).eqNullSafe(F.col(f"__rk_{c}")) for c in rk_cols],
@@ -755,38 +785,50 @@ def merge_upsert_scoped(
         merged = merged.repartition(
             len(parts) if parts else n_buckets, F.col(PART_COL)
         )
+        rewritten = None
         if _ROW in merged.columns:
-            merged = _bucket_modes(table, merged, parts, layout, out_fields)
+            if replace_keys is not None:
+                rewritten = Observation()
+            merged = _bucket_modes(
+                table,
+                merged,
+                parts,
+                _shape(out_fields) != _shape(layout),
+                keys if replace_keys is not None else None,
+                rewritten,
+            )
         meta = {"n_buckets": n_buckets, "part_col": PART_COL, "keys": keys}
         if meta0 and "total_bytes" in meta0:
             # carry the size tracker forward (replace_partitions applies
             # this batch's delta after the swap) — dropping it would force
             # maybe_rebucket back to a full stat walk per trigger
             meta["total_bytes"] = meta0["total_bytes"]
+        if delta_parts(meta0):
+            meta["delta_parts"] = delta_parts(meta0)
         if ledger is not None:
             # record the ledger layout so maintenance (rebucket) can re-home
             # sentinel rows without the caller re-supplying the spec
             meta["ledger_sentinel"] = ledger.sentinel
             meta["ledger_value_col"] = ledger.value_col
         if exists and (evolve_schema or stored is not None):
-            from pyspark.sql import types as T
-
             evolved = T.StructType(out_fields)
             meta["schema_json"] = evolved.jsonValue()
             if table.schema is not None:
                 table.schema = evolved
-        if stage_only:
-            # run the write job now (so concurrent stagers overlap their
-            # executor work); the caller owns meta-write + swap ordering
-            return StagedScopedMerge(
-                table, table.stage_replace_partitions(merged), meta
+        # the write job runs now (so concurrent stagers overlap their
+        # executor work); a stage_only caller owns the commit order
+        staged = StagedScopedMerge(
+            table, table.stage_replace_partitions(merged), meta
+        )
+        if rewritten is not None:
+            # a bucket whose every row the merge removes stages no file;
+            # it commits as a REWRITE with nothing in it
+            have = {rel for rels in staged.staged["parts"].values() for rel in rels}
+            staged.staged["parts"][REWRITE] = sorted(
+                set(staged.staged["parts"].get(REWRITE, ()))
+                | {f"{PART_COL}={p}" for p in rewritten.get["parts"]} - have
             )
-        # meta lands BEFORE the partition swap: a crash in between leaves the
-        # recorded schema wider than some files — harmless (explicit-schema
-        # reads fill NULLs); the reverse order could leave mixed files with no
-        # recorded union schema, breaking every subsequent footer-inferred read
-        table.write_meta(**meta)
-        return table.replace_partitions(merged)
+        return staged if stage_only else staged.commit()
     finally:
         # unpersist on EVERY exit — a failing trigger (evolve type
         # conflict, write error) must not leak the cached micro-batch
@@ -795,51 +837,74 @@ def merge_upsert_scoped(
             src_cached.unpersist()
 
 
-def _bucket_modes(table, merged: DataFrame, parts, layout, out_fields) -> DataFrame:
+def _shape(fields) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in fields]
+
+
+def _bucket_modes(
+    table,
+    merged: DataFrame,
+    parts,
+    widened: bool,
+    replaced_by: list[str] | None,
+    rewritten: Observation | None = None,
+) -> DataFrame:
     """Sort each bucket of a tagged merge output (``_ROW``, hash-partitioned
-    on ``PART_COL``) into its write mode, IN the write job: a window over
+    on ``PART_COL``) into its write mode, IN the write job: windows over
     the bucket — which the repartition already clusters, so no exchange
-    and no job is added — finds whether any row was updated or dropped.
+    and no job is added — find what the merge did to its rows.
 
-    - APPEND: no stored row of the bucket changes, and the bucket holds
-      fewer than ``MAX_BUCKET_FILES`` files; only the inserted rows are
-      written, as one new file beside the stored ones.
-    - REWRITE: every other bucket, written whole, minus dropped rows.
+    - nothing, when no row was inserted or updated (a bucket of
+      caller-supplied ``parts`` the source never reached);
+    - APPEND: rows were inserted and no stored row changes — only the
+      inserted rows are written;
+    - DELTA: stored rows were updated (or, with ``replaced_by`` — the merge
+      keys of a ``replace_keys`` merge — replaced by a source row of the
+      same key) but none removed outright — the inserted and updated rows
+      are written;
+    - REWRITE: a stored row is removed outright, or the bucket already
+      holds ``MAX_BUCKET_FILES`` files, or the output's columns or types
+      differ from the stored layout (``widened``: an evolving merge, so
+      each bucket's files keep one physical schema) — written whole,
+      minus removed rows.
 
-    An output whose columns or types differ from the stored layout (an
-    evolving merge widening the table) rewrites every bucket, so each
-    bucket's files keep one physical schema."""
-    from pyspark.sql.window import Window
-
-    from .storage import APPEND, MODE_COL, REWRITE
-
-    def shape(fields):
-        return [(f.name, f.dataType.simpleString()) for f in fields]
-
-    if shape(out_fields) != shape(layout):
-        return (
-            merged.filter(F.col(_ROW) != _DROP)
-            .drop(_ROW)
-            .withColumn(MODE_COL, F.lit(REWRITE))
+    ``rewritten`` observes, in the same job, the REWRITE buckets
+    (``parts``), which include any the merge leaves empty."""
+    row = F.col(_ROW)
+    if replaced_by is not None:
+        resent = F.max((row == _INSERT).cast("int")).over(
+            Window.partitionBy(PART_COL, *replaced_by)
         )
-    rewrite = F.max(_ROW).over(Window.partitionBy(PART_COL)) >= _UPDATE
-    full = [
-        p
-        for p in parts
-        if len(table.data_files(f"{PART_COL}={p}")) >= MAX_BUCKET_FILES
-    ]
-    if full:
-        rewrite = rewrite | F.col(PART_COL).isin(full)
-    return (
-        merged.withColumn(
-            MODE_COL, F.when(rewrite, F.lit(REWRITE)).otherwise(F.lit(APPEND))
+        merged = merged.withColumn(
+            _ROW, F.when((row == _DROP) & (resent == 1), _REPLACED).otherwise(row)
         )
-        .filter(
-            (F.col(_ROW) == _INSERT)
-            | ((F.col(MODE_COL) == REWRITE) & (F.col(_ROW) != _DROP))
-        )
-        .drop(_ROW)
+    top = F.max(_ROW).over(Window.partitionBy(PART_COL))
+    if widened:
+        forced = F.lit(True)
+    else:
+        full = [
+            p
+            for p in parts
+            if len(table.data_files(f"{PART_COL}={p}")) >= MAX_BUCKET_FILES
+        ]
+        forced = F.col(PART_COL).isin(full) if full else F.lit(False)
+    mode = (
+        F.when((top == _DROP) | (forced & (top > _KEEP)), F.lit(REWRITE))
+        .when(top == _INSERT, F.lit(APPEND))
+        .otherwise(F.lit(DELTA))
     )
+    written = F.when(
+        F.col(MODE_COL) == REWRITE, row.isin(_KEEP, _INSERT, _UPDATE)
+    ).otherwise(row.isin(_INSERT, _UPDATE))
+    merged = merged.withColumn(MODE_COL, mode)
+    if rewritten is not None:
+        merged = merged.observe(
+            rewritten,
+            F.collect_set(F.when(F.col(MODE_COL) == REWRITE, F.col(PART_COL))).alias(
+                "parts"
+            ),
+        )
+    return merged.filter(written).drop(_ROW)
 
 
 def _ledger_rows_plan(
@@ -950,7 +1015,9 @@ def rebucket(
         out = df.withColumn(PART_COL, part_expr(key0, new_n_buckets))
     # one right-sized file per new bucket, same as the scoped write path
     out = out.repartition(new_n_buckets, F.col(PART_COL))
-    table.overwrite_atomic(out, new_meta=dict(meta, n_buckets=new_n_buckets))
+    # overwrite_atomic leaves no delta file, so the table's delta list goes
+    new_meta = {k: v for k, v in meta.items() if k != "delta_parts"}
+    table.overwrite_atomic(out, new_meta=dict(new_meta, n_buckets=new_n_buckets))
     table.n_buckets = new_n_buckets
     return new_n_buckets
 

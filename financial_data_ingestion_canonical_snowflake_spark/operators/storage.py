@@ -16,9 +16,11 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import uuid
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -33,12 +35,34 @@ META_NAME = "_fincan_meta.json"
 #: output and consumed by the commit, never seen by the live table: one
 #: more hive level here (``<tmp>/__mode=append/txn_part=3``), one staged
 #: generation per mode in ``ManifestTable``. A REWRITE partition replaces
-#: the live one; an APPEND partition's files are added beside the live
-#: files (its rows are new keys only — see ``merge.merge_upsert_scoped``).
+#: the live one. An APPEND partition's files are added beside the live
+#: files (its rows are new keys only), and so are a DELTA partition's,
+#: whose rows are the new state of keys the live files already hold: a
+#: delta file is published with a commit sequence (:meth:`ParquetTable.
+#: file_seq`), and reads keep, per merge key, only the rows of the newest
+#: file holding it (:meth:`ParquetTable.resolve`; see ``merge.merge_upsert_scoped``).
 #: Frames without the column stage as REWRITE.
 MODE_COL = "__mode"
 APPEND = "append"
+DELTA = "delta"
 REWRITE = "rewrite"
+
+#: a delta file published into a ``ParquetTable`` partition is named
+#: ``delta-<seq>-<spark file name>``; ``seq`` counts the partition's delta
+#: commits, so a newer delta always sorts above an older one and above
+#: the partition's other files (sequence 0)
+DELTA_PREFIX = "delta-"
+DELTA_FILE = re.compile(rf"^{DELTA_PREFIX}([0-9]+)-")
+
+#: the per-row commit sequence of the file a row was read from, carried
+#: only between a physical read and the newest-file rule
+SEQ_COL = "__seq"
+
+#: SQL form of :meth:`ParquetTable.file_seq`, for relations built as text
+_FILE_SEQ_SQL = (
+    f"CAST(COALESCE(NULLIF(regexp_extract(_metadata.file_name, "
+    f"'{DELTA_FILE.pattern}', 1), ''), '0') AS BIGINT)"
+)
 
 
 def with_mode(df: DataFrame) -> DataFrame:
@@ -48,6 +72,41 @@ def with_mode(df: DataFrame) -> DataFrame:
     if MODE_COL in df.columns:
         return df
     return df.withColumn(MODE_COL, F.lit(REWRITE))
+
+
+def delta_parts(meta: dict | None) -> list[int]:
+    """Bucket ids the table metadata records as holding a delta file."""
+    return list((meta or {}).get("delta_parts", ()))
+
+
+def _bucket_ids(rels) -> set[int]:
+    """Hash-bucket ids of partition rel-paths (``txn_part=3``)."""
+    from .merge import PART_COL  # local: avoids an import cycle
+
+    return {
+        int(c.split("=", 1)[1])
+        for rel in rels
+        for c in rel.split(os.sep)
+        if c.startswith(f"{PART_COL}=")
+    }
+
+
+def _record_deltas(meta: dict, parts: dict, swapped: bool) -> dict:
+    """``meta`` with its delta list updated for a commit of the staged
+    ``parts`` (mode -> partition rel-paths, ``txn_part=3``): the DELTA
+    buckets join it before their files are published; the REWRITE buckets
+    leave it only once ``swapped`` — their delta files are gone then. A
+    crash between the two leaves buckets listed that hold no delta, which
+    the newest-file rule reads as they are; the reverse order could leave
+    a delta file whose shadowed rows read too."""
+
+    now = set(delta_parts(meta)) | _bucket_ids(parts.get(DELTA, ()))
+    if swapped and now:
+        now -= _bucket_ids(parts.get(REWRITE, ()))
+    out = {k: v for k, v in meta.items() if k != "delta_parts"}
+    if now:
+        out["delta_parts"] = sorted(now)
+    return out
 
 
 class LocalFileCommit:
@@ -91,6 +150,27 @@ class LocalFileCommit:
 #: "not passed" sentinel for scan()'s stored-schema pass-through (None is a
 #: meaningful value there: the caller checked and the table never evolved)
 _UNSET = object()
+
+
+def _leaves(base: str, depth: int) -> list[str]:
+    """Partition rel-paths (``a=1/b=2``) exactly ``depth`` hive levels
+    under ``base``; none when ``base`` is absent."""
+    if depth == 0:
+        return [""] if os.path.isdir(base) else []
+    if not os.path.isdir(base):
+        return []
+    out = []
+    for d in sorted(os.listdir(base)):
+        full = os.path.join(base, d)
+        if os.path.isdir(full) and "=" in d:
+            out.extend(os.path.join(d, s) if s else d for s in _leaves(full, depth - 1))
+    return out
+
+
+def _stored_schema(meta: dict | None) -> T.StructType | None:
+    if meta and "schema_json" in meta:
+        return T.StructType.fromJson(meta["schema_json"])
+    return None
 
 
 def _parquet_bytes(path: str) -> int:
@@ -205,26 +285,114 @@ class ParquetTable:
         this schema explicitly (old files fill added columns with typed
         NULLs; a footer-inferred read could pick an old file and lose
         the added columns)."""
-        meta = self.read_meta()
-        if meta and "schema_json" in meta:
-            return T.StructType.fromJson(meta["schema_json"])
-        return None
+        return _stored_schema(self.read_meta())
 
-    def scan(self, spark: SparkSession, stored=_UNSET) -> DataFrame:
-        """PHYSICAL read: the table's files with partition/bucket columns
-        included and the evolved union schema applied when one is recorded.
-        Pass ``stored=`` (a StructType, or None for "I checked — not
-        evolved") to reuse an already-loaded metadata read — the scoped
-        merge is pinned to ONE meta read per trigger. This is the seam the
-        merge/maintenance layer reads through — a storage variant with a
-        different physical layout (``ManifestTable``) overrides it and
-        everything above runs unchanged."""
-        if stored is _UNSET:
-            stored = self.stored_schema()
+    def files(self, spark: SparkSession, stored=None) -> DataFrame:
+        """Every row of every live data file, shadowed rows included, with
+        partition/bucket columns, read under ``stored`` (None: a schema
+        inferred from a file footer). This is the seam a storage variant
+        with a different physical layout (``ManifestTable``) overrides;
+        everything above it runs unchanged."""
         return (
             spark.read.schema(stored).parquet(self.path)
             if stored is not None
             else spark.read.parquet(self.path)
+        )
+
+    def file_seq(self):
+        """Column: the commit sequence of the file a :meth:`files` row was
+        read from — ``seq`` of a ``delta-<seq>-`` file, else 0."""
+        from pyspark.sql import functions as F
+
+        return F.expr(_FILE_SEQ_SQL)
+
+    def view_sql(self) -> str:
+        """A SQL relation over the table's files for a durable view, which
+        re-reads them on every query: on a scoped-merge table (its
+        metadata records merge keys) the newest-file rule of
+        :meth:`resolve` applies to every bucket, because a delta file may
+        land after the view is defined; any other table reads its files
+        as they are."""
+        from .merge import PART_COL  # local: avoids an import cycle
+
+        files = f"parquet.`{self.path}`"
+        keys = (self.read_meta() or {}).get("keys")
+        if not keys:
+            return files
+        keys = [PART_COL, *keys]
+        new = ", ".join(f"{k} AS __new_{k}" for k in keys)
+        on = " AND ".join(f"f.{k} <=> n.__new_{k}" for k in keys)
+        return f"""(SELECT * FROM (SELECT *, {_FILE_SEQ_SQL} AS {SEQ_COL} FROM {files}) f
+            LEFT ANTI JOIN (
+                SELECT {new}, {_FILE_SEQ_SQL} AS __new_seq FROM {files}
+                WHERE {_FILE_SEQ_SQL} > 0) n
+            ON {on} AND n.__new_seq > f.{SEQ_COL})"""
+
+    def scan(self, spark: SparkSession, stored=_UNSET) -> DataFrame:
+        """PHYSICAL read: the table's rows with partition/bucket columns
+        included and the evolved union schema applied when one is recorded.
+        Buckets the metadata lists as holding a delta file keep only the
+        newest file's rows of each merge key (:meth:`resolve`); every
+        other bucket reads its files as they are. Pass ``stored=`` (a
+        StructType, or None for "I checked — not evolved") to skip the
+        schema lookup. The merge and maintenance layers read through here
+        (the scoped merge itself reads :meth:`files` of the buckets it
+        touches and applies the rule to them)."""
+        meta = self.read_meta()
+        if stored is _UNSET:
+            stored = _stored_schema(meta)
+        return self.resolve(spark, self.files(spark, stored), meta, delta_parts(meta))
+
+    def resolve(
+        self, spark: SparkSession, df: DataFrame, meta: dict | None, parts, source=None
+    ) -> DataFrame:
+        """``df`` (rows of :meth:`files`, or of the retained snapshot
+        ``source``) under the newest-file rule in the buckets ``parts``:
+        for each merge key (compared null-safe), every row of the newest
+        file holding it, so NULL and duplicate keys read as a rewritten
+        bucket holds them. Only a bucket's newer files can shadow a row
+        (:meth:`_newer_rows`: its delta files), so a row is dropped when
+        one of their rows has its key and a higher sequence: an anti-join
+        against the delta files' keys, which are the size of the delta
+        files, not of the table. Spark broadcasts them when small, and
+        the table's rows are then neither shuffled nor aggregated."""
+        if not parts:
+            return df
+        newer = self._newer_rows(spark, df.schema, list(parts), source)
+        if newer is None:
+            return df
+        from pyspark.sql import functions as F
+
+        from .merge import PART_COL  # local: avoids an import cycle
+
+        keys = [PART_COL, *meta["keys"]]
+        newer = newer.select(
+            *[F.col(k).alias(f"__new_{k}") for k in keys],
+            self.file_seq().alias("__new_seq"),
+        )
+        shadowed = reduce(
+            lambda x, y: x & y,
+            [F.col(k).eqNullSafe(F.col(f"__new_{k}")) for k in keys],
+        ) & (F.col("__new_seq") > F.col(SEQ_COL))
+        return (
+            df.withColumn(SEQ_COL, self.file_seq())
+            .join(newer, shadowed, "left_anti")
+            .drop(SEQ_COL)
+        )
+
+    def _newer_rows(self, spark: SparkSession, schema, parts, source=None):
+        """The rows of buckets ``parts`` that may shadow rows of older
+        files: those of the delta files, under the table's root or the
+        retained snapshot ``source`` (None: no such file)."""
+        from pyspark.sql import functions as F
+
+        from .merge import PART_COL  # local: avoids an import cycle
+
+        return (
+            spark.read.schema(schema)
+            .option("pathGlobFilter", f"{DELTA_PREFIX}*")
+            .parquet(source or self.path)
+            .filter(F.col(PART_COL).isin(parts))
         )
 
     def data_bytes(self) -> int:
@@ -309,13 +477,25 @@ class ParquetTable:
                 f"{self.path}: no generation {n_back} back "
                 f"({len(gens)} retained)"
             )
-        stored = self.stored_schema()
+        meta = self.read_meta()
+        stored = _stored_schema(meta)
         df = (
             spark.read.schema(stored).parquet(gens[-n_back])
             if stored is not None  # pre-evolution snapshots read as NULLs
             else spark.read.parquet(gens[-n_back])
         )
-        return self._project(df)
+        parts = self._snapshot_parts(meta)
+        return self._project(self.resolve(spark, df, meta, parts, gens[-n_back]))
+
+    def _snapshot_parts(self, meta: dict | None) -> list[int]:
+        """Buckets of a retained snapshot that may hold a delta file: all
+        of them for a scoped-merge table (the snapshot's own delta list is
+        not kept), none otherwise."""
+        from .merge import PART_COL  # local: avoids an import cycle
+
+        if self.partition_by != [PART_COL] or not meta or "keys" not in meta:
+            return []
+        return list(range(int(meta["n_buckets"])))
 
     def overwrite_atomic(self, df: DataFrame, new_meta: dict | None = None) -> None:
         """Write to a temp dir, then swap directories.
@@ -366,6 +546,8 @@ class ParquetTable:
                 )
                 kept = self.read_meta()
                 if kept is not None:
+                    # no delta file survives a rewrite
+                    kept = {k: v for k, v in kept.items() if k != "delta_parts"}
                     self.write_meta(**{**kept, "total_bytes": new_bytes})
             if self.keep_generations > 0:
                 gens = self._generations()
@@ -436,42 +618,42 @@ class ParquetTable:
         with_mode(df).write.mode("overwrite").partitionBy(
             MODE_COL, *self.partition_by
         ).parquet(tmp)
-        return {"tmp": tmp, "spark": df.sparkSession}
+        parts = {
+            mode: _leaves(os.path.join(tmp, f"{MODE_COL}={mode}"), len(self.partition_by))
+            for mode in (REWRITE, APPEND, DELTA)
+        }
+        return {"tmp": tmp, "spark": df.sparkSession, "parts": parts}
 
     def abort_replace_partitions(self, staged: dict) -> None:
         """Discard a staged-but-uncommitted replacement (pure cleanup)."""
         self.commit.remove_tree(staged["tmp"])
 
-    def commit_replace_partitions(self, staged: dict) -> list[str]:
+    def commit_replace_partitions(
+        self, staged: dict, meta: dict | None = None
+    ) -> list[str]:
         """COMMIT half of ``replace_partitions``: swap the staged REWRITE
         partition directories into the table and publish the staged APPEND
-        files into their live partitions (driver-side file ops only — no
-        Spark job). Same crash story as the monolithic form, whose
-        docstring has the details; an append is one ``publish_file`` per
-        new file, so a crash leaves a partition with all, some or none of
-        its new files — the replayed batch then finds its keys stored and
-        rewrites the partition."""
+        and DELTA files into their live partitions (driver-side file ops
+        only — no Spark job). A DELTA file is published under the name
+        ``delta-<seq>-<name>``, ``seq`` one past the partition's newest
+        delta file. ``meta`` (the table metadata this commit leaves) is
+        written first, with the staged DELTA buckets in its delta list;
+        the list drops the rewritten buckets after the swaps. Same crash
+        story as the monolithic form, whose docstring has the details; an
+        append is one ``publish_file`` per new file, so a crash leaves a
+        partition with all, some or none of its new files — the replayed
+        batch then finds its keys stored and writes them again as a
+        delta."""
         tmp = staged["tmp"]
-        depth = len(self.partition_by)
-        # leaf partition dirs sit exactly `depth` levels under each mode dir
-        def leaves(base: str, level: int) -> list[str]:
-            if level == 0:
-                return [""]
-            out = []
-            for d in sorted(os.listdir(base)):
-                full = os.path.join(base, d)
-                if os.path.isdir(full) and "=" in d:
-                    out.extend(os.path.join(d, s) if s else d for s in leaves(full, level - 1))
-            return out
-
+        if meta is not None:
+            self.write_meta(**_record_deltas(meta, staged["parts"], False))
         os.makedirs(self.path, exist_ok=True)
         trash = os.path.join(tmp, "__displaced__")  # outside the table root
         os.makedirs(trash, exist_ok=True)
         touched = [
             (mode, os.path.join(tmp, f"{MODE_COL}={mode}"), rel)
-            for mode in (REWRITE, APPEND)
-            if os.path.isdir(os.path.join(tmp, f"{MODE_COL}={mode}"))
-            for rel in leaves(os.path.join(tmp, f"{MODE_COL}={mode}"), depth)
+            for mode, rels in staged["parts"].items()
+            for rel in rels
         ]
         # maintain the size tracker merge.maybe_rebucket reads — but only
         # once it has been initialized (by maybe_rebucket's first full
@@ -498,18 +680,26 @@ class ParquetTable:
             src = os.path.join(base, rel)
             dst = os.path.join(self.path, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if mode == APPEND:
-                os.makedirs(dst, exist_ok=True)
-                for f in sorted(os.listdir(src)):
-                    if f.endswith(".parquet"):
-                        self.commit.publish_file(
-                            os.path.join(src, f), os.path.join(dst, f)
-                        )
+            if mode == REWRITE:
+                old = os.path.join(trash, rel.replace(os.sep, "__"))
+                if os.path.isdir(dst):
+                    self.commit.move_dir(dst, old)
+                if os.path.isdir(src):  # else the merge emptied the bucket
+                    self.commit.move_dir(src, dst)
                 continue
-            old = os.path.join(trash, rel.replace(os.sep, "__"))
-            if os.path.isdir(dst):
-                self.commit.move_dir(dst, old)
-            self.commit.move_dir(src, dst)
+            os.makedirs(dst, exist_ok=True)
+            prefix = ""
+            if mode == DELTA:
+                seqs = [int(m.group(1)) for f in os.listdir(dst) if (m := DELTA_FILE.match(f))]
+                prefix = f"{DELTA_PREFIX}{max(seqs, default=0) + 1:08d}-"
+            for f in sorted(os.listdir(src)):
+                if f.endswith(".parquet"):
+                    self.commit.publish_file(
+                        os.path.join(src, f), os.path.join(dst, prefix + f)
+                    )
+        meta = self.read_meta()
+        if set(delta_parts(meta)) & _bucket_ids(staged["parts"][REWRITE]):
+            self.write_meta(**_record_deltas(meta, staged["parts"], True))
         self.commit.remove_tree(tmp)
         staged["spark"].catalog.refreshByPath(self.path)
         return sorted(rel for _mode, _base, rel in touched)

@@ -3,9 +3,11 @@
 Rule engine semantics preserved exactly (SURVEY.md §2.11):
 - header flags explode the staged anomaly_codes array of rn=1 survivors
   (non-OUTER flatten: empty arrays vanish) (:7-16)
-- line flags join the already-merged CAN_TXN (so this stage must run after
-  stage 05) and emit ONE code per row — quantity<0 wins over negative
-  amount (:17-25)
+- line flags join CAN_TXN (:17-25) for their client and source system
+  and emit ONE code per row — quantity<0 wins over negative amount. The
+  pipeline passes the CAN_TXN merge source as that merge dedupes it, which
+  holds what the merged CAN_TXN holds for every id a staged line carries,
+  so this stage need not wait for stage 05
 - DISTINCT before merge; merge key is NULL-safe on line_number (:30-50).
 """
 
@@ -23,7 +25,9 @@ LINE_DETAIL = "Line-level negative value detected"
 def stage_anomalies(
     stg_header: DataFrame, stg_line: DataFrame, can_txn: DataFrame
 ) -> DataFrame:
-    """STG_ANOMALY with the reference's DISTINCT applied (:6-28, :32)."""
+    """STG_ANOMALY with the reference's DISTINCT applied (:6-28, :32).
+    ``can_txn``: the canonical header rows line flags take ``client_id``
+    and ``source_system`` from, one per ``canonical_txn_id``."""
     hdr_flags = (
         stg_header.filter(F.col("rn") == 1)
         .select(

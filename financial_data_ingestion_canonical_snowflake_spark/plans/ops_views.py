@@ -56,18 +56,18 @@ def register_views(
     return views
 
 
-def register_durable_views(
-    spark, audit_path: str, can_txn_path: str, anomaly_path: str
-) -> None:
+def register_durable_views(spark, audit, can_txn, anomaly) -> None:
     """CREATE OR REPLACE VIEW — catalog-durable twins of ``register_views``
     (reference ``sql/07_ops_views.sql:6,16,24`` creates durable view
     OBJECTS, not session temp views).
 
-    Each view is a permanent catalog object over the parquet table path, so
-    it re-reads current table state on every query. Durability across
-    restarts equals the catalog's (a Hive metastore persists them; the
-    default in-memory catalog lives with the process) — a deployment seam,
-    not an engine property.
+    Each view is a permanent catalog object over a table's files (the
+    tables are ``ParquetTable`` objects; ``view_sql`` gives the relation,
+    which resolves delta files of the merged tables), so it re-reads
+    current table state on every query. Durability across restarts equals the
+    catalog's (a Hive metastore persists them; the default in-memory
+    catalog lives with the process) — a deployment seam, not an engine
+    property.
     """
     spark.sql(
         f"""CREATE OR REPLACE VIEW vw_load_audit_summary AS
@@ -76,7 +76,7 @@ def register_durable_views(
                SUM(rows_loaded) AS total_rows_loaded,
                SUM(errors_seen) AS total_errors_seen,
                MAX(load_ts) AS latest_load_ts
-        FROM parquet.`{audit_path}`
+        FROM {audit.view_sql()}
         GROUP BY file_type, load_status"""
     )
     spark.sql(
@@ -84,14 +84,14 @@ def register_durable_views(
         SELECT client_id, source_system, COUNT(1) AS txn_count,
                SUM(IF(is_valid, 1, 0)) AS valid_txn_count,
                SUM(IF(NOT is_valid, 1, 0)) AS invalid_txn_count
-        FROM parquet.`{can_txn_path}`
+        FROM {can_txn.view_sql()}
         GROUP BY client_id, source_system"""
     )
     spark.sql(
         f"""CREATE OR REPLACE VIEW vw_anomaly_counts AS
         SELECT client_id, source_system, anomaly_code,
                COUNT(1) AS anomaly_count
-        FROM parquet.`{anomaly_path}`
+        FROM {anomaly.view_sql()}
         GROUP BY client_id, source_system, anomaly_code"""
     )
 

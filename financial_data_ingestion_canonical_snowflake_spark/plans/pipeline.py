@@ -20,7 +20,8 @@ streaming ``FullCanonicalSink``. ``run_batch`` feeds it only the KEY
 CLOSURE of the rows its own ingest loaded (:func:`key_closure`): every RAW
 row, old or new, in a rank group those rows touch, so ranking, duplicate
 flags and survivorship equal a full-history run, and the merges see only
-the delta's keys (insert-only buckets append). A run that loads no rows
+the delta's keys: a bucket of new keys gains a file of them, a bucket of
+restated keys a delta file that reads resolve. A run that loads no rows
 runs no transform and no merge. A run that died between its ingest and
 its last merge leaves a marker file; the next run re-derives all of RAW.
 """
@@ -37,7 +38,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..operators.merge import PART_COL, merge_upsert_scoped
+from ..operators.merge import (
+    PART_COL,
+    dedupe_source,
+    merge_upsert_scoped,
+    part_expr,
+    stage_then_commit,
+)
 from ..operators.storage import ParquetTable
 from ..session import apply_runtime_confs
 from ..sources.audit import build_load_audit
@@ -80,7 +87,7 @@ class PipelineConfig:
     # hash-bucket count for partition-scoped canonical merges. run_batch
     # merges only its key closure: a bucket holding none of its keys is
     # not written, one receiving only new keys appends them, and one
-    # holding an updated key (a restatement) is rewritten
+    # holding an updated key (a restatement) gains a delta file
     merge_buckets: int = 16
     # also register the OPS views as durable catalog objects (reference
     # sql/07_ops_views.sql creates durable views, not session temp views)
@@ -290,9 +297,9 @@ class Pipeline:
         if self.cfg.durable_views:
             register_durable_views(
                 self.spark,
-                self.raw_load_audit.path,
-                self.can_txn.path,
-                self.can_txn_anomaly.path,
+                self.raw_load_audit,
+                self.can_txn,
+                self.can_txn_anomaly,
             )
         return {
             "smoke_counts": smoke_counts(can_txn_df, can_line_df, anomaly_df),
@@ -389,89 +396,119 @@ def merge_canonical(
     history: dict[str, DataFrame | None] | None = None,
 ) -> None:
     """Stages 03-06 over ``raw`` (RAW rows keyed by source system): header
-    transform, CAN_TXN merge, line transform, CAN_TXN_LINE merge, anomaly
-    staging and CAN_TXN_ANOMALY merge. ``ts`` stamps created/updated/
-    detected timestamps.
+    transform, line transform, anomaly staging, and the CAN_TXN,
+    CAN_TXN_LINE and CAN_TXN_ANOMALY merges. ``ts`` stamps created/
+    updated/detected timestamps.
 
     ``raw`` must hold whole rank groups (a :func:`key_closure`, a full
     history, or a streaming micro-batch taken as it is). In
     ``join_mode='faithful'`` a header's lines come from every row of its
     file, so with ``history`` given (the full RAW tables) the line
     transform reads the files of the surviving headers from it; without
-    it, from ``raw`` itself."""
+    it, from ``raw`` itself.
+
+    The three merges stage concurrently and commit in the order CAN_TXN →
+    CAN_TXN_LINE → CAN_TXN_ANOMALY (``stage_then_commit``): a failed stage
+    commits none of them."""
     stg_header = transform_headers(
         raw.get("JSON"), raw.get("XML"), raw.get("CSV")
     ).cache()
-
-    stg_line: DataFrame | None = None
+    stg_line = anomaly_source = None
     try:
+        # every line and anomaly key is a surviving header's id, and all
+        # three tables bucket on it: one action fills the stg_header cache
+        # and finds the buckets of all three merges
+        txn_parts, line_parts, anomaly_parts = _touched_buckets(
+            stg_header.filter(F.col("rn") == 1),
+            (can_txn, can_txn_line, can_txn_anomaly),
+        )
+        hdr_order = [F.col("ingest_ts").desc(), F.col("src_file")]
         hdr_source = header_merge_source(stg_header, ts)
-
-        # 05a and 05b write DISJOINT tables from cached staging frames — run
-        # them concurrently (Spark's scheduler interleaves independent jobs; a
-        # real warehouse runs independent MERGEs the same way). The header
-        # merge launches FIRST, so the line transform's plan construction +
-        # analysis (driver-side Catalyst work, a measurable slice of a small
-        # batch) overlaps the header merge's execution; worst case the two
-        # threads race to fill the stg_header cache — wall-time harmless, the
-        # second consumer reads the cache.
-        def _merge_txn() -> None:
-            merge_upsert_scoped(
+        line_raw = raw
+        if history is not None and join_mode == "faithful":
+            line_raw = _surviving_files(history, stg_header)
+        stg_line = transform_lines(
+            line_raw.get("JSON"),
+            line_raw.get("XML"),
+            line_raw.get("CSV"),
+            stg_header,
+            join_mode=join_mode,
+        ).cache()
+        # Stage 05b: the M2 source-dedupe guard (duplicate (id, line_number)
+        # keys -> latest ingest wins)
+        line_source = (
+            stg_line.withColumn("created_ts", ts)
+            .withColumn("updated_ts", ts)
+            .select(*CAN_LINE_COLS)
+        )
+        # Stage 06: line flags take client and source system from the
+        # header row the CAN_TXN merge keeps for their id — what the
+        # post-merge CAN_TXN holds for it
+        stg_anomaly = stage_anomalies(
+            stg_header,
+            stg_line,
+            dedupe_source(hdr_source, schemas.CAN_TXN_KEYS, hdr_order),
+        )
+        # read twice by its merge (the replaced keys, the rows)
+        anomaly_source = (
+            anomaly_merge_source(stg_anomaly, ts).select(*CAN_ANOMALY_COLS).cache()
+        )
+        stage_then_commit(
+            lambda: merge_upsert_scoped(
                 spark,
                 can_txn,
                 hdr_source,
-                keys=["canonical_txn_id"],
+                keys=list(schemas.CAN_TXN_KEYS),
                 preserve=["created_ts"],
-                dedupe_order=[F.col("ingest_ts").desc(), F.col("src_file")],
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            txn_future = ex.submit(_merge_txn)
-
-            # Stage 05b: CAN_TXN_LINE merge (:32-53) with the M2 source-dedupe
-            # guard (duplicate (id, line_number) keys -> latest ingest wins).
-            # Declared while 05a runs.
-            line_raw = raw
-            if history is not None and join_mode == "faithful":
-                line_raw = _surviving_files(history, stg_header)
-            stg_line = transform_lines(
-                line_raw.get("JSON"),
-                line_raw.get("XML"),
-                line_raw.get("CSV"),
-                stg_header,
-                join_mode=join_mode,
-            ).cache()
-            line_source = (
-                stg_line.withColumn("created_ts", ts)
-                .withColumn("updated_ts", ts)
-                .select(*CAN_LINE_COLS)
-            )
-            line_future = ex.submit(
-                merge_upsert_scoped,
+                dedupe_order=hdr_order,
+                parts=txn_parts,
+                stage_only=True,
+            ),
+            lambda: merge_upsert_scoped(
                 spark,
                 can_txn_line,
                 line_source,
-                ["canonical_txn_id", "line_number"],
-                None,
-                ["created_ts"],
-                [F.col("ingest_ts").desc(), F.col("attributes")],
-            )
-            txn_future.result()
-            line_future.result()
-
-        # Stage 06: anomalies join the POST-merge CAN_TXN (ordering constraint
-        # noted at SURVEY §3 entry point 3).
-        stg_anomaly = stage_anomalies(stg_header, stg_line, can_txn.read(spark))
-        merge_upsert_scoped(
-            spark,
-            can_txn_anomaly,
-            anomaly_merge_source(stg_anomaly, ts).select(*CAN_ANOMALY_COLS),
-            keys=["canonical_txn_id", "anomaly_code", "line_number", "anomaly_detail"],
+                keys=list(schemas.CAN_TXN_LINE_KEYS),
+                preserve=["created_ts"],
+                dedupe_order=[F.col("ingest_ts").desc(), F.col("attributes")],
+                parts=line_parts,
+                stage_only=True,
+            ),
+            # an anomaly row has no column the merge keeps from its stored
+            # copy, so the MERGE is a per-key replacement: the rows staged
+            # for a key replace the stored ones one for one, also where
+            # several rows share a key (the NULL id of NULL-client rows)
+            lambda: merge_upsert_scoped(
+                spark,
+                can_txn_anomaly,
+                anomaly_source,
+                keys=list(schemas.CAN_TXN_ANOMALY_KEYS),
+                parts=anomaly_parts,
+                replace_keys=anomaly_source.select(*schemas.CAN_TXN_ANOMALY_KEYS),
+                stage_only=True,
+            ),
         )
     finally:  # a failed merge leaves no cache behind either
-        stg_header.unpersist()
-        if stg_line is not None:
-            stg_line.unpersist()
+        for df in (stg_header, stg_line, anomaly_source):
+            if df is not None:
+                df.unpersist()
+
+
+def _touched_buckets(
+    survivors: DataFrame, tables: tuple[ParquetTable, ...]
+) -> list[list[int]]:
+    """Per table, the buckets of the surviving headers' ``canonical_txn_id``
+    under the table's stored modulus, in one driver action (at most one
+    row per bucket combination)."""
+    mods = [(t.read_meta() or {}).get("n_buckets", t.n_buckets) for t in tables]
+    rows = (
+        survivors.select(
+            *[part_expr("canonical_txn_id", n).alias(f"p{n}") for n in sorted(set(mods))]
+        )
+        .distinct()
+        .collect()
+    )
+    return [sorted({r[f"p{n}"] for r in rows}) for n in mods]
 
 
 def header_merge_source(stg_header: DataFrame, ts: Column) -> DataFrame:

@@ -92,6 +92,15 @@ CAN_TXN_ANOMALY = T.StructType(
     ]
 )
 
+# MERGE keys of the three CANON tables (reference
+# sql/05_merge_canonical.sql:6-53, sql/06_anomaly_detection.sql:30-50); the
+# first key is the one each table is hash-bucketed on.
+CAN_TXN_KEYS = ("canonical_txn_id",)
+CAN_TXN_LINE_KEYS = ("canonical_txn_id", "line_number")
+CAN_TXN_ANOMALY_KEYS = (
+    "canonical_txn_id", "anomaly_code", "line_number", "anomaly_detail",
+)
+
 ANOMALY_CODES = [
     "DUPLICATE_TXN",
     "MISSING_REQUIRED",

@@ -322,7 +322,7 @@ class MinHashLshDedupSink:
                     self.sig_table,
                     new_sigs,
                     keys=["doc"],
-                    replace_keys=new_sigs.select("doc").distinct(),
+                    replace_keys=F.broadcast(new_sigs.select("doc").distinct()),
                     stage_only=True,
                 ),
             )

@@ -86,11 +86,12 @@ class FullCanonicalSink:
     within-batch duplicates are flagged exactly like batch; duplicates
     split across micro-batches are merged latest-wins but not re-flagged
     (the micro-batch is the chain's whole input — ``run_batch`` instead
-    widens its input to the key closure over RAW). Stage 06 joins the
-    POST-merge CAN_TXN (the reference's ordering constraint, SURVEY §3
-    entry point 3), so line anomalies always see the canonical rows this
-    batch just merged. All three merges are idempotent — replayed
-    micro-batches (file-source restart) change nothing.
+    widens its input to the key closure over RAW). Stage 06 takes line
+    anomalies' client and source system from the CAN_TXN merge source as
+    that merge dedupes it — what the post-merge CAN_TXN holds for every
+    staged line's id — so the three merges stage together and commit in
+    order. All three merges are idempotent — replayed micro-batches
+    (file-source restart) change nothing.
     """
 
     def __init__(

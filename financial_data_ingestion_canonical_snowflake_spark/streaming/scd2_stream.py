@@ -290,7 +290,7 @@ class Scd2Sink:
             and tgt_cols is not None
             and tgt_cols == set(recomputed.columns)
         ):
-            rk = affected
+            rk = F.broadcast(affected)  # a micro-batch's keys: small
         merge_upsert_scoped(
             spark,
             self.table,

@@ -1,11 +1,15 @@
-"""Append-or-rewrite scoped merges (operators/merge.py::merge_upsert_scoped).
+"""Append, delta or rewrite scoped merges (operators/merge.py::
+merge_upsert_scoped).
 
 A bucket where no stored row changes gets one new file holding only the
-inserted rows, beside the files already there; every other bucket is
-rewritten whole, and a bucket already holding ``MAX_BUCKET_FILES`` files
-is compacted by a rewrite. These tests pin the file layout on both commit
-protocols, the size tracker, replay after a partly committed append, and
-that the merge works on the stored layout rather than a declared schema.
+inserted rows, beside the files already there; a bucket whose stored keys
+are updated gets one delta file of its inserted and updated rows, which
+reads resolve (the newest file holding a key wins); a bucket losing rows
+is rewritten whole, and a bucket already holding ``MAX_BUCKET_FILES``
+files is compacted by a rewrite. These tests pin the file layout on both
+commit protocols, the size tracker, replay after a partly committed
+append or delta, and that the merge works on the stored layout rather
+than a declared schema.
 """
 
 from __future__ import annotations
@@ -13,6 +17,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
@@ -22,6 +27,7 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
     MAX_BUCKET_FILES,
     PART_COL,
     maybe_rebucket,
+    merge_upsert,
     merge_upsert_scoped,
     part_expr,
 )
@@ -95,9 +101,12 @@ def test_insert_only_merges_append_until_the_file_bound(spark, tmp_path, cls):
 def test_one_merge_appends_to_some_buckets_and_rewrites_others(
     spark, tmp_path, cls
 ):
-    """Per-bucket modes inside one merge: the bucket holding an updated key
-    is rewritten to one file; a bucket receiving only new keys keeps its
-    stored file and gains one; NULL keys match null-safely."""
+    """Per-bucket modes inside one merge: a bucket receiving only new keys
+    gains one file; a bucket holding an updated key (NULL keys match
+    null-safely) gains one delta file, its stored file untouched, and
+    reads the updated row. A replace_keys merge then re-sends one key —
+    another delta — and drops another outright, which rewrites that
+    bucket to one file."""
     n = 4
     t = cls(str(tmp_path / "t"), None, [PART_COL], n_buckets=n)
     seed = [(f"s{i}", i) for i in range(40)] + [(None, -1)]
@@ -113,15 +122,33 @@ def test_one_merge_appends_to_some_buckets_and_rewrites_others(
     src = spark.createDataFrame([("s0", 100), (new_key, 7), (None, 5)], _KV)
     touched = merge_upsert_scoped(spark, t, src, ["k"])
     assert f"{PART_COL}={new_bucket}" in touched
-    assert len(t.data_files(f"{PART_COL}={upd_bucket}")) == 1
-    assert len(t.data_files(f"{PART_COL}={null_bucket}")) == 1
-    assert len(t.data_files(f"{PART_COL}={new_bucket}")) == 2
+    for b in (upd_bucket, null_bucket, new_bucket):
+        assert len(t.data_files(f"{PART_COL}={b}")) == 2
     after = snapshot(t.path)
-    kept = [p for p in before if f"{PART_COL}={new_bucket}" in p]
-    assert kept and all(after.get(p) == before[p] for p in kept)
+    data = [p for p in before if p.endswith(".parquet")]
+    assert data and all(after.get(p) == before[p] for p in data)
+    assert sorted(t.read_meta()["delta_parts"]) == sorted({upd_bucket, null_bucket})
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert got["s0"] == 100 and got[new_key] == 7 and got[None] == 5
     assert len(got) == 42 and t.read(spark).count() == 42
+
+    gone = next(
+        f"s{i}" for i in range(1, 40) if _bucket(spark, f"s{i}", n) != upd_bucket
+    )
+    gone_bucket = _bucket(spark, gone, n)
+    merge_upsert_scoped(
+        spark,
+        t,
+        spark.createDataFrame([("s0", 1)], _KV),
+        ["k"],
+        parts=[upd_bucket, gone_bucket],
+        replace_keys=spark.createDataFrame([("s0",), (gone,)], "k string"),
+    )
+    assert len(t.data_files(f"{PART_COL}={gone_bucket}")) == 1
+    assert len(t.data_files(f"{PART_COL}={upd_bucket}")) == 3
+    assert gone_bucket not in t.read_meta().get("delta_parts", [])
+    got = {r.k: r.v for r in t.read(spark).collect()}
+    assert got["s0"] == 1 and gone not in got and t.read(spark).count() == 41
 
 
 def test_scoped_merge_uses_stored_layout_not_narrower_declaration(
@@ -182,6 +209,46 @@ class _ArmedCommit(LocalFileCommit):
         super().publish_file(src, dst)
 
 
+class _SecondPutDies(_ArmedCommit):
+    """Once armed, lets one metadata publish land and raises on the next
+    (a ``ManifestTable`` commit PUTs its metadata, then its manifest)."""
+
+    def publish_file(self, src: str, dst: str) -> None:
+        if self.fail_at is not None and not dst.endswith(".parquet"):
+            self.published += 1
+            if self.published == 2:
+                raise RuntimeError("simulated crash in the commit")
+        LocalFileCommit.publish_file(self, src, dst)
+
+
+@pytest.mark.parametrize("cls", PROTOCOLS, ids=lambda c: c.__name__)
+def test_replay_after_death_between_meta_write_and_delta_publish(
+    spark, tmp_path, cls
+):
+    """A merge of updated keys dies after its metadata landed and before
+    its delta files did (ParquetTable: at the first data-file publish;
+    ManifestTable: at the manifest PUT after the metadata PUT). The table
+    still reads its pre-merge state — a bucket listed as holding a delta
+    that never landed reads as it is — and the replayed merge equals a
+    copy-on-write merge."""
+    commit = _ArmedCommit() if cls is ParquetTable else _SecondPutDies()
+    t = cls(str(tmp_path / "t"), None, [PART_COL], n_buckets=2, commit=commit)
+    seed = spark.createDataFrame([(f"k{i}", i) for i in range(20)] + [(None, -1)], _KV)
+    merge_upsert_scoped(spark, t, seed, ["k"])
+    batch = spark.createDataFrame([("k1", 10), ("k2", 20), ("new", 5), (None, 7)], _KV)
+    commit.fail_at = 1
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        merge_upsert_scoped(spark, t, batch, ["k"])
+    commit.fail_at = None
+    # listed as holding deltas, each bucket still holds only its seed file
+    assert t.read_meta()["delta_parts"]
+    assert all(len(t.data_files(f"{PART_COL}={p}")) == 1 for p in range(2))
+    assert _rows(t.read(spark)) == _rows(seed)
+    merge_upsert_scoped(spark, t, batch, ["k"])
+    assert _rows(t.read(spark)) == _rows(merge_upsert(seed, batch, ["k"]))
+    assert t.read_meta()["delta_parts"]
+
+
 _EMB = "vec_id long, embedding array<double>"
 
 
@@ -192,8 +259,9 @@ def _emb(ids):
 def test_ivf_replay_after_partial_append_commit(spark, tmp_path):
     """ParquetTable: a trigger of new vectors dies after its first appended
     file is published, so some buckets hold the new rows and some do not.
-    The replayed trigger finds the published keys stored, rewrites those
-    buckets, appends to the rest, and the index equals the batch oracle."""
+    The replayed trigger finds the published keys stored, writes them to
+    those buckets again as a delta, appends to the rest, and the index
+    equals the batch oracle."""
     commit = _ArmedCommit()
     index_t = ParquetTable(
         str(tmp_path / "index"), partition_by=[PART_COL], n_buckets=4,
@@ -272,3 +340,63 @@ def test_minhash_replay_after_partial_append_commit_on_manifest(spark, tmp_path)
             *sig_t.read(spark).columns
         )
     )
+
+
+def test_replace_keys_broadcast_is_the_callers_choice(spark, tmp_path, monkeypatch):
+    """A ``replace_keys`` merge broadcasts its key set only when the caller
+    hints it (the streaming sinks: a micro-batch's keys are small).
+    ``Pipeline.run_batch`` passes its anomaly keys unhinted — a first load
+    or a recovery run stages the whole history, and a forced broadcast
+    would ignore Spark's size threshold."""
+    t = ParquetTable(str(tmp_path / "t"), None, [PART_COL], n_buckets=4)
+    merge_upsert_scoped(
+        spark, t, spark.createDataFrame([("a", 1), ("b", 1)], _KV), keys=["k"]
+    )
+    plans = []
+    stage = t.stage_replace_partitions
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return stage(df)
+
+    monkeypatch.setattr(t, "stage_replace_partitions", spy)
+    src = spark.createDataFrame([("a", 2)], _KV)
+    for rk in (src.select("k"), F.broadcast(src.select("k"))):
+        merge_upsert_scoped(spark, t, src, keys=["k"], replace_keys=rk)
+    assert "strategy=broadcast" not in plans[0]
+    assert "strategy=broadcast" in plans[1]
+    assert _rows(t.read(spark)) == _rows(
+        spark.createDataFrame([("a", 2), ("b", 1)], _KV)
+    )
+
+
+@pytest.mark.parametrize("cls", PROTOCOLS, ids=lambda c: c.__name__)
+def test_replace_keys_merge_that_removes_every_row_of_a_bucket_empties_it(
+    spark, tmp_path, cls
+):
+    """A ``replace_keys`` merge whose scope drops every stored row of a
+    bucket (the source re-sends none of them) writes no file there; the
+    bucket must still read empty afterwards, NULL keys included — before,
+    its stored rows survived because nothing was staged for it."""
+    t = cls(str(tmp_path / "t"), None, [PART_COL], n_buckets=2)
+    keys = [None, "a", "b", "c"]
+    merge_upsert_scoped(
+        spark, t, spark.createDataFrame([(k, 1) for k in keys], _KV), keys=["k"]
+    )
+    buckets = {
+        r.k: r.p
+        for r in spark.createDataFrame([(k,) for k in keys], "k string")
+        .select("k", part_expr("k", 2).alias("p"))
+        .collect()
+    }
+    gone = [k for k in keys if buckets[k] == buckets[None]]
+    merge_upsert_scoped(
+        spark,
+        t,
+        spark.createDataFrame([], _KV),
+        keys=["k"],
+        parts=[0, 1],
+        replace_keys=spark.createDataFrame([(k,) for k in gone], "k string"),
+    )
+    want = [(k, 1) for k in keys if k not in gone]
+    assert _rows(t.read(spark)) == _rows(spark.createDataFrame(want, _KV))

@@ -17,11 +17,12 @@ After every drop the two must agree:
   is in this run's drop must carry this run's stamp on both sides.
 
 Drops are tiny tri-client JSON/CSV feeds: restatements across drops,
-in-file re-sends, NULL ``source_txn_id`` rows, NULL ``client_id`` rows (a
-path whose client cannot be derived), malformed (LOAD_FAILED) JSON files,
-ragged-row (PARTIALLY_LOADED) CSV files and an empty drop. Fixed
-sequences pin a faithful-mode line input, a run that dies mid-merge and
-two NULL-client rank groups.
+in-file re-sends, NULL ``source_txn_id`` rows, NULL ``client_id`` rows of
+two rank groups (a path whose client cannot be derived), malformed
+(LOAD_FAILED) JSON files, ragged-row (PARTIALLY_LOADED) CSV files and an
+empty drop. Fixed sequences pin a faithful-mode line input, a run that
+dies mid-merge, two NULL-client rank groups, their anomaly rows across
+re-runs, and the durable views after a restatement.
 """
 
 from __future__ import annotations
@@ -50,7 +51,7 @@ TABLES = ("can_txn", "can_txn_line", "can_txn_anomaly")
 MODES = ("row", "faithful")
 _DOOMED: list = []  # tables whose merge raises under crash_line_merges
 SIDS = ("T0", "T1", "T2", "T3")
-NULL_CLIENT_SID = "N-1"  # the NULL-client rows' one rank group
+NULL_CLIENT_SID = "N-1"  # a NULL-client rank group
 # JSON for ClientC; CSV for every client directory (client from the path)
 SPECS = (
     CopySpec(file_type="JSON", path="client_c/json/", client_id="ClientC"),
@@ -141,6 +142,8 @@ def _drop(min_size: int = 0):
             ),
             "bad_json": st.booleans(),
             "ragged": st.booleans(),
+            # NULL-client rows of two rank groups share the NULL id
+            "null_sid": st.sampled_from([NULL_CLIENT_SID, "N-2"]),
         }
     )
 
@@ -235,12 +238,12 @@ def _assert_same_views(res_d, res_o):
         assert _rows(got) == _rows(want), name
 
 
-def _assert_same(spark, delta, oracle, pinned, run_ts, classes, tables):
+def _assert_same(spark, delta, oracle, pinned, run_ts, classes):
     txn_class = {
         r.canonical_txn_id: _row_class(r.client_id, r.source_txn_id)
         for r in oracle.can_txn.read(spark).collect()
     }
-    for attr in tables:
+    for attr in TABLES:
         got = _split(getattr(delta, attr).read(spark))
         want = _split(getattr(oracle, attr).read(spark))
         if pinned:
@@ -255,11 +258,11 @@ def _assert_same(spark, delta, oracle, pinned, run_ts, classes, tables):
                 assert d_ts == run_ts, (attr, row)
 
 
-def _run_sequence(spark, root, drops, pinned, tables=TABLES, crash_at=None):
+def _run_sequence(spark, root, drops, pinned, crash_at=None):
     """Run ``drops`` through a delta and a full-history pipeline per join
-    mode, all over one RAW layer, comparing ``tables`` of each pair after
-    every drop (and the ops views after the last, when all three are
-    compared). At drop ``crash_at`` the delta pipelines die inside their
+    mode, all over one RAW layer, comparing the three canonical tables of
+    each pair after every drop (and the ops views after the last). At
+    drop ``crash_at`` the delta pipelines die inside their
     CAN_TXN_LINE merge (needs the ``crash_line_merges`` fixture); that drop
     is not compared."""
     ingest = os.path.join(root, "ingest")
@@ -299,9 +302,9 @@ def _run_sequence(spark, root, drops, pinned, tables=TABLES, crash_at=None):
         res = {key: f.result() for key, f in futures.items()}
         for mode in MODES:
             delta, oracle = pipes[mode, False], pipes[mode, True]
-            _assert_same(spark, delta, oracle, pinned, run_ts, classes, tables)
+            _assert_same(spark, delta, oracle, pinned, run_ts, classes)
             # the views read the tables just compared
-            if k == len(drops) - 1 and tables == TABLES:
+            if k == len(drops) - 1:
                 _assert_same_views(res[mode, False], res[mode, True])
 
 
@@ -357,12 +360,13 @@ def test_faithful_lines_read_the_old_file_of_a_surviving_header(
 def test_run_that_died_mid_merge_is_rederived(
     spark, tmp_path_factory, crash_line_merges
 ):
-    """A run dies after its ingest landed RAW and the load audit, with
-    CAN_TXN merged and CAN_TXN_LINE not. Its files are in the load
-    history, so no later ingest loads them again; the next run finds the
-    run's pending marker and re-derives all of RAW, even though it loads
-    nothing itself. Every table then equals the oracle's (fails if the
-    marker is ignored: CAN_TXN_LINE misses the dead run's lines)."""
+    """A run dies after its ingest landed RAW and the load audit, in its
+    CAN_TXN_LINE merge stage, so none of its three merges commits. Its
+    files are in the load history, so no later ingest loads them again;
+    the next run finds the run's pending marker and re-derives all of
+    RAW, even though it loads nothing itself. Every table then equals the
+    oracle's (fails if the marker is ignored: the canonical tables miss
+    the dead run's rows)."""
     t = lambda sid: (sid, "12.50", 2, True)  # noqa: E731
     none = {"bad_json": False, "ragged": False}
     drops = [
@@ -386,9 +390,9 @@ def test_null_client_rank_groups_share_one_closure(
     CAN_TXN_LINE) merge key and, at a pinned ``batch_ts``, the first
     drop's row wins the ``src_file`` tiebreak. The second drop's closure
     must therefore hold the first drop's row too (fails if the closure
-    keys NULL-client rows by their source id). CAN_TXN_ANOMALY is left
-    out: two NULL-client groups duplicate its NULL-key rows on every full
-    re-merge, a known fault of the anomaly merge."""
+    keys NULL-client rows by their source id). CAN_TXN_ANOMALY and the
+    ops views are compared too: both groups' anomaly rows share the NULL
+    merge key."""
     t = lambda sid: (sid, "12.50", 2, True)  # noqa: E731
     none = {"bad_json": False, "ragged": False}
     drops = [
@@ -397,7 +401,80 @@ def test_null_client_rank_groups_share_one_closure(
         {"files": {"json": [], "csv_a": [], "anon": [t(None)], "csv_c": []},
          "null_sid": "N-2", **none},
     ]
-    _run_sequence(
-        spark, str(tmp_path_factory.mktemp("nullc")), drops, True,
-        tables=("can_txn", "can_txn_line"),
-    )
+    _run_sequence(spark, str(tmp_path_factory.mktemp("nullc")), drops, True)
+
+
+def test_null_client_anomalies_replace_their_stored_copies(
+    spark, tmp_path_factory, null_client_dir
+):
+    """Shrunk regression: two NULL-client rank groups in separate files,
+    both MISSING_REQUIRED (no amount). Their anomaly rows share one merge
+    key (the NULL canonical id), and every full-history run re-stages
+    both; they must replace the two stored rows one for one. The merge
+    used to pair each staged row with every stored copy: 1, 2, then 4
+    and 8 rows."""
+    t = (None, None, 2, True)
+    none = {"bad_json": False, "ragged": False}
+    drops = [
+        {"files": {"json": [("T0", "12.50", 2, True)], "csv_a": [],
+                   "anon": [t], "csv_c": []}, **none},
+        {"files": {"json": [], "csv_a": [], "anon": [t], "csv_c": []},
+         "null_sid": "N-2", **none},
+        _EMPTY,
+        _EMPTY,
+    ]
+    root = str(tmp_path_factory.mktemp("nullanom"))
+    ingest = os.path.join(root, "ingest")
+    os.makedirs(ingest)
+    counts = []
+    for k, drop in enumerate(drops):
+        _write_drop(ingest, k, drop)
+
+        def cfg(wh):
+            return PipelineConfig(
+                ingest_root=ingest, warehouse=os.path.join(root, wh),
+                copy_specs=SPECS, batch_ts=TS0, merge_buckets=4)
+
+        feed = Pipeline(spark, cfg("raw"))
+        oracle = Replay(spark, cfg("full"), feed, feed.ingest(), full=True)
+        oracle.run_batch()
+        counts.append(
+            oracle.can_txn_anomaly.read(spark)
+            .filter(F.col("canonical_txn_id").isNull())
+            .filter(F.col("anomaly_code") == "MISSING_REQUIRED")
+            .count()
+        )
+    assert counts == [1, 2, 2, 2]
+
+
+def test_durable_views_equal_session_views_after_a_restatement(
+    spark, tmp_path_factory
+):
+    """A run that restates a transaction leaves a delta file in CAN_TXN
+    (stored rows the delta shadows). Each durable view reads the table
+    files directly; it must apply the newest-file rule and equal its
+    session view."""
+    t = lambda sid, amount: (sid, amount, -1, True)  # noqa: E731
+    none = {"bad_json": False, "ragged": False}
+    drops = [
+        {"files": {"json": [t("T0", "12.50"), t("T1", "-3.00")], "csv_a": [],
+                   "anon": [], "csv_c": [t("T2", "12.50")]}, **none},
+        {"files": {"json": [t("T1", "12.50"), t("T3", "12.50")], "csv_a": [],
+                   "anon": [], "csv_c": []}, **none},
+    ]
+    root = str(tmp_path_factory.mktemp("durable"))
+    ingest = os.path.join(root, "ingest")
+    os.makedirs(ingest)
+    for k, drop in enumerate(drops):
+        _write_drop(ingest, k, drop)
+        pipe = Pipeline(spark, PipelineConfig(
+            ingest_root=ingest, warehouse=os.path.join(root, "wh"),
+            copy_specs=SPECS, batch_ts=TS0 + dt.timedelta(hours=k),
+            merge_buckets=4, durable_views=True))
+        res = pipe.run_batch()
+    txn = pipe.can_txn
+    assert txn.read_meta().get("delta_parts")
+    assert txn.files(spark).count() > txn.read(spark).count()
+    for name, session in res["views"].items():
+        durable = spark.sql(f"SELECT * FROM default.{name}")
+        assert _rows(durable) == _rows(session), name

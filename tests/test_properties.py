@@ -557,3 +557,123 @@ def test_append_or_rewrite_fold_equals_plain_merge_fold(
         assert got == want, type(t).__name__
         for p in range(2):
             assert len(t.data_files(f"{PART_COL}={p}")) <= MAX_BUCKET_FILES
+
+
+_delta_op = st.one_of(
+    # upsert: rows of (key, seq, payload); dedupe=False lets duplicate
+    # source keys pair with every stored copy, as a MERGE does
+    st.tuples(
+        st.just("upsert"),
+        st.lists(
+            st.tuples(
+                _fold_key,
+                st.integers(min_value=0, max_value=3),
+                st.sampled_from(["p", "q", ""]),
+            ),
+            min_size=1,
+            max_size=6,
+        ),
+        st.booleans(),
+    ),
+    st.tuples(st.just("replay")),
+    st.tuples(st.just("split")),
+)
+
+
+@settings(
+    # ~60 s on 4 cores; each suite run draws fresh sequences
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    replace=st.booleans(),
+    ops=st.lists(_delta_op, min_size=3, max_size=9),
+)
+def test_delta_files_read_as_copy_on_write(spark, tmp_path_factory, replace, ops):
+    """Random sequences of upserts and restatements (NULL and duplicate
+    keys, duplicate source keys with and without ``dedupe_order``), or of
+    ``replace_keys`` folds (keys re-sent and keys dropped), with replays
+    of the last batch and bucket splits (``rebucket``), folded into a
+    table on ParquetTable and ManifestTable: its buckets take appended,
+    delta and rewritten files and compact at the file bound, and after
+    every step a read equals a copy-on-write ``merge_upsert`` fold."""
+    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
+        ManifestTable,
+    )
+    from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
+        MAX_BUCKET_FILES,
+        PART_COL,
+        merge_upsert_scoped,
+        rebucket,
+    )
+    from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
+        ParquetTable,
+    )
+
+    root = str(tmp_path_factory.mktemp("deltafold"))
+    tables = [
+        cls(f"{root}/{cls.__name__}", None, [PART_COL], n_buckets=1)
+        for cls in (ParquetTable, ManifestTable)
+    ]
+    if replace:
+        schema = "key string, ver long, payload string"
+        keys = ["key", "ver"]
+    else:
+        schema = "key string, seq long, payload string, created long"
+        keys = ["key"]
+
+    def fold(oracle, src, kwargs):
+        if "replace_keys" not in kwargs:
+            return merge_upsert(oracle, src, keys, **kwargs)
+        scope = kwargs["replace_keys"]
+        kept = oracle.join(scope, oracle["key"].eqNullSafe(scope["key"]), "left_anti")
+        return kept.unionByName(src)
+
+    oracle = spark.createDataFrame([], schema)
+    n, last = 1, None
+    for i, op in enumerate(ops):
+        if op[0] == "split":
+            if tables[0].exists() and n < 4:
+                n *= 2
+                for t in tables:
+                    rebucket(spark, t, n)
+            continue
+        if op[0] == "replay":
+            if last is None:
+                continue
+            src, kwargs = last
+        elif replace:
+            # the complete state of each re-sent scope key: its new
+            # versions; stored versions above the new count are dropped,
+            # and a key sent with count 0 is dropped outright
+            first = {}
+            for k, c, p in op[1]:
+                first.setdefault(k, (c, p))
+            rows = [(k, v, p) for k, (c, p) in first.items() for v in range(c)]
+            src = spark.createDataFrame(rows, schema)
+            scope = spark.createDataFrame([(k,) for k in first], "key string")
+            kwargs = {"replace_keys": scope}
+        else:
+            src = spark.createDataFrame([(k, c, p, None) for k, c, p in op[1]], schema)
+            kwargs = {
+                "preserve": ["created"],
+                "set_on_insert": {"created": F.lit(i).cast("long")},
+            }
+            if op[2]:
+                kwargs["dedupe_order"] = [F.col("seq").desc(), F.col("payload")]
+        last = (src, kwargs)
+        oracle = spark.createDataFrame(fold(oracle, src, kwargs).collect(), schema)
+        # replace_keys may drop keys the source does not re-send: every
+        # bucket is in scope
+        parts = list(range(n)) if replace else None
+        for t in tables:
+            merge_upsert_scoped(spark, t, src, keys, parts=parts, **kwargs)
+        want = sorted(repr(tuple(r)) for r in oracle.collect())
+        for t in tables:
+            # a first batch that sends no rows leaves no table
+            rows = t.read(spark).collect() if t.exists() else []
+            got = sorted(repr(tuple(r)) for r in rows)
+            assert got == want, (type(t).__name__, i, op)
+            for p in range(n):
+                assert len(t.data_files(f"{PART_COL}={p}")) <= MAX_BUCKET_FILES
