@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..session import carry_job_description
 from .storage import (
     APPEND,
     DELTA,
@@ -63,12 +64,16 @@ class LedgerSpec:
     don't. ``merge_upsert_scoped`` with a ledger stores, INSIDE each bucket
     partition, one sentinel row (``keys[0] == sentinel``; real keys never
     take the sentinel value) whose ``value_col`` holds the last applied
-    ``batch_id`` for that bucket. Because ``replace_partitions`` swaps each
-    bucket directory atomically, a bucket's data and its ledger move
-    together — a crash mid-swap leaves every bucket either fully applied
+    ``batch_id`` for that bucket. A fold writes each bucket's new sentinel
+    row into the one file it writes for the bucket (appended, delta or
+    rewritten), and that file lands by one file publish or directory swap
+    on ``ParquetTable``, or with every other bucket in one manifest PUT on
+    ``ManifestTable``; a newer file's sentinel shadows the stored one on
+    read, like any other key. So a bucket's data and its ledger move
+    together — a crash mid-commit leaves every bucket either fully applied
     (ledger advanced) or fully unapplied (ledger stale), and the replay
     re-folds ONLY the unapplied buckets: the fold is exactly-once per
-    bucket, even across a crash between the swap and the checkpoint
+    bucket, even across a crash between the commit and the checkpoint
     commit.
 
     Readers must exclude sentinel rows (the sinks' accessor methods do).
@@ -155,9 +160,9 @@ def require_bucketed(table, owner: str) -> None:
     batch therefore writes about what it changes, like the reference's
     MERGE (sql/05_merge_canonical.sql:6-53). Additive folds keep a
     per-bucket replay ledger inside those buckets (:class:`LedgerSpec`),
-    which makes a replayed micro-batch exactly-once — and, because the
-    ledger row changes on every fold, always rewrites. An unpartitioned
-    table has none of these properties, so it is refused here, at sink
+    which makes a replayed micro-batch exactly-once; each bucket's new
+    ledger row rides in the file written for it. An unpartitioned table
+    has none of these properties, so it is refused here, at sink
     construction."""
     if table.partition_by != [PART_COL]:
         raise ValueError(
@@ -173,11 +178,12 @@ def stage_then_commit(*stagers: Callable[[], StagedScopedMerge]) -> None:
     their Spark write jobs overlap — then commit the staged merges in the
     GIVEN order, which is the order a sink's crash contract is stated in.
     If any stage fails, every stage that succeeded is aborted and the
-    first failure (in the given order) is raised: nothing commits."""
+    first failure (in the given order) is raised: nothing commits. The
+    stagers' jobs carry the caller's job description."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(stagers)) as ex:
-        futures = [ex.submit(stage) for stage in stagers]
+        futures = [ex.submit(carry_job_description(stage)) for stage in stagers]
     staged, errors = [], []
     for fut in futures:
         try:
@@ -500,13 +506,14 @@ def merge_upsert_scoped(
          (``ParquetTable.resolve``), so NULL and duplicate keys read as
          the rewritten bucket would hold them;
        - REWRITE otherwise — the whole post-merge bucket replaces the
-         old one, compacting it to one file. A ledgered fold always
-         rewrites (its sentinel row changes), and so does a merge whose
-         output widens the stored layout (``evolve_schema``). The file
-         bound is the only compaction trigger;
+         old one, compacting it to one file. So does a merge whose output
+         widens the stored layout (``evolve_schema``). The file bound is
+         the only compaction trigger;
 
-       a bucket of caller-supplied ``parts`` that gets no source row is
-       not written;
+       a ledgered fold's new sentinel row is one more row of its bucket:
+       inserted where the bucket stores none, else an update the file
+       written for the bucket carries. A bucket of caller-supplied
+       ``parts`` that gets no source row is not written;
     5. commit every mode at once (``replace_partitions``: a directory swap
        per rewritten bucket and a file publish per appended or delta one
        on ``ParquetTable``; one manifest PUT on ``ManifestTable``). The
@@ -526,17 +533,17 @@ def merge_upsert_scoped(
     rows for applied buckets, so those buckets produce no output
     partition and ``replace_partitions`` leaves them untouched. The
     surviving buckets fold and land with their ledger row advanced in
-    the same atomic directory swap. The ledger check costs no extra
-    driver action (r12: it was a second per-trigger collect).
+    the same file. The ledger check costs no extra driver action (r12:
+    it was a second per-trigger collect).
 
-    ``parts``: optional caller-known superset of the source's touched
-    bucket ids (computed with the SAME ``part_expr(keys[0], n_buckets)``
-    — e.g. from the affected-key set a sink already collected). Skips
-    the touched-bucket driver action, and — when the source is consumed
-    only once — the source persist with it. Safe to combine with
-    ``ledger``: a superset bucket the source never stamps keeps its
-    existing sentinel (carried forward with its OLD applied value into
-    the rewrite), so replay protection survives the optimization.
+    ``parts``: optional caller-known superset of the touched bucket ids
+    (computed with the SAME ``part_expr(keys[0], n_buckets)`` — e.g. from
+    the affected-key set a sink already collected). Skips the
+    touched-bucket driver action, and — when the source is consumed only
+    once — the source persist with it. Without it the touched buckets
+    are those of the source's keys and of the ``replace_keys`` scope.
+    Safe to combine with ``ledger``: a superset bucket the source never
+    reaches is not written, so its stored sentinel stays as it is.
 
     ``evolve_schema=True``: a source with NEW columns widens the table
     without a rewrite. Only the touched buckets are rewritten with the
@@ -597,11 +604,6 @@ def merge_upsert_scoped(
             f"merge_upsert_scoped: replace_keys columns "
             f"{replace_keys.columns} must include the bucket key {keys[0]!r}"
         )
-    # caller-supplied parts may be a SUPERSET of the source's touched
-    # buckets; with a ledger that matters (see the carried-sentinel union
-    # below), so remember which mode this call is in before parts is
-    # normalized/derived
-    caller_parts = parts is not None
     meta0 = table.read_meta()  # ONE read per trigger; threaded below
     if n_buckets is None:
         # adopt the STORED modulus over the table object's seed value: an
@@ -626,15 +628,27 @@ def merge_upsert_scoped(
             # collect, once inside the merge. Persist it — the source is the
             # small delta by construction, and recomputing a window-deduped
             # transform chain per consumer is the expensive half. Bounded by
-            # n_buckets -> driver-small collect.
+            # n_buckets -> driver-small collect. A replace_keys scope key
+            # the source does not re-send still removes its stored rows,
+            # so its bucket is touched too.
             src_cached = src = src.persist()
-            parts = [r[0] for r in src.select(PART_COL).distinct().collect()]
-        if ledger is not None and src_cached is None:
-            # the in-plan ledger stamp (distinct touched buckets) is a second
-            # consumer of the source subtree inside the write job — cache it
-            # on the paths that don't otherwise persist (first batch into an
-            # absent table, caller-supplied parts)
-            src_cached = src = src.persist()
+            touched = src.select(PART_COL)
+            if replace_keys is not None:
+                touched = touched.unionByName(
+                    replace_keys.select(part_expr(keys[0], n_buckets).alias(PART_COL))
+                )
+            parts = [r[0] for r in touched.distinct().collect()]
+        if ledger is not None:
+            if src_cached is None:
+                # the in-plan ledger stamp (distinct touched buckets) is a
+                # second consumer of the source subtree inside the write
+                # job — cache it on the paths that don't otherwise persist
+                # (first batch into an absent table, caller-supplied parts)
+                src_cached = src = src.persist()
+            # the buckets the fold stamps: every bucket of the source (on
+            # an existing table, minus the replay-skipped ones, each
+            # tagged insert or update below)
+            stamped = src.select(PART_COL)
         stored = None
         if exists and meta0 and "schema_json" in meta0:
             stored = T.StructType.fromJson(meta0["schema_json"])
@@ -669,15 +683,19 @@ def merge_upsert_scoped(
                 lg = tgt.filter(F.col(keys[0]).eqNullSafe(sentinel)).select(
                     PART_COL, F.col(ledger.value_col).alias("__applied")
                 )
-                stored_sentinels = lg
                 keep = F.col("__applied").isNull() | (
                     F.col("__applied") < F.lit(batch_id)
                 )
-                src = (
-                    src.join(F.broadcast(lg), PART_COL, "left")
-                    .filter(keep)
-                    .drop("__applied")
+                src = src.join(F.broadcast(lg), PART_COL, "left").filter(keep)
+                # a bucket's new sentinel replaces its stored one (the
+                # newer file's row shadows it on read), else is its first
+                stamped = src.select(
+                    PART_COL,
+                    F.when(F.col("__applied").isNull(), F.lit(_INSERT))
+                    .otherwise(F.lit(_UPDATE))
+                    .alias(_ROW),
                 )
+                src = src.drop("__applied")
                 tgt = (
                     tgt.filter(~F.col(keys[0]).eqNullSafe(sentinel))
                     .join(F.broadcast(lg), PART_COL, "left")
@@ -727,10 +745,6 @@ def merge_upsert_scoped(
                     evolve_schema,
                     merge_exprs,
                 )
-                if ledger is not None:
-                    # a ledgered fold updates every bucket's sentinel row,
-                    # so it always rewrites: no row tags, no write modes
-                    merged = merged.drop(_ROW)
         else:
             # first batch: MERGE into empty = dedupe + insert-only projection —
             # skip the full-outer join against nothing (and without a ledger,
@@ -746,40 +760,9 @@ def merge_upsert_scoped(
             f for f in merged.schema.fields if f.name not in (PART_COL, _ROW)
         ]
         if ledger is not None:
-            stamps = _ledger_rows_plan(src, out_fields, keys[0], ledger, batch_id)
-            if exists and caller_parts:
-                # Caller-supplied parts is a documented SUPERSET of the
-                # source's touched buckets — a superset bucket that has
-                # target rows but NO source rows still gets its directory
-                # rewritten (its data rows survive the replay filter), so
-                # its existing sentinel must ride along with its OLD
-                # applied value or the bucket's watermark is silently lost
-                # and a later replay double-folds additive state (ADVICE
-                # r13). Carried = stored sentinels of non-replay-skipped
-                # buckets the source did not stamp; replay-skipped buckets
-                # (applied >= batch_id) produce no output rows at all and
-                # must NOT be carried — a sentinel-only output partition
-                # would REPLACE a full bucket directory.
-                cexprs = []
-                for f in out_fields:
-                    if f.name == keys[0]:
-                        e = F.lit(ledger.sentinel).cast(f.dataType)
-                    elif f.name == ledger.value_col:
-                        e = F.col("__applied").cast(f.dataType)
-                    else:
-                        e = F.lit(None).cast(f.dataType)
-                    cexprs.append(e.alias(f.name))
-                carried = (
-                    stored_sentinels.filter(
-                        F.col("__applied") < F.lit(batch_id)
-                    )
-                    .join(
-                        src.select(PART_COL).distinct(), PART_COL, "left_anti"
-                    )
-                    .select(*cexprs, F.col(PART_COL).cast("int").alias(PART_COL))
-                )
-                stamps = stamps.unionByName(carried)
-            merged = merged.unionByName(stamps)
+            merged = merged.unionByName(
+                _ledger_rows_plan(stamped, out_fields, keys[0], ledger, batch_id)
+            )
         # one write task per touched bucket -> one right-sized file per
         # partition dir instead of (shuffle-width x buckets) small files
         merged = merged.repartition(
@@ -852,7 +835,10 @@ def _bucket_modes(
     """Sort each bucket of a tagged merge output (``_ROW``, hash-partitioned
     on ``PART_COL``) into its write mode, IN the write job: windows over
     the bucket — which the repartition already clusters, so no exchange
-    and no job is added — find what the merge did to its rows.
+    and no job is added — find what the merge did to its rows. A
+    ledgered fold's sentinel row is tagged like any other row (inserted
+    in a bucket storing none, else updated), so a ledgered bucket takes
+    the same modes and its ledger row travels in the one file it writes.
 
     - nothing, when no row was inserted or updated (a bucket of
       caller-supplied ``parts`` the source never reached);
@@ -908,15 +894,16 @@ def _bucket_modes(
 
 
 def _ledger_rows_plan(
-    src: DataFrame, out_fields, key0: str, ledger: LedgerSpec, batch_id: int
+    stamped: DataFrame, out_fields, key0: str, ledger: LedgerSpec, batch_id: int
 ) -> DataFrame:
-    """One sentinel ledger row per bucket present in ``src``, derived
-    IN-PLAN from the source's own bucket column — no driver-side parts
-    list, so stamping the ledger costs no extra driver action. ``src``
-    must already exclude replay-skipped buckets (the in-plan ledger join
-    does), so only surviving buckets are stamped. ``out_fields`` types
-    the row to the MERGED output schema (which may be wider than the
-    source under ``evolve_schema``)."""
+    """One sentinel ledger row per bucket present in ``stamped`` (the
+    source's bucket column, with its ``_ROW`` tag on an existing table),
+    derived IN-PLAN — no driver-side parts list, so stamping the ledger
+    costs no extra driver action. ``stamped`` must already exclude
+    replay-skipped buckets (the in-plan ledger join does), so only
+    surviving buckets are stamped. ``out_fields`` types the row to the
+    MERGED output schema (which may be wider than the source under
+    ``evolve_schema``)."""
     exprs = []
     for f in out_fields:
         if f.name == key0:
@@ -926,11 +913,7 @@ def _ledger_rows_plan(
         else:
             e = F.lit(None).cast(f.dataType)
         exprs.append(e.alias(f.name))
-    return (
-        src.select(F.col(PART_COL).cast("int").alias(PART_COL))
-        .distinct()
-        .select(*exprs, F.col(PART_COL))
-    )
+    return stamped.distinct().select(*exprs, *stamped.columns)
 
 
 def rebucket(

@@ -46,7 +46,7 @@ from ..operators.merge import (
     stage_then_commit,
 )
 from ..operators.storage import ParquetTable
-from ..session import apply_runtime_confs
+from ..session import apply_runtime_confs, carry_job_description, job_description
 from ..sources.audit import build_load_audit
 from ..sources.readers import CopySpec, read_raw
 from .anomaly import anomaly_merge_source, stage_anomalies
@@ -188,7 +188,7 @@ class Pipeline:
 
         with ThreadPoolExecutor(max_workers=len(self.cfg.copy_specs)) as ex:
             # pool here covers the CSV header-arity probe job inside read_raw
-            prepared = list(ex.map(prepare, self.cfg.copy_specs))
+            prepared = list(ex.map(carry_job_description(prepare), self.cfg.copy_specs))
             all_audit = [r for _spec, _raw, rows in prepared for r in rows]
             loaded_by_type: dict[str, int] = {}
             for r in all_audit:
@@ -202,7 +202,7 @@ class Pipeline:
             for _, raw, _a in skipped:
                 raw.unpersist()
             before = {k: set(t.data_files("")) for k, t in self.raw_tables.items()}
-            list(ex.map(land, active))
+            list(ex.map(carry_job_description(land), active))
         # audit rows land for EVERY spec that saw files — including fully
         # failed loads (rows_loaded=0 -> LOAD_FAILED rows must reach
         # RAW_LOAD_AUDIT like the reference's post-COPY RESULT_SCAN insert,
@@ -268,39 +268,48 @@ class Pipeline:
         ingest lands any row, removed once every merge has committed. A
         run that finds it left behind re-derives all of RAW, because the
         rows a dead run landed seed no later closure (their files are in
-        the load history, so no later ingest loads them again)."""
+        the load history, so no later ingest loads them again).
+
+        Every Spark job the run starts, pool threads' included, is
+        described by its stage (``run_batch 01 ingest``, ``run_batch 03-06
+        merge_canonical``, ``run_batch 07 views``); the caller's job
+        description is restored on return."""
+        sc = self.spark.sparkContext
         vacuumed = self.vacuum()  # maintenance first: age-gated, crash-safe
         recover = os.path.exists(self.pending)
         os.makedirs(os.path.dirname(self.pending), exist_ok=True)
         open(self.pending, "a").close()
-        raw, landed = self.ingest()
-        scope = self._scope(raw, landed, recover)
+        with job_description(sc, "run_batch 01 ingest"):
+            raw, landed = self.ingest()
+            scope = self._scope(raw, landed, recover)
         if scope is not None:
-            merge_canonical(
-                self.spark,
-                self.can_txn,
-                self.can_txn_line,
-                self.can_txn_anomaly,
-                scope,
-                self._ts(),
-                self.cfg.join_mode,
-                history=raw,
-            )
+            with job_description(sc, "run_batch 03-06 merge_canonical"):
+                merge_canonical(
+                    self.spark,
+                    self.can_txn,
+                    self.can_txn_line,
+                    self.can_txn_anomaly,
+                    scope,
+                    self._ts(),
+                    self.cfg.join_mode,
+                    history=raw,
+                )
         os.remove(self.pending)
 
         # Stages 07-08
-        can_txn_df = self.can_txn.read(self.spark)
-        can_line_df = self.can_txn_line.read(self.spark)
-        anomaly_df = self.can_txn_anomaly.read(self.spark)
-        audit_df = self.raw_load_audit.read(self.spark)
-        views = register_views(self.spark, audit_df, can_txn_df, anomaly_df)
-        if self.cfg.durable_views:
-            register_durable_views(
-                self.spark,
-                self.raw_load_audit,
-                self.can_txn,
-                self.can_txn_anomaly,
-            )
+        with job_description(sc, "run_batch 07 views"):
+            can_txn_df = self.can_txn.read(self.spark)
+            can_line_df = self.can_txn_line.read(self.spark)
+            anomaly_df = self.can_txn_anomaly.read(self.spark)
+            audit_df = self.raw_load_audit.read(self.spark)
+            views = register_views(self.spark, audit_df, can_txn_df, anomaly_df)
+            if self.cfg.durable_views:
+                register_durable_views(
+                    self.spark,
+                    self.raw_load_audit,
+                    self.can_txn,
+                    self.can_txn_anomaly,
+                )
         return {
             "smoke_counts": smoke_counts(can_txn_df, can_line_df, anomaly_df),
             "views": views,

@@ -8,8 +8,12 @@ scale (AQE, arrow, sane shuffle parallelism).
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs that every query in this engine assumes. Applied both
@@ -115,6 +119,41 @@ class stream_partitions_conf:
     def __exit__(self, *exc):
         self.spark.conf.set("spark.sql.shuffle.partitions", self._old)
         return False
+
+
+#: the local property a Spark job takes its description from
+JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def job_description(sc: SparkContext, desc: str):
+    """Name every Spark job the calling thread submits inside the block
+    ``desc`` (the ``description`` the driver's UI and status API show),
+    then restore the caller's own. Spark keeps the description per
+    thread, and a job started from the thread by Spark itself (a
+    broadcast, an adaptive query stage) inherits it."""
+    prev = sc.getLocalProperty(JOB_DESCRIPTION)
+    sc.setLocalProperty(JOB_DESCRIPTION, desc)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(JOB_DESCRIPTION, prev)
+
+
+def carry_job_description(fn: Callable) -> Callable:
+    """``fn``, to run on a pool thread under the job description of the
+    thread that wraps it: a new thread starts with none."""
+    sc = SparkContext._active_spark_context
+    desc = sc.getLocalProperty(JOB_DESCRIPTION) if sc is not None else None
+    if desc is None:
+        return fn
+
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        with job_description(sc, desc):
+            return fn(*args, **kwargs)
+
+    return run
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

@@ -27,8 +27,9 @@ see below). So this sink folds each micro-batch into two persisted tables:
   batch's per-hash distinct-document counts. Additive folds double-count
   replays, so the fold is ledger-guarded PER BUCKET (merge.LedgerSpec,
   sentinel ``chunk_hash = -1``; real hashes are md5-derived 60-bit
-  non-negatives), each ledger row swapping atomically with its bucket's
-  counts, so a crash mid-swap replays only the buckets that didn't land.
+  non-negatives), each ledger row landing in the same file as its
+  bucket's counts, so a crash mid-commit replays only the buckets that
+  didn't land.
 
 Fold order makes every crash point safe: both merges stage concurrently,
 then chunks commit FIRST (idempotent — re-merging is harmless whether or
@@ -46,8 +47,9 @@ hash-certified cross-engine in ns_stream_live_sinks.
 
 Per-trigger cost is batch-proportional: one batch-sized chunking via
 map-side HOFs plus one bucket-scoped merge per table (both tables are
-hash-bucketed — ``merge.require_bucketed``), which rewrites only the
-buckets the batch touches. Chunk hashes use md5 of the LOWERCASED chunk
+hash-bucketed — ``merge.require_bucketed``), which writes one file to
+each bucket the batch touches: its new chunks, or its changed counts and
+ledger row as a delta. Chunk hashes use md5 of the LOWERCASED chunk
 text (remove_shared_spans' case-insensitive span identity; the stored
 chunk_text keeps source case).
 """
@@ -216,10 +218,9 @@ class CdcChunkSink:
             # over the persisted batch, each bounded by its table's bucket
             # count — driver-small. The freq side's hash set over the raw
             # chunk rows equals the set over the aggregated per-hash counts
-            # by construction (grouping never invents or drops a hash). The
-            # lists are EXACT touched sets (not supersets), so the ledger's
-            # carried-sentinel union contributes nothing; None for an absent
-            # table (the merge's insert-only first-batch path).
+            # by construction (grouping never invents or drops a hash).
+            # None for an absent table (the merge's insert-only first-batch
+            # path).
             doc_parts = hash_parts = None
             aggs = {}
             if self.chunks_table.exists():

@@ -15,11 +15,13 @@ table and batch sides — matching the batch operator's rule even when a
 later batch backfills a smaller id), counts are ADDITIVE across batches.
 
 The fold is bucket-scoped (``merge_upsert_scoped`` into the hash-bucketed
-survivor table — see ``merge.require_bucketed``): a micro-batch reads and
-rewrites ONLY the buckets its content hashes land in. A per-bucket replay
+survivor table — see ``merge.require_bucketed``): a micro-batch reads ONLY
+the buckets its content hashes land in and writes one file to each — a
+delta of its new and re-counted hashes once the bucket holds state, so a
+trigger writes about its batch, not its buckets. A per-bucket replay
 ledger (sentinel ``content_hash = '__ledger__'`` row inside each bucket
-partition) makes the additive ``dup_cnt`` exactly-once per bucket under
-replay. Read survivors through :meth:`ExactDedupSink.survivors` (it
+partition, carried in that file) makes the additive ``dup_cnt``
+exactly-once per bucket under replay. Read survivors through :meth:`ExactDedupSink.survivors` (it
 excludes the sentinel rows).
 """
 
@@ -308,7 +310,10 @@ class MinHashLshDedupSink:
             # The sigs merge uses replace_keys: the merge key IS the
             # replace key, so "drop matching docs + insert the batch's
             # signatures" is exactly the keyed upsert, minus the full-outer
-            # sort-merge join.
+            # sort-merge join. The scope is the batch's own doc column: a
+            # repeated doc only repeats a dropped row, where a distinct
+            # would cost a shuffle in the touched-bucket collect and again
+            # before the broadcast.
             stage_then_commit(
                 lambda: merge_upsert_scoped(
                     spark,
@@ -322,7 +327,7 @@ class MinHashLshDedupSink:
                     self.sig_table,
                     new_sigs,
                     keys=["doc"],
-                    replace_keys=F.broadcast(new_sigs.select("doc").distinct()),
+                    replace_keys=F.broadcast(new_sigs.select("doc")),
                     stage_only=True,
                 ),
             )

@@ -15,9 +15,9 @@ double-counts a replayed delivery. The fold is bucket-scoped into a
 hash-bucketed table (``merge.require_bucketed``) and keeps a per-bucket
 applied-batch ledger (merge.LedgerSpec: a sentinel row ``bucket = -1``
 inside each bucket partition, cnt = last applied batch_id — real buckets
-are md5 % 2**hash_bits, never negative). Each ledger row swaps atomically
-WITH its bucket's counts, so a replayed ``batch_id`` is skipped and a
-crash mid-swap replays only the buckets that didn't land.
+are md5 % 2**hash_bits, never negative). Each ledger row lands in the same
+file as its bucket's counts, so a replayed ``batch_id`` is skipped and a
+crash mid-commit replays only the buckets that didn't land.
 Restart/replay equality is pytest-proven in
 tests/test_streaming_importance.py.
 

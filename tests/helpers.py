@@ -9,6 +9,7 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
     PART_COL,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
+    LocalFileCommit,
     ParquetTable,
 )
 
@@ -34,3 +35,35 @@ def bucketed_table(tmp_path, name: str, n_buckets: int = 8) -> ParquetTable:
     return ParquetTable(
         str(tmp_path / name), partition_by=[PART_COL], n_buckets=n_buckets
     )
+
+
+class ArmedCommit(LocalFileCommit):
+    """Local commit that raises once armed: on the ``fail_at``-th data file
+    it publishes (a crash part-way through an append), or on any
+    ``publish_file`` when ``fail_at`` is 0."""
+
+    def __init__(self):
+        self.fail_at = None
+        self.published = 0
+
+    def publish_file(self, src: str, dst: str) -> None:
+        if self.fail_at is not None:
+            if self.fail_at == 0:
+                raise RuntimeError("simulated crash in the commit")
+            if dst.endswith(".parquet"):
+                self.published += 1
+                if self.published == self.fail_at:
+                    raise RuntimeError("simulated crash mid-append")
+        super().publish_file(src, dst)
+
+
+class SecondPutDies(ArmedCommit):
+    """Once armed, lets one metadata publish land and raises on the next
+    (a ``ManifestTable`` commit PUTs its metadata, then its manifest)."""
+
+    def publish_file(self, src: str, dst: str) -> None:
+        if self.fail_at is not None and not dst.endswith(".parquet"):
+            self.published += 1
+            if self.published == 2:
+                raise RuntimeError("simulated crash in the commit")
+        LocalFileCommit.publish_file(self, src, dst)

@@ -35,7 +35,6 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.similarity imp
     assign_to_centroids,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
-    LocalFileCommit,
     ParquetTable,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
@@ -49,7 +48,7 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.ivf_stream imp
     IvfIndexSink,
 )
 
-from .helpers import snapshot
+from .helpers import ArmedCommit, SecondPutDies, snapshot
 
 _KV = "k string, v long"
 PROTOCOLS = [ParquetTable, ManifestTable]
@@ -189,38 +188,6 @@ def test_scoped_merge_uses_stored_layout_not_narrower_declaration(
         )
 
 
-class _ArmedCommit(LocalFileCommit):
-    """Local commit that raises once armed: on the ``fail_at``-th data file
-    it publishes (a crash part-way through an append), or on any
-    ``publish_file`` when ``fail_at`` is 0."""
-
-    def __init__(self):
-        self.fail_at = None
-        self.published = 0
-
-    def publish_file(self, src: str, dst: str) -> None:
-        if self.fail_at is not None:
-            if self.fail_at == 0:
-                raise RuntimeError("simulated crash in the commit")
-            if dst.endswith(".parquet"):
-                self.published += 1
-                if self.published == self.fail_at:
-                    raise RuntimeError("simulated crash mid-append")
-        super().publish_file(src, dst)
-
-
-class _SecondPutDies(_ArmedCommit):
-    """Once armed, lets one metadata publish land and raises on the next
-    (a ``ManifestTable`` commit PUTs its metadata, then its manifest)."""
-
-    def publish_file(self, src: str, dst: str) -> None:
-        if self.fail_at is not None and not dst.endswith(".parquet"):
-            self.published += 1
-            if self.published == 2:
-                raise RuntimeError("simulated crash in the commit")
-        LocalFileCommit.publish_file(self, src, dst)
-
-
 @pytest.mark.parametrize("cls", PROTOCOLS, ids=lambda c: c.__name__)
 def test_replay_after_death_between_meta_write_and_delta_publish(
     spark, tmp_path, cls
@@ -231,7 +198,7 @@ def test_replay_after_death_between_meta_write_and_delta_publish(
     still reads its pre-merge state — a bucket listed as holding a delta
     that never landed reads as it is — and the replayed merge equals a
     copy-on-write merge."""
-    commit = _ArmedCommit() if cls is ParquetTable else _SecondPutDies()
+    commit = ArmedCommit() if cls is ParquetTable else SecondPutDies()
     t = cls(str(tmp_path / "t"), None, [PART_COL], n_buckets=2, commit=commit)
     seed = spark.createDataFrame([(f"k{i}", i) for i in range(20)] + [(None, -1)], _KV)
     merge_upsert_scoped(spark, t, seed, ["k"])
@@ -262,7 +229,7 @@ def test_ivf_replay_after_partial_append_commit(spark, tmp_path):
     The replayed trigger finds the published keys stored, writes them to
     those buckets again as a delta, appends to the rest, and the index
     equals the batch oracle."""
-    commit = _ArmedCommit()
+    commit = ArmedCommit()
     index_t = ParquetTable(
         str(tmp_path / "index"), partition_by=[PART_COL], n_buckets=4,
         commit=commit,
@@ -303,7 +270,7 @@ def test_minhash_replay_after_partial_append_commit_on_manifest(spark, tmp_path)
     (one manifest PUT) and dies before the signature commit. The replayed
     trigger re-derives the same pairs against the pre-trigger corpus and
     both tables equal the batch oracle."""
-    sig_commit = _ArmedCommit()
+    sig_commit = ArmedCommit()
     sig_t = ManifestTable(
         str(tmp_path / "sigs"), partition_by=[PART_COL], n_buckets=4,
         commit=sig_commit,
@@ -400,3 +367,31 @@ def test_replace_keys_merge_that_removes_every_row_of_a_bucket_empties_it(
     )
     want = [(k, 1) for k in keys if k not in gone]
     assert _rows(t.read(spark)) == _rows(spark.createDataFrame(want, _KV))
+
+
+@pytest.mark.parametrize("cls", PROTOCOLS, ids=lambda c: c.__name__)
+def test_replace_keys_scope_the_source_does_not_resend_is_dropped_without_parts(
+    spark, tmp_path, cls
+):
+    """With no caller ``parts``, a ``replace_keys`` merge touches the
+    buckets of its scope keys as well as those of its source: a bucket
+    whose scoped keys the source does not re-send is emptied, NULL key
+    included, while the source's own bucket takes its re-sent key."""
+    t = cls(str(tmp_path / "t"), None, [PART_COL], n_buckets=2)
+    keys = [None, *"abcdef"]
+    merge_upsert_scoped(
+        spark, t, spark.createDataFrame([(k, 1) for k in keys], _KV), keys=["k"]
+    )
+    gone = [k for k in keys if _bucket(spark, k, 2) == _bucket(spark, None, 2)]
+    kept = [k for k in keys if k not in gone]
+    assert kept  # the source's bucket is the other one
+    merge_upsert_scoped(
+        spark,
+        t,
+        spark.createDataFrame([(kept[0], 2)], _KV),
+        keys=["k"],
+        replace_keys=spark.createDataFrame([(k,) for k in [*gone, kept[0]]], "k string"),
+    )
+    want = [(kept[0], 2)] + [(k, 1) for k in kept[1:]]
+    assert _rows(t.read(spark)) == _rows(spark.createDataFrame(want, _KV))
+    assert t.data_files(f"{PART_COL}={_bucket(spark, None, 2)}") == []

@@ -181,10 +181,9 @@ def test_replace_partitions_leaves_no_stray_dirs_in_root(spark, table):
 def test_ledger_survives_caller_parts_superset(spark, tmp_path):
     """ADVICE r13 (medium): caller-supplied ``parts`` is a documented
     SUPERSET of the source's touched buckets — a superset bucket with
-    target rows and no source rows gets its directory rewritten, and its
-    sentinel must be CARRIED with its old applied value (not dropped:
-    that silently loses the bucket's watermark and a later replay
-    double-folds additive state)."""
+    target rows and no source rows is not written, so its sentinel keeps
+    its old applied value (losing it would drop the bucket's watermark,
+    and a later replay would double-fold additive state)."""
     from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
         LedgerSpec,
     )
@@ -209,27 +208,35 @@ def test_ledger_survives_caller_parts_superset(spark, tmp_path):
     # batch 1 touches ONE key but declares ALL buckets (a sink passing
     # the affected-key superset it already holds)
     b1 = spark.createDataFrame([("k7", 1)], "k string, v long")
+    before = _snapshot(table.path)
     merge_upsert_scoped(
         spark, table, b1, keys=["k"], merge_exprs=add,
         ledger=ledger, batch_id=1, parts=list(range(8)),
     )
 
-    # every bucket still holds exactly one sentinel; only k7's bucket
-    # advanced to batch 1, the superset-only buckets kept applied=0
-    raw = spark.read.parquet(table.path)
+    # every bucket still reads exactly one sentinel; only k7's bucket
+    # advanced to batch 1 (its new sentinel shadows the stored one), the
+    # superset-only buckets kept applied=0 and their files
+    raw = table.scan(spark)
     sent = {
         r[PART_COL]: r["v"]
         for r in raw.filter(F.col("k") == "__led__").collect()
     }
-    assert len(sent) == 8
+    assert len(sent) == 8 == raw.filter(F.col("k") == "__led__").count()
     k7_bucket = spark.createDataFrame([("k7",)], "k string").select(
         part_expr("k", 8).alias("p")
     ).collect()[0]["p"]
     assert sent[k7_bucket] == 1
     assert all(v == 0 for p, v in sent.items() if p != k7_bucket)
+    changed = {
+        rel.split(os.sep)[0]
+        for rel, h in _snapshot(table.path).items()
+        if before.get(rel) != h
+    }
+    assert changed == {f"{PART_COL}={k7_bucket}"}
 
     # replay of batch 0 must remain a per-bucket no-op EVERYWHERE — the
-    # carried sentinels are what makes the superset buckets skip it
+    # untouched sentinels are what makes the superset buckets skip it
     state = _snapshot(table.path)
     merge_upsert_scoped(
         spark, table, b0, keys=["k"], merge_exprs=add,

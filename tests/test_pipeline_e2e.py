@@ -386,3 +386,48 @@ def test_vacuum_removes_crash_stranded_swap_dirs(spark, fixture_root, tmp_path_f
     )
     r3 = pipe3.run_batch()
     assert r3["vacuumed"] == [] and os.path.exists(stray_tmp)
+
+
+def test_every_run_batch_job_is_described_by_its_stage(
+    spark, fixture_root, tmp_path
+):
+    """Every Spark job one ``run_batch`` starts — on the driver thread or
+    on the ingest and merge pool threads — carries its stage's job
+    description in the driver's status API, over a first load and a
+    re-load that restates every key; the caller's description is back
+    afterwards."""
+    import json
+    import urllib.request
+
+    sc = spark.sparkContext
+    port = sc.uiWebUrl.rsplit(":", 1)[1]
+    base = f"http://127.0.0.1:{port}/api/v1/applications/{sc.applicationId}"
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        with urllib.request.urlopen(base + "/jobs", timeout=30) as r:
+            return json.load(r)
+
+    seen = max((j["jobId"] for j in jobs()), default=-1)
+    wh = str(tmp_path / "wh")
+    sc.setLocalProperty("spark.job.description", "caller")
+    try:
+        for reload in (False, True):
+            cfg = PipelineConfig(
+                ingest_root=fixture_root,
+                warehouse=wh,
+                batch_ts=TS2 if reload else TS1,
+                skip_loaded_files=not reload,
+            )
+            Pipeline(spark, cfg).run_batch()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    described = {j["jobId"]: j.get("description") for j in jobs() if j["jobId"] > seen}
+    stages = {
+        "run_batch 01 ingest",
+        "run_batch 03-06 merge_canonical",
+        "run_batch 07 views",
+    }
+    assert {d for d in described.values() if d not in stages} == set(), described
+    assert set(described.values()) == stages

@@ -10,9 +10,10 @@ because Spark job latency is environment-noise, not a property failure.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -675,5 +676,106 @@ def test_delta_files_read_as_copy_on_write(spark, tmp_path_factory, replace, ops
             rows = t.read(spark).collect() if t.exists() else []
             got = sorted(repr(tuple(r)) for r in rows)
             assert got == want, (type(t).__name__, i, op)
+            for p in range(n):
+                assert len(t.data_files(f"{PART_COL}={p}")) <= MAX_BUCKET_FILES
+
+
+_ledger_op = st.one_of(
+    # a new batch of (key, count) rows, keys distinct within the batch
+    st.tuples(
+        st.just("fold"),
+        st.dictionaries(
+            _fold_key, st.integers(min_value=1, max_value=3), min_size=1, max_size=5
+        ),
+    ),
+    # a replay of one of the batches already applied (index mod their count)
+    st.tuples(st.just("replay"), st.integers(min_value=0, max_value=20)),
+    st.tuples(st.just("split")),
+)
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(ops=st.lists(_ledger_op, min_size=3, max_size=6))
+# nine folds into one bucket: seven deltas, then a compaction at the bound
+@example(ops=[("fold", {"0": 1, None: 2})] * 9 + [("replay", 3)])
+def test_ledgered_delta_files_read_as_copy_on_write(spark, tmp_path_factory, ops):
+    """Random sequences of additive folds (``merge_exprs`` plus a
+    ``LedgerSpec``) with NULL keys, replays of applied batch ids and
+    bucket splits (``rebucket``), on ParquetTable and ManifestTable: each
+    bucket's new ledger row lands in the file written for it (appended,
+    delta or, at the file bound, rewritten), and after every step a read
+    equals the copy-on-write ``merge_upsert`` fold of the distinct
+    batches, with one ledger row per bucket."""
+    from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
+        ManifestTable,
+    )
+    from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
+        MAX_BUCKET_FILES,
+        PART_COL,
+        LedgerSpec,
+        merge_upsert_scoped,
+        rebucket,
+    )
+    from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
+        ParquetTable,
+    )
+
+    from .helpers import snapshot
+
+    root = str(tmp_path_factory.mktemp("ledgerfold"))
+    tables = [
+        cls(f"{root}/{cls.__name__}", None, [PART_COL], n_buckets=1)
+        for cls in (ParquetTable, ManifestTable)
+    ]
+    schema = "k string, v long"
+    add = {
+        "v": lambda t, s: (F.coalesce(t, F.lit(0)) + F.coalesce(s, F.lit(0))).cast(
+            "long"
+        )
+    }
+    ledger = LedgerSpec("__led__", "v")
+    is_led = F.col("k").eqNullSafe(F.lit(ledger.sentinel))
+    oracle = spark.createDataFrame([], schema)
+    applied: list = []  # (batch_id, source) of every distinct batch
+    n = 1
+    for i, op in enumerate(ops):
+        if op[0] == "split":
+            if tables[0].exists() and n < 4:
+                n *= 2
+                for t in tables:
+                    rebucket(spark, t, n)
+            continue
+        if op[0] == "replay":
+            if not applied:
+                continue
+            batch_id, src = applied[op[1] % len(applied)]
+        else:
+            batch_id = len(applied)
+            src = spark.createDataFrame(list(op[1].items()), schema)
+            applied.append((batch_id, src))
+            oracle = spark.createDataFrame(
+                merge_upsert(oracle, src, ["k"], merge_exprs=add).collect(), schema
+            )
+        for t in tables:
+            before = snapshot(t.path)
+            merge_upsert_scoped(
+                spark, t, src, ["k"], merge_exprs=add, ledger=ledger, batch_id=batch_id
+            )
+            new = [rel for rel, h in snapshot(t.path).items() if before.get(rel) != h]
+            if op[0] == "replay":
+                assert new == [], (type(t).__name__, i, op)
+            # at most one new file per bucket: its rows and its ledger row
+            buckets = [next(c for c in rel.split(os.sep) if c.startswith(PART_COL)) for rel in new]
+            assert len(buckets) == len(set(buckets)), (type(t).__name__, i, op)
+        want = sorted(repr(tuple(r)) for r in oracle.collect())
+        for t in tables:
+            got = sorted(repr(tuple(r)) for r in t.read(spark).filter(~is_led).collect())
+            assert got == want, (type(t).__name__, i, op)
+            per_bucket = t.scan(spark).filter(is_led).groupBy(PART_COL).count()
+            assert per_bucket.filter(F.col("count") != 1).count() == 0
             for p in range(n):
                 assert len(t.data_files(f"{PART_COL}={p}")) <= MAX_BUCKET_FILES

@@ -64,10 +64,11 @@ def _survivor_rows(spark, sink):
 
 
 def _ledgers(spark, table) -> dict[int, int]:
-    """bucket -> applied batch id, straight off the sentinel rows."""
+    """bucket -> applied batch id, off the sentinel rows the table reads
+    (a newer file's sentinel shadows the one it replaces)."""
     return {
         r[0]: r[1]
-        for r in spark.read.parquet(table.path)
+        for r in table.scan(spark)
         .filter(F.col("content_hash") == LEDGER_HASH)
         .select(PART_COL, "dup_cnt")
         .collect()

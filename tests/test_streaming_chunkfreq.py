@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from financial_data_ingestion_canonical_snowflake_spark.functions.scalars import (
@@ -13,6 +14,15 @@ from financial_data_ingestion_canonical_snowflake_spark.functions.scalars import
 )
 from financial_data_ingestion_canonical_snowflake_spark.functions.text import (
     cdc_chunk_documents,
+)
+from financial_data_ingestion_canonical_snowflake_spark.operators.manifest import (
+    ManifestTable,
+)
+from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
+    PART_COL,
+)
+from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (
+    ParquetTable,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.text_dedup import (
     remove_shared_spans,
@@ -22,7 +32,7 @@ from financial_data_ingestion_canonical_snowflake_spark.streaming.chunk_freq_str
     stream_cdc_chunks,
 )
 
-from .helpers import bucketed_table
+from .helpers import ArmedCommit, SecondPutDies, bucketed_table
 
 _BOILER = " ".join(f"boiler{i}" for i in range(60))
 _BATCH_1 = [
@@ -124,6 +134,49 @@ def test_replayed_batch_folds_once(spark, tmp_path):
 
     # a genuinely new batch still folds after the replays
     sink(spark.createDataFrame(_BATCH_3, ["doc_id", "text"]), 2)
+    want = _batch_chunks(spark, _BATCH_1 + _BATCH_2 + _BATCH_3)
+    assert _chunk_rows(sink.chunks(spark)) == _chunk_rows(want)
+    assert _freq_rows(sink.freq(spark)) == _freq_rows(_batch_freq(want))
+
+
+@pytest.mark.parametrize(
+    "cls, crash",
+    [
+        (ParquetTable, "before_commit"),
+        (ParquetTable, "between_buckets"),
+        (ManifestTable, "before_commit"),
+    ],
+    ids=lambda v: getattr(v, "__name__", v),
+)
+def test_replay_after_crash_in_freq_commit_equals_batch(spark, tmp_path, cls, crash):
+    """The two-table fold dies after the chunk table committed and before
+    the freq table's commit landed — or, on ParquetTable, after one of its
+    bucket files (delta rows and ledger row together) was published and
+    before the next. The replayed batch re-merges the chunks, re-folds
+    only the freq buckets whose ledger did not advance, and the state
+    equals the batch operator over every document."""
+    if crash == "between_buckets":
+        commit = ArmedCommit()
+    else:
+        commit = ArmedCommit() if cls is ParquetTable else SecondPutDies()
+    chunks_t = cls(str(tmp_path / "chunks"), None, [PART_COL], n_buckets=4)
+    freq_t = cls(str(tmp_path / "freq"), None, [PART_COL], n_buckets=4, commit=commit)
+    sink = CdcChunkSink(chunks_t, freq_t)
+    batches = [
+        spark.createDataFrame(rows, ["doc_id", "text"])
+        for rows in (_BATCH_1, _BATCH_2, _BATCH_3)
+    ]
+    sink(batches[0], 0)
+    commit.fail_at = 2 if crash == "between_buckets" else 0
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        sink(batches[1], 1)
+    commit.fail_at = None
+    if crash == "between_buckets":
+        # one freq bucket landed its fold and ledger row, the others not
+        assert commit.published == 2
+    sink(batches[1], 1)  # the replay
+    sink(batches[1], 1)  # a second delivery folds nothing
+    sink(batches[2], 2)
     want = _batch_chunks(spark, _BATCH_1 + _BATCH_2 + _BATCH_3)
     assert _chunk_rows(sink.chunks(spark)) == _chunk_rows(want)
     assert _freq_rows(sink.freq(spark)) == _freq_rows(_batch_freq(want))

@@ -3,10 +3,15 @@
 Drives ExactDedupSink (additive fold, ledger-guarded), MinHashLshDedupSink
 (signature and pair folds) and IvfIndexSink (keyed fold) over the same
 batches and reports, per trigger, the bytes of parquet files that were
-created or changed under the state-table roots, split into APPENDED bytes
-(new files in a bucket whose stored files all survived — an insert-only
-bucket) and REWRITTEN bytes (every other bucket). The ledgered exact-dedup
-fold always rewrites; folds of new keys append.
+created or changed under the state-table roots, split three ways: DELTA
+bytes (new ``delta-`` files, which shadow stored rows of their keys on
+read), APPENDED bytes (other new files in a bucket whose stored files all
+survived — an insert-only bucket) and REWRITTEN bytes (every other
+bucket). A fold of new keys appends; a fold that updates stored keys,
+and the ledgered exact-dedup fold once a bucket stores its ledger row,
+writes a delta; a bucket is rewritten when it loses rows, widens or
+reaches the file bound. On ``ManifestTable`` (``--protocol``) delta files
+carry no name mark and count as appended.
 
 The regime matters. A micro-batch touches one bucket per distinct key
 hash, so with B batch keys and N buckets the expected rewrite is
@@ -30,8 +35,11 @@ bucket size grows with state); with ``rebucket_target_bytes`` set the
 sink auto-splits to hold mean bucket size at the target, so probe-trigger
 I/O stays ~touched_buckets x target. This mode grows the exact-dedup
 state through 4 phases (~10x end to end), interleaving 3 small fixed-size
-probe batches per phase, and reports per-phase probe write bytes for the
-fixed layout vs the auto-rebucketing layout side by side.
+probe batches per phase, and reports per-phase probe write bytes (split
+as above) for the fixed layout vs the auto-rebucketing layout side by
+side. Each probe bucket takes one delta file of its new rows and ledger
+row, so probe writes stay flat as state grows on either layout, up to
+the rewrite of a bucket that reaches the file bound.
 
 Run:  python tools/measure_sink_io.py --growth [sf_dir] [probe_rows] [target_kb]
 """
@@ -51,6 +59,7 @@ from financial_data_ingestion_canonical_snowflake_spark.operators.merge import (
     PART_COL,
 )
 from financial_data_ingestion_canonical_snowflake_spark.operators.storage import (  # noqa: E402
+    DELTA_PREFIX,
     ParquetTable,
 )
 from financial_data_ingestion_canonical_snowflake_spark.session import (  # noqa: E402
@@ -76,13 +85,13 @@ def _files(root: str) -> dict[str, tuple[int, float]]:
     return out
 
 
-def _written_split(before: dict, after: dict) -> tuple[int, int]:
-    """(appended, rewritten) bytes of the parquet files created or changed
-    between two ``_files`` listings, by bucket: a bucket whose stored
-    files all survived unchanged was appended to, any other bucket with
-    new files was rewritten. Buckets are the ``txn_part=`` path component,
-    so this reads both the rename layout and the manifest's generation
-    directories."""
+def _written_split(before: dict, after: dict) -> tuple[int, int, int]:
+    """(appended, delta, rewritten) bytes of the parquet files created or
+    changed between two ``_files`` listings: a new ``delta-`` file is a
+    delta; otherwise, by bucket, a bucket whose stored files all survived
+    unchanged was appended to, any other bucket with new files was
+    rewritten. Buckets are the ``txn_part=`` path component, so this reads
+    both the rename layout and the manifest's generation directories."""
 
     def bucket(p: str) -> str:
         return next(
@@ -90,26 +99,25 @@ def _written_split(before: dict, after: dict) -> tuple[int, int]:
         )
 
     new: dict[str, int] = {}
+    delta = 0
     for p, sig in after.items():
-        if before.get(p) != sig:
+        if before.get(p) == sig:
+            continue
+        if os.path.basename(p).startswith(DELTA_PREFIX):
+            delta += sig[0]
+        else:
             new[bucket(p)] = new.get(bucket(p), 0) + sig[0]
     kept = {b: True for b in new}
     for p, sig in before.items():
         if bucket(p) in kept and after.get(p) != sig:
             kept[bucket(p)] = False
     appended = sum(n for b, n in new.items() if b and kept[b])
-    return appended, sum(new.values()) - appended
+    return appended, delta, sum(new.values()) - appended
 
 
-def _written_bytes(before: dict, after: dict) -> int:
-    return sum(
-        sz for p, (sz, mt) in after.items() if before.get(p) != (sz, mt)
-    )
-
-
-def run_sink(mk_tables, mk_sink, batches) -> list[tuple[int, int]]:
-    """Per trigger, (appended, rewritten) parquet bytes summed over the
-    sink's state tables."""
+def run_sink(mk_tables, mk_sink, batches) -> list[tuple[int, int, int]]:
+    """Per trigger, (appended, delta, rewritten) parquet bytes summed over
+    the sink's state tables."""
     tables = mk_tables()
     sink = mk_sink(*tables)
 
@@ -121,7 +129,7 @@ def run_sink(mk_tables, mk_sink, batches) -> list[tuple[int, int]]:
         before = listing()
         sink(b, i)
         split = [_written_split(*ba) for ba in zip(before, listing())]
-        written.append((sum(a for a, _r in split), sum(r for _a, r in split)))
+        written.append(tuple(sum(col) for col in zip(*split)))
     return written
 
 
@@ -155,10 +163,12 @@ def growth_main() -> None:
         .filter(F.col("doc_id") < 40_000)
         .persist()
     )
-    docs.count()
-    # ~10x state growth end to end; probes are NEW unique keys each time
-    # (inserts — the steady-state small-trigger shape)
-    phases = [(0, 4_000), (4_000, 8_000), (8_000, 16_000), (16_000, 40_000)]
+    # ~10x state growth end to end over the first (up to) 40,000 ids;
+    # probes are NEW unique keys each time (inserts — the steady-state
+    # small-trigger shape)
+    top = docs.agg(F.max("doc_id")).first()[0] + 1
+    cuts = [0, top // 10, top // 5, 2 * top // 5, top]
+    phases = list(zip(cuts, cuts[1:]))
 
     def probe(pi: int, j: int):
         base = 10_000_000 + pi * 10_000 + j * 1_000
@@ -196,17 +206,22 @@ def growth_main() -> None:
                 before = _files(table.path)
                 sink(probe(pi, j), bid)
                 bid += 1
-                probes.append(_written_bytes(before, _files(table.path)))
+                probes.append(_written_split(before, _files(table.path)))
             state_bytes = sum(sz for sz, _m in _files(table.path).values())
             n_buckets = table.read_meta()["n_buckets"]
             phase_stats.append(
                 {
                     "state_mb": round(state_bytes / 1e6, 2),
                     "n_buckets": n_buckets,
-                    "probe_mb": [round(p / 1e6, 3) for p in probes],
+                    "probe_mb": [round(sum(p) / 1e6, 3) for p in probes],
                     "probe_mean_mb": round(
-                        sum(probes) / len(probes) / 1e6, 3
+                        sum(map(sum, probes)) / len(probes) / 1e6, 3
                     ),
+                    # mean probe MB appended / delta / rewritten
+                    "probe_split_mb": [
+                        round(sum(col) / len(probes) / 1e6, 3)
+                        for col in zip(*probes)
+                    ],
                 }
             )
         report[layout] = phase_stats
@@ -221,7 +236,8 @@ def growth_main() -> None:
                 f"  phase {i}: state {s['state_mb']:7.2f} MB  "
                 f"buckets {s['n_buckets']:4d}  "
                 f"probe-writes MB {s['probe_mb']}  "
-                f"mean {s['probe_mean_mb']}"
+                f"mean {s['probe_mean_mb']} "
+                f"(appended/delta/rewritten {s['probe_split_mb']})"
             )
     f0 = report["fixed_32"]
     a0 = report[f"auto_{target_kb}KB"]
@@ -309,11 +325,14 @@ def protocol_main() -> None:
             # not with the trigger's delta. This is the dir-granular
             # manifest's scaling seam (VERDICT r14 next-step #4).
             mpath = os.path.join(table.path, "_MANIFEST.json")
-            appended, rewritten = _written_split(before, _files(table.path))
+            appended, delta, rewritten = _written_split(
+                before, _files(table.path)
+            )
             rows.append(
                 {
-                    "parquet_mb": round((appended + rewritten) / 1e6, 3),
+                    "parquet_mb": round((appended + delta + rewritten) / 1e6, 3),
                     "appended_mb": round(appended / 1e6, 3),
+                    "delta_mb": round(delta / 1e6, 3),
                     "rewritten_mb": round(rewritten / 1e6, 3),
                     "commit_json_b": _all_file_bytes(table.path, ".json")
                     - meta_before,
@@ -400,19 +419,17 @@ def main() -> None:
         "n_buckets": n_buckets, "docs": n, "vecs": ne,
     }))
     for k, w in results.items():
-        app = [round(a / 1e6, 3) for a, _r in w]
-        rew = [round(r / 1e6, 3) for _a, r in w]
+        app, dlt, rew = ([round(b / 1e6, 3) for b in col] for col in zip(*w))
         print(
-            f"{k:16s} seed write {app[0] + rew[0]:.3f} MB; per increment, "
-            f"appended MB {app[1:]} rewritten MB {rew[1:]}"
+            f"{k:16s} seed write {sum(w[0]) / 1e6:.3f} MB; per increment, "
+            f"appended MB {app[1:]} delta MB {dlt[1:]} rewritten MB {rew[1:]}"
         )
     # headline: mean increment-trigger write vs the seeded state size
     for fam, w in results.items():
-        inc = w[1:]
+        app, dlt, rew = (sum(col) / n_incr / 1e6 for col in zip(*w[1:]))
         print(
-            f"{fam}: mean increment write "
-            f"{sum(a for a, _r in inc) / n_incr / 1e6:.3f} MB appended + "
-            f"{sum(r for _a, r in inc) / n_incr / 1e6:.3f} MB rewritten "
+            f"{fam}: mean increment write {app:.3f} MB appended + "
+            f"{dlt:.3f} MB delta + {rew:.3f} MB rewritten "
             f"over a {sum(w[0]) / 1e6:.2f} MB seeded state"
         )
     spark.stop()
